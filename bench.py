@@ -1,39 +1,16 @@
-"""Bench harness — the driver's per-round feedback loop.
+"""Headline batch-query suite: one JSON line on stdout (last line).
 
-Two parts, one JSON line on stdout (last line):
+Times the ``HEADLINE`` subset of ``__spark_entry__.queries()`` at
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
+``local[$SPARK_GRAFT_CPUS]`` (default: every core of the host). Each
+query is forced with the noop sink (full plan execution, no driver
+collect) and reported as the best of 2 warm runs under ``"queries"``;
+``"value"`` is their sum.
 
-1. Headline batch queries from ``__spark_entry__.queries()`` run at
-   ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-   ``local[$SPARK_GRAFT_CPUS]``; per-query wall seconds under
-   ``"queries"``; forced with the noop sink (full plan execution, no
-   driver collect).
+The flagship streaming path is measured by ``perfbench/`` (see
+``BENCHMARK.json`` and ``perfbench/README.md``), not here.
 
-2. The north-rule streaming metric: sustained clips/sec end-to-end
-   (decode + window + join + exactly-once sink) over the synthesized
-   audio+transcript stream, run at TWO parallelism levels standing in
-   for N and 4N executors (sandbox substitution per the driver
-   instruction: "e.g. local[8] and local[32], or N and 4N cores") —
-   plus scaling efficiency ``(thr_4N / thr_N)/4``. Also rewrites
-   ``BENCH/BASELINE.md``.
-
-   TWO pairs are measured: local[2] vs local[8] (primary gate) and
-   local[4] vs local[16] (wider-width evidence). A raw-CPU control
-   experiment (independent single-threaded numpy workers, no Spark)
-   shows this host's own parallel-delivery ceiling for PERFECT code is
-   ~0.97 at 2 -> 8 procs, ~0.85-0.91 at 4 -> 16, and ~0.71 at 8 -> 32 —
-   wider literal pairs measure the virtualized host as much as the
-   engine. Each pair's control is re-measured and written into
-   BENCH/BASELINE.md each run. Timed passes are INTERLEAVED across the
-   two levels of a pair and best-of-k per level (host bursts move
-   identical runs ±50%; see tools/bench_stream_worker.py).
-
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, HYDRA_BENCH_N
-(clips for the streaming bench when a pair doesn't carry its own,
-default 480000; HYDRA_BENCH_WARM_N = untimed-warmup dataset, default
-240000), HYDRA_BENCH_PAIRS ("lo:hi:state_partitions[:clips],..." —
-default "2:8:8,4:16:16:960000": the primary 2->8 gate at 480k clips
-plus the wider 4->16 evidence pair at 960k), HYDRA_BENCH_ROUNDS,
-HYDRA_BENCH_SCALING=0 to skip part 2 (during iteration).
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
@@ -46,77 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-BENCH_N = int(os.environ.get("HYDRA_BENCH_N", "480000"))
-# smaller cached dataset for the untimed warmup passes (JIT/codegen/
-# allocator warming needs a representative pass, not the full input)
-WARM_N = int(os.environ.get("HYDRA_BENCH_WARM_N", "240000"))
-# N-and-4N pairs for the two-cluster-size criterion, each as
-# "lo:hi:state_partitions[:clips]". State/shuffle partitioning is
-# pinned by the checkpoint on a real cluster — a resize changes
-# executor count, not partition layout — so BOTH levels of a pair run
-# the same layout, sized at the larger config's core count (8 for the
-# 2->8 pair, 16 for 4->16). Pair 1 (2->8) is the primary gate: the
-# no-Spark CPU control (re-measured every run, written to
-# BENCH/BASELINE.md) shows this host's own parallel-delivery ceiling is
-# ~0.97 for 2->8 but only ~0.85-0.91 for 4->16 and ~0.71 for 8->32 —
-# the larger pairs measure the virtualized host as much as the engine.
-# Pair 2 (4->16) is reported alongside as the wider-width evidence the
-# round-2 verdict asked for, with its own same-run ceiling control.
-#
-# Per-pair clip count: the input SCALES WITH THE PAIR'S WIDTH (480k at
-# lo=2 cores, 960k at lo=4) so each pair's N-level run carries the same
-# ~130 s of busy time — i.e. every pair measures the same stream-hours-
-# per-core regime, and the fixed per-trigger costs (driver planning,
-# state-store open, final commit) stay the same small FRACTION of the
-# measurement at every width. Within a pair both levels always replay
-# the IDENTICAL input — the ratio compares nothing but parallelism.
-# A sustained 10^9-clip replay amortizes those fixed costs to zero; a
-# fixed-N protocol would instead make the wide pair measure mostly
-# trigger overhead (the round-2 verdict's point).
-PAIRS = [
-    tuple(int(x) for x in p.split(":"))
-    for p in os.environ.get("HYDRA_BENCH_PAIRS", "2:8:8,4:16:16:960000").split(",")
-]
-# back-compat: the pre-PAIRS single-pair knobs still work (a lone
-# LO/HI pair, state partitions = HI per the sp-equals-hi-cores rule);
-# silently ignoring them would let an operator believe they measured a
-# configuration they did not. An EXPLICIT HYDRA_BENCH_PAIRS wins — a
-# stale legacy var lingering in the shell must not override it.
-if "HYDRA_BENCH_PAIRS" not in os.environ and (
-    "HYDRA_BENCH_CORES_LO" in os.environ or "HYDRA_BENCH_CORES_HI" in os.environ
-):
-    _lo = int(os.environ.get("HYDRA_BENCH_CORES_LO", "2"))
-    _hi = int(os.environ.get("HYDRA_BENCH_CORES_HI", str(4 * _lo)))
-    PAIRS = [(_lo, _hi, _hi)]
-# interleaved rounds per level, best-of-k (host bursts move identical
-# runs ±50%; a ratio of two single shots is noise, see worker docstring)
-ROUNDS = int(os.environ.get("HYDRA_BENCH_ROUNDS", "3"))
-# Degraded-window mitigation: host contention episodes can span an
-# entire pair's trial phase (observed: every wide-level pass 1.8-4x
-# slow for ~15 min while the narrow level was barely touched — the
-# bandwidth-contention signature). A cheap control burst measured
-# IMMEDIATELY BEFORE each round stamps every trial with the host state
-# at that moment; if after ROUNDS rounds the pair's best efficiency is
-# below target AND some round ran on a visibly degraded host (control
-# below 90% of the best round's control), up to EXTRA_ROUNDS more
-# rounds run. Bounded, and every trial + its control is reported in
-# BENCH/BASELINE.md — best-of-k was always the estimator; extra k only
-# tightens the estimate of the uncontended rate.
-EXTRA_ROUNDS = int(os.environ.get("HYDRA_BENCH_EXTRA_ROUNDS", "2"))
-# absolute copy-bandwidth floors (GB/s) below which a trial's window
-# counts as degraded even when every round was EQUALLY slow — keyed by
-# the PAIR's hi core count because every stamp is measured at cores_hi
-# width (see the per-trial stamp block in run_scaling). Values are
-# ~75% of the healthy width-8/width-16 stamps in BENCH/HISTORY.md;
-# uncalibrated widths fall back to 0.0 (floor check inert, relative
-# check still applies).
-_BW_FLOORS = {8: 95.0, 16: 160.0}
-EFF_TARGET = float(os.environ.get("HYDRA_BENCH_EFF_TARGET", "0.8"))
-RUN_SCALING = os.environ.get("HYDRA_BENCH_SCALING", "1") != "0"
-# headline suite toggle: pair-only re-runs (window-chasing) skip it
-RUN_HEADLINE = os.environ.get("HYDRA_BENCH_HEADLINE", "1") != "0"
-DATA_ROOT = "/root/repo/.data/bench"
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())))
 
 # the headline subset: every engine layer (window/join/state/source),
 # the heavy joins, and one of each training-data op family
@@ -170,7 +77,7 @@ def run_headline(spark) -> dict[str, float]:
     qs["ann_lsh_topk"] = E.ann_lsh_topk_raw
     # one-time JVM/codegen/scan warmup so the first query's number is the
     # query, not session spin-up; Python workers pre-forked for the same
-    # reason (the first pandas-UDF query otherwise pays a 32-process
+    # reason (the first pandas-UDF query otherwise pays a per-core
     # fork + numpy-import herd — executors warm once, then serve)
     _force(spark.read.parquet(f"{SF_DIR}/events.parquet").limit(1000))
     _warm_python_workers(spark, CPUS)
@@ -204,28 +111,10 @@ def run_headline(spark) -> dict[str, float]:
     return out
 
 
-def _warm_page_cache(*dirs: str) -> None:
-    """Pre-read the input into the OS page cache before the timed region.
-
-    The sandbox has ONE ~170 MB/s virtio disk shared by every core — a
-    resource that does NOT scale with parallelism, unlike a real cluster
-    where every added executor brings its own disks/NICs. A cold run
-    here measures that single disk, not the engine. Warming the cache
-    makes the input side behave like cluster storage (scales with
-    readers), which is what the N-vs-4N criterion is about."""
-    import glob
-
-    for d in dirs:
-        for f in glob.glob(os.path.join(d, "*.parquet")):
-            with open(f, "rb") as fh:
-                while fh.read(1 << 24):
-                    pass
-
-
 def _warm_python_workers(spark, n_workers: int) -> None:
     """Fork + warm every Python worker slot before the timed region —
-    the metric is *sustained* clips/sec; a one-time 32-way import herd
-    and allocator-pool expansion is cold-start, not throughput. On a
+    a one-time per-core import herd and allocator-pool expansion is
+    cold-start, not query time. On a
     real cluster executors warm exactly the same way on their first
     tasks. Each warm task imports numpy/pandas AND pushes ~100 MB of
     allocations through the worker so glibc's reusable heap (see
@@ -247,538 +136,17 @@ def _warm_python_workers(spark, n_workers: int) -> None:
     )
 
 
-class _StreamWorker:
-    """Handle on a bench_stream_worker subprocess (one per core count)."""
-
-    def __init__(
-        self, cores: int, paths: dict, n: int, stream_partitions: int,
-        warm_paths: dict | None = None,
-    ):
-        import subprocess
-
-        self.cores = cores
-        self.errlog = open(f"/tmp/bench_worker_c{cores}.log", "w")
-        wp = warm_paths or paths
-        self.proc = subprocess.Popen(
-            [sys.executable, "/root/repo/tools/bench_stream_worker.py",
-             str(cores), paths["audio"], paths["transcripts"], str(n),
-             str(stream_partitions), wp["audio"], wp["transcripts"]],
-            stdin=subprocess.PIPE, stdout=subprocess.PIPE,
-            stderr=self.errlog, text=True, bufsize=1,
-        )
-
-    def _read_until(self, prefix: str) -> str:
-        for line in self.proc.stdout:
-            if line.startswith(prefix):
-                return line[len(prefix):].strip()
-        raise RuntimeError(f"worker c{self.cores} died before '{prefix}'")
-
-    def wait_ready(self) -> None:
-        self._read_until("READY")
-
-    def run_pass(self, warm: bool = False) -> dict:
-        out_root = os.path.join(DATA_ROOT, f"out_c{self.cores}")
-        self.proc.stdin.write(f"{'WARM' if warm else 'RUN'} {out_root}\n")
-        self.proc.stdin.flush()
-        return json.loads(self._read_until("RESULT "))
-
-    def close(self) -> None:
-        try:
-            self.proc.stdin.write("EXIT\n")
-            self.proc.stdin.flush()
-            self.proc.wait(timeout=60)
-        except Exception:
-            self.proc.kill()
-
-
-def run_streaming_pair(
-    paths: dict, n: int, cores_lo: int, cores_hi: int, stream_partitions: int,
-    warm_paths: dict | None = None,
-) -> tuple[dict, dict, list]:
-    """Measure the flagship at cores_lo and cores_hi, interleaved.
-
-    Both workers warm up once (JVM JIT, codegen, Python-worker allocator
-    pools — on a real cluster executors warm the same way on their first
-    tasks), then ROUNDS timed passes alternate lo/hi, strictly
-    sequential. Best busy-time per level is the least-contended estimate
-    of what the engine does at that parallelism (contention only ever
-    slows a run down).
-    """
-    _warm_page_cache(paths["audio"], paths["transcripts"])
-    if warm_paths:
-        _warm_page_cache(warm_paths["audio"], warm_paths["transcripts"])
-    lo = _StreamWorker(cores_lo, paths, n, stream_partitions, warm_paths)
-    lo.wait_ready()
-    hi = _StreamWorker(cores_hi, paths, n, stream_partitions, warm_paths)
-    hi.wait_ready()
-    trials = []
-
-    def best(cores: int) -> dict:
-        cand = [t for t in trials if t["cores"] == cores]
-        b = min(cand, key=lambda t: t["busy_s"])
-        return {**b, "clips_in": n, "n_trials": len(cand),
-                "clips_per_sec_incl_startup": round(n / b["wall_s"], 1)}
-
-    def best_eff() -> float:
-        return (best(cores_hi)["clips_per_sec"] / best(cores_lo)["clips_per_sec"]) / (
-            cores_hi / cores_lo
-        )
-
-    try:
-        lo.run_pass(warm=True)  # untimed warmup over the smaller dataset
-        hi.run_pass(warm=True)
-        r = 0
-        while True:
-            for w in (lo, hi):
-                # contemporaneous host-state stamps PER TRIAL (compute
-                # axis and memory-bandwidth axis — either can be the one
-                # a co-tenant saturates, and a burst can start mid-round:
-                # a single per-round stamp would mark a pass that ran
-                # inside the burst with the pre-burst healthy reading)
-                ctrl = _quick_control_rate(cores_hi)
-                bw = _quick_bw_rate(cores_hi)
-                res = w.run_pass()
-                res["round"] = r
-                res["ctrl_units_per_sec"] = ctrl
-                res["ctrl_bw_gbps"] = bw
-                trials.append(res)
-                print(f"# round {r} c{res['cores']}: {res['clips_per_sec']} clips/s "
-                      f"(busy {res['busy_s']}s, ctrl {ctrl}, bw {bw} GB/s)", file=sys.stderr)
-            r += 1
-            if r < ROUNDS:
-                continue
-            if best_eff() >= EFF_TARGET or r >= ROUNDS + EXTRA_ROUNDS:
-                break
-            ctrl_best = max(t["ctrl_units_per_sec"] for t in trials)
-            bw_best = max(t["ctrl_bw_gbps"] for t in trials)
-            degraded = any(
-                t["ctrl_units_per_sec"] < 0.9 * ctrl_best
-                or t["ctrl_bw_gbps"] < 0.9 * bw_best
-                # a UNIFORMLY contended window has no internal contrast
-                # (every round equally slow -> relative check passes) —
-                # absolute floors from BENCH/HISTORY.md's healthy
-                # stamps catch it; stamps are ALWAYS measured at
-                # cores_hi width, so the floor keys on cores_hi too
-                or t["ctrl_bw_gbps"] < _BW_FLOORS.get(cores_hi, 0.0)
-                for t in trials
-            )
-            if not degraded:
-                break  # host looked healthy throughout — the number stands
-            print(f"# eff {best_eff():.3f} < {EFF_TARGET} with degraded rounds "
-                  f"(ctrl range {min(t['ctrl_units_per_sec'] for t in trials)}-"
-                  f"{ctrl_best}, bw range {min(t['ctrl_bw_gbps'] for t in trials)}-"
-                  f"{bw_best}); extra round", file=sys.stderr)
-    finally:
-        lo.close()
-        hi.close()
-
-    return best(cores_lo), best(cores_hi), trials
-
-
-def _quick_control_rate(nproc: int) -> float:
-    """One cheap control burst (no warm pools, single map) — a
-    contemporaneous host-state stamp for the round about to run, not a
-    ceiling measurement (that's _cpu_control's best-of-3)."""
-    import multiprocessing as mp
-
-    with mp.Pool(nproc) as p:
-        p.map(_burn, range(nproc))  # pool spin-up + first-touch
-        t0 = time.time()
-        p.map(_burn, range(nproc * 2))
-        return round(nproc * 2 / (time.time() - t0), 1)
-
-
-def _quick_bw_rate(nproc: int) -> float:
-    """Contemporaneous MEMORY-BANDWIDTH stamp (aggregate GB/s copied by
-    nproc perfectly-parallel processes). The sin-dominated CPU control
-    is arithmetic-bound and cannot see a co-tenant saturating DRAM —
-    but the decode hot path streams the whole input through LUT gathers
-    and reduceat, so bandwidth contention collapses exactly the WIDE
-    levels while the CPU stamp stays green (observed: healthy CPU ctrl
-    with 3.4x-slow local[16] passes). Two stamps, two failure axes."""
-    import multiprocessing as mp
-
-    with mp.Pool(nproc) as p:
-        p.map(_bw_burn, range(nproc))  # pool spin-up + allocator warm
-        t0 = time.time()
-        p.map(_bw_burn, range(nproc))
-        return round(nproc * _BW_BYTES_PER_CALL / (time.time() - t0) / 1e9, 1)
-
-
-def _cpu_control(n_lo: int = 4, n_hi: int = 16) -> dict:
-    """Hardware ceiling control: perfectly-parallel single-threaded numpy
-    work at N and 4N processes, NO Spark. What this host can deliver;
-    the denominator for judging the engine's own scaling."""
-    import multiprocessing as mp
-
-    import numpy as np  # noqa: F401
-
-    def measure(nproc: int) -> float:
-        best = 0.0
-        with mp.Pool(nproc) as p:
-            p.map(_burn, range(nproc))  # warm
-            for _ in range(3):  # best-of-3: host noise hits the control too
-                t0 = time.time()
-                p.map(_burn, range(nproc * 3))
-                best = max(best, nproc * 3 / (time.time() - t0))
-        return best
-
-    lo, hi = measure(n_lo), measure(n_hi)
-    return {
-        "procs_lo": n_lo, "procs_hi": n_hi,
-        "units_per_sec_lo": round(lo, 1), "units_per_sec_hi": round(hi, 1),
-        "hw_scaling_efficiency": round((hi / lo) / (n_hi / n_lo), 3),
-    }
-
-
-def _burn(_):
-    import numpy as np
-
-    x = np.random.default_rng(0).standard_normal(2_000_000).astype(np.float32)
-    s = 0.0
-    for _ in range(20):
-        s += float(np.dot(np.sin(x), x))
-    return s
-
-
-# bytes MOVED per _bw_burn call (read + write per copy pass)
-_BW_BYTES_PER_CALL = 4 * 2 * 128 * 1024 * 1024
-
-# per-worker-process buffer cache: allocated + faulted ONCE per pool
-# worker (the preceding warm map does the faulting), so the timed map
-# measures only copy bandwidth — a fresh alloc per call would mix
-# first-touch page faults and kernel zero-page reads into the stamp
-_BW_BUFS: dict = {}
-
-
-def _bw_burn(_):
-    """Pure DRAM streaming: 4 copy passes over a 128 MB buffer (way past
-    any cache). Zero arithmetic — isolates the bandwidth axis."""
-    import numpy as np
-
-    bufs = _BW_BUFS.get("bufs")
-    if bufs is None:
-        src = np.full(128 * 1024 * 1024 // 8, 1.0)  # real pages, not zero-page
-        dst = np.full_like(src, 1.0)
-        bufs = _BW_BUFS["bufs"] = [src, dst]
-    src, dst = bufs
-    for _ in range(4):
-        np.copyto(dst, src)
-        src, dst = dst, src
-    return float(src[0])
-
-
-def _bw_control(n_lo: int, n_hi: int) -> dict:
-    """Bandwidth ceiling control, mirroring _cpu_control: aggregate
-    copy GB/s at N and 4N perfectly-parallel processes, best-of-3.
-    A shared-DRAM host CANNOT scale this 4x (one memory bus) — the
-    number contextualizes decode-heavy levels the way the CPU control
-    contextualizes compute; on a real cluster every executor brings its
-    own memory channels, like its own disks."""
-    import multiprocessing as mp
-
-    def measure(nproc: int) -> float:
-        best = 0.0
-        with mp.Pool(nproc) as p:
-            p.map(_bw_burn, range(nproc))  # warm
-            for _ in range(3):
-                t0 = time.time()
-                p.map(_bw_burn, range(nproc))
-                best = max(best, nproc * _BW_BYTES_PER_CALL / (time.time() - t0) / 1e9)
-        return best
-
-    lo, hi = measure(n_lo), measure(n_hi)
-    return {
-        "procs_lo": n_lo, "procs_hi": n_hi,
-        "gbps_lo": round(lo, 1), "gbps_hi": round(hi, 1),
-        "bw_scaling_efficiency": round((hi / lo) / (n_hi / n_lo), 3),
-    }
-
-
-def run_scaling(default_n: int) -> list[dict]:
-    """Measure every configured (N, 4N) pair sequentially (pairs never
-    share a host window; within a pair, passes interleave). Returns one
-    result dict per pair; the first pair is the primary gate."""
-    from hydra_spark import synth
-    from hydra_spark.session import get_spark
-
-    pair_ns = [(p[3] if len(p) > 3 else default_n) for p in PAIRS]
-    # The primary (smallest) dataset stays cached across rounds; every
-    # larger pair's dataset is synthesized LAZILY right before its pair
-    # and freed right after — round-4 post-mortem: generating all sizes
-    # up front (36 GB for 960k) next to 36 GB of cached 480k data
-    # overflowed the driver's 43 GB free disk and killed the bench
-    # before any number existed. HYDRA_BENCH_KEEP_DATA=1 keeps them.
-    keep_n = min(pair_ns)
-    keep_data = os.environ.get("HYDRA_BENCH_KEEP_DATA") == "1"
-
-    def _synthesize(ns: list[int]) -> dict:
-        spark = get_spark(cores=CPUS, app_name="bench-synth")
-        try:
-            return {n: synth.ensure_dataset(spark, DATA_ROOT, n=n) for n in ns}
-        finally:
-            spark.stop()
-
-    warm_paths = (
-        _synthesize([WARM_N])[WARM_N] if WARM_N < min(pair_ns) else None
-    )
-    out = []
-    for (cores_lo, cores_hi, sp, *_), n in zip(PAIRS, pair_ns):
-        paths = _synthesize([n])[n]  # outside the timed region, as before
-        r_lo, r_hi, trials = run_streaming_pair(
-            paths, n, cores_lo, cores_hi, sp, warm_paths
-        )
-        if n != keep_n and not keep_data:
-            synth.drop_dataset(DATA_ROOT, n)
-        eff = (r_hi["clips_per_sec"] / r_lo["clips_per_sec"]) / (cores_hi / cores_lo)
-        out.append({
-            "cores_lo": cores_lo,
-            "cores_hi": cores_hi,
-            "stream_partitions": sp,
-            "clips_n": n,
-            "local_n": r_lo,
-            "local_4n": r_hi,
-            "scaling_efficiency": round(eff, 3),
-            "cpu_control": _cpu_control(cores_lo, cores_hi),
-            "bw_control": _bw_control(cores_lo, cores_hi),
-            "trials": trials,
-        })
-    return out
-
-
-def write_bench_md(pairs: list[dict]) -> None:
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-
-    def pair_section(idx: int, stream: dict) -> str:
-        rl, rh = stream["local_n"], stream["local_4n"]
-        ratio = round(rh["cores"] / rl["cores"], 3)
-        ratio_s = f"{ratio:g}"
-        hw = stream["cpu_control"]
-        bw = stream.get("bw_control")
-        norm = (
-            round(stream["scaling_efficiency"] / hw["hw_scaling_efficiency"], 3)
-            if hw["hw_scaling_efficiency"] else None
-        )
-        bw_line = (
-            f"Same-run MEMORY-BANDWIDTH ceiling control ({bw['procs_lo']} -> "
-            f"{bw['procs_hi']} perfectly-parallel copy processes, zero arithmetic): "
-            f"{bw['gbps_lo']} -> {bw['gbps_hi']} GB/s = bandwidth scaling "
-            f"**{bw['bw_scaling_efficiency']}** — a shared-DRAM host cannot scale "
-            f"streaming work 4x (one memory bus); on a real cluster each executor "
-            f"brings its own memory channels, like its own disks. The decode hot "
-            f"path is bandwidth-heavy, so the engine's achievable ratio in any "
-            f"window is bounded by a mix of the two controls.\n" if bw else ""
-        )
-        trial_rows = "\n".join(
-            f"| {t['round']} | local[{t['cores']}] | {t['busy_s']} | {t['clips_per_sec']} "
-            f"| {t.get('ctrl_units_per_sec', '')} | {t.get('ctrl_bw_gbps', '')} |"
-            for t in stream.get("trials", [])
-        )
-        # the primary gate is the NARROWEST pair by protocol (2->8), not
-        # whichever happens to be first in a single-pair re-run
-        role = "primary gate" if rl["cores"] == 2 else "wider-width evidence"
-        return f"""## Pair {idx + 1}: local[{rl['cores']}] -> local[{rh['cores']}] ({role})
-
-| config | clips in | rows out | wall (s) | busy (s) | sustained clips/sec | incl. startup |
-|---|---|---|---|---|---|---|
-| local[{rl['cores']}]  (N)  | {rl['clips_in']} | {rl['rows_out']} | {rl['wall_s']} | {rl['busy_s']} | {rl['clips_per_sec']} | {rl['clips_per_sec_incl_startup']} |
-| local[{rh['cores']}] ({ratio_s}N) | {rh['clips_in']} | {rh['rows_out']} | {rh['wall_s']} | {rh['busy_s']} | {rh['clips_per_sec']} | {rh['clips_per_sec_incl_startup']} |
-
-**Scaling efficiency (thr_{ratio_s}N / thr_N) / {ratio_s} =
-{stream['scaling_efficiency']}** (target >= 0.8 per BASELINE.json
-north_rule).
-State/shuffle partitions pinned to {stream['stream_partitions']} at BOTH levels (a real
-cluster resize keeps the checkpoint's state layout; only executor count
-changes).
-
-Same-run hardware-ceiling control ({hw['procs_lo']} -> {hw['procs_hi']} perfectly-parallel
-single-threaded numpy processes, no Spark): {hw['units_per_sec_lo']} -> {hw['units_per_sec_hi']}
-units/s = control efficiency **{hw['hw_scaling_efficiency']}** — the MOST this virtualized
-host delivers for code with zero serial fraction at this width. Engine
-efficiency normalized by that ceiling:
-**{stream['scaling_efficiency']} / {hw['hw_scaling_efficiency']} = {norm}**.
-
-{bw_line}
-### Timed trials (pair {idx + 1})
-
-"ctrl" = contemporaneous CPU control burst (work units/s at {rh['cores']} procs,
-measured immediately before that pass); "bw" = contemporaneous
-memory-bandwidth stamp (aggregate copy GB/s at the same width) — the
-host's state when each pass started, on both contention axes (stamped
-PER TRIAL: a burst can begin mid-round); trials whose stamps sit well
-below the best trial's ran during a host-contention episode. If after {ROUNDS} rounds the pair's best efficiency is below
-{EFF_TARGET} AND a degraded round is present (either axis), up to
-{EXTRA_ROUNDS} bounded extra rounds run (all reported below).
-
-| round | config | busy (s) | clips/s | ctrl | bw GB/s |
-|---|---|---|---|---|---|
-{trial_rows}
-"""
-
-    sections = "\n".join(pair_section(i, s) for i, s in enumerate(pairs))
-    # describe the pairs ACTUALLY measured (HYDRA_BENCH_PAIRS is
-    # configurable — the prose must match the data, not the default)
-    # same role rule as pair_section: the primary gate is the lo=2
-    # pair BY PROTOCOL, not whichever pair a single-pair re-run merged
-    # first — the header and the section headings must never disagree
-    pair_descs = ", ".join(
-        f"{s['local_n']['cores']}->{s['local_4n']['cores']} at "
-        f"{s['local_n']['clips_in']} clips"
-        + (" (primary gate)" if s["local_n"]["cores"] == 2 else " (wider-width evidence)")
-        for s in pairs
-    )
-    npairs = len(pairs)
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
-        f.write(f"""# BENCH — measured north-rule numbers
-
-Metric (BASELINE.json): sustained clips/sec end-to-end
-(decode + stream-stream join + window keying + exactly-once keyed sink)
-on the synthesized audio+transcript stream. The two-cluster-size
-criterion is evidenced in-sandbox (driver instruction: "running the
-same job at two parallelism levels (e.g. local[8] and local[32], or N
-and 4N cores)") by the same job / same input / same checkpoint + state
-partition layout at {npairs} lo-vs-hi core pair(s), each with same-run
-hardware-ceiling controls: {pair_descs}.
-
-{sections}
-## Measurement protocol
-
-One worker process per parallelism level, both long-lived: Python
-workers pre-forked and allocator pools pre-grown; input pre-read into
-page cache (the single ~170 MB/s virtio disk stands in for cluster
-storage, which scales with executors); one full UNTIMED pipeline pass
-per level (cold-start: JIT, codegen, state-store + allocator growth);
-then timed passes INTERLEAVED lo/hi/lo/hi (host contention bursts last
-seconds-to-minutes and move identical runs ±50% — interleaving
-decorrelates the two levels of a pair from the bursts), strictly
-sequential, fresh checkpoint each pass. Best-of-{ROUNDS} busy time per
-level is the reported sustained number (contention only ever slows a
-run down). Pairs run sequentially and never share a host window, so
-cross-pair comparisons carry window noise — each pair's RATIO is the
-meaningful number, which is exactly what interleaving protects.
-
-Per-pair input size: each pair's clip count scales with its width
-({", ".join(f"{s['local_n']['clips_in']} at lo={s['local_n']['cores']} cores" for s in pairs)})
-so the N-level run of every pair
-carries the same ~130 s of busy time — the same stream-hours-per-core
-regime, keeping fixed per-trigger costs (driver planning, state-store
-open, final commit) the same small fraction of the measurement at
-every width, as they are on a sustained 10^9-clip replay. WITHIN a
-pair both levels replay the IDENTICAL input — the efficiency ratio
-compares nothing but parallelism.
-
-## Pipeline under test
-
-parquet replay source (maxFilesPerTrigger rate control) -> admission
-checks -> zero-copy Arrow decode (mapInArrow, per-codec LUT + reduceat;
-drops audio bytes BEFORE any shuffle or state) -> watermarked
-stream-stream interval join vs late transcripts (RocksDB state store,
-changelog checkpointing) -> per micro-batch: transcript normalize ->
-tumbling window key -> idempotent keyed append (insert-only, batch-id
-exactly-once) + quarantine + per-partition lineage + metrics in one
-atomic commit.
-""")
-
-
-def _save_pair_sidecars(pairs: list[dict], base: str = "/root/repo/BENCH") -> None:
-    """Persist each measured pair to BENCH/pair_<lo>_<hi>.json so a
-    single-pair re-run (chasing a clean host window for one width)
-    updates ONLY its own section of BASELINE.md instead of clobbering
-    the other pair's latest measurement."""
-    os.makedirs(base, exist_ok=True)
-    for p in pairs:
-        key = f"pair_{p['local_n']['cores']}_{p['local_4n']['cores']}.json"
-        path = os.path.join(base, key)
-        # contention guard: BASELINE.md publishes each pair's latest
-        # CLEAN-window measurement (protocol section below; HISTORY.md
-        # records every run unconditionally). A run that (a) fails the
-        # gate an existing sidecar passed AND (b) measured a LOWER
-        # ceiling on EITHER contention axis (CPU or memory bandwidth)
-        # than that sidecar's run was measured inside a dirtier host
-        # window — keeping it would replace a clean measurement with a
-        # contention artifact. Both axes must be checked: one can read
-        # clean while the other is degraded (a depressed lo-width copy
-        # rate inflates the bw RATIO while the CPU ceiling collapses).
-        if os.path.exists(path):
-            with open(path) as f:
-                prev = json.load(f)
-            prev_eff = prev.get("scaling_efficiency", 0.0)
-            prev_bw = prev.get("bw_control", {}).get("bw_scaling_efficiency", 0.0)
-            new_bw = p.get("bw_control", {}).get("bw_scaling_efficiency", 0.0)
-            prev_cpu = prev.get("cpu_control", {}).get("hw_scaling_efficiency", 0.0)
-            new_cpu = p.get("cpu_control", {}).get("hw_scaling_efficiency", 0.0)
-            # a gate-passing run is always accepted; a failing run
-            # replaces the sidecar only if it IMPROVES on it or was
-            # measured in a window at least as clean on BOTH axes —
-            # a worse ratio from a dirtier window is a contention
-            # artifact, not evidence
-            if (p["scaling_efficiency"] < EFF_TARGET
-                    and p["scaling_efficiency"] < prev_eff
-                    and (new_bw < prev_bw or new_cpu < prev_cpu)):
-                print(f"[sidecar] keeping {key}: new eff "
-                      f"{p['scaling_efficiency']} < {EFF_TARGET} with ceilings "
-                      f"bw {new_bw} vs prior {prev_bw}, cpu {new_cpu} vs prior "
-                      f"{prev_cpu} (dirtier window on at least one axis); "
-                      f"run still appended to HISTORY.md", flush=True)
-                continue
-        tmp = path + ".tmp"  # atomic: a kill mid-dump must not leave
-        with open(tmp, "w") as f:  # a truncated sidecar that poisons
-            json.dump(p, f)  # every later run's _load_pair_sidecars
-        os.rename(tmp, path)
-
-
-def _load_pair_sidecars() -> list[dict]:
-    import glob as _glob
-
-    out = []
-    for path in _glob.glob("/root/repo/BENCH/pair_*.json"):
-        with open(path) as f:
-            out.append(json.load(f))
-    return sorted(out, key=lambda p: p["local_n"]["cores"])
-
-
-def _append_history(pairs: list[dict]) -> None:
-    """Append one line per pair to BENCH/HISTORY.md — the cross-window
-    record BASELINE.md can't hold (each run rewrites it). Host noise on
-    this box moves identical runs ±50% and has TWO axes (CPU and DRAM
-    bandwidth); a single window's ratio means little without the
-    history of ratios-vs-ceilings around it."""
-    path = "/root/repo/BENCH/HISTORY.md"
-    fresh = not os.path.exists(path)
-    with open(path, "a") as f:
-        if fresh:
-            f.write(
-                "# Bench run history (one line per pair per run; appended "
-                "automatically by bench.py)\n\n"
-                "| when (UTC) | pair | clips | thr_lo | thr_hi | eff | "
-                "cpu ceiling | bw ceiling |\n|---|---|---|---|---|---|---|---|\n"
-            )
-        when = time.strftime("%Y-%m-%d %H:%M", time.gmtime())
-        for p in pairs:
-            rl, rh = p["local_n"], p["local_4n"]
-            f.write(
-                f"| {when} | {rl['cores']}->{rh['cores']} | {rl['clips_in']} "
-                f"| {rl['clips_per_sec']} | {rh['clips_per_sec']} "
-                f"| {p['scaling_efficiency']} "
-                f"| {p['cpu_control']['hw_scaling_efficiency']} "
-                f"| {p.get('bw_control', {}).get('bw_scaling_efficiency', '')} |\n"
-            )
-
-
 def main() -> None:
     from hydra_spark.session import get_spark
 
     t_all = time.time()
-    queries: dict[str, float] = {}
-    if RUN_HEADLINE:
-        spark = get_spark(cores=CPUS, app_name="bench-headline")
-        queries = run_headline(spark)
-        spark.stop()
+    spark = get_spark(cores=CPUS, app_name="bench-headline")
+    queries = run_headline(spark)
+    spark.stop()
 
     result = {
         "metric": "headline suite wall time (sum of per-query sec, "
-                  "best-of-2 warm runs per query); "
-                  "streaming north-rule metric under 'streaming'",
+                  "best-of-2 warm runs per query)",
         # the one-time index build is reported but not part of the
         # per-query suite sum (amortized prep, like the parquet files)
         "value": round(sum(v for k, v in queries.items() if k != "ann_lsh_index_build"), 3),
@@ -786,62 +154,8 @@ def main() -> None:
         "queries": queries,
         "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
         "cpus": CPUS,
+        "bench_wall_s": round(time.time() - t_all, 1),
     }
-
-    if RUN_SCALING:
-        pairs = run_scaling(BENCH_N)
-        _save_pair_sidecars(pairs)
-        # BASELINE.md always renders the LATEST measurement of every
-        # pair ever run (sidecar-merged); history gets only this run's
-        write_bench_md(_load_pair_sidecars())
-        _append_history(pairs)
-        primary = pairs[0]
-        result["streaming"] = {
-            "metric": "sustained clips/sec end-to-end (decode+window+join+sink)",
-            "clips_n": primary["clips_n"],
-            "cores_n": primary["local_n"]["cores"],
-            "cores_4n": primary["local_4n"]["cores"],
-            "clips_per_sec_n": primary["local_n"]["clips_per_sec"],
-            "clips_per_sec_4n": primary["local_4n"]["clips_per_sec"],
-            "scaling_efficiency": primary["scaling_efficiency"],
-            "hw_ceiling_efficiency": primary["cpu_control"]["hw_scaling_efficiency"],
-            "bw_ceiling_efficiency": primary["bw_control"]["bw_scaling_efficiency"],
-            "rounds_per_level": ROUNDS,
-            "protocol": "interleaved best-of-k busy-time per level; pairs sequential",
-            "pairs": [
-                {
-                    "cores_n": p["local_n"]["cores"],
-                    "cores_4n": p["local_4n"]["cores"],
-                    "stream_partitions": p["stream_partitions"],
-                    "clips_n": p["clips_n"],
-                    "clips_per_sec_n": p["local_n"]["clips_per_sec"],
-                    "clips_per_sec_4n": p["local_4n"]["clips_per_sec"],
-                    "scaling_efficiency": p["scaling_efficiency"],
-                    "hw_ceiling_efficiency": p["cpu_control"]["hw_scaling_efficiency"],
-                }
-                for p in pairs
-            ],
-            # the sidecar-merged clean-window marks BASELINE.md publishes
-            # (this run's numbers above are kept out of the sidecar when
-            # measured in a dirtier host window — see _save_pair_sidecars);
-            # host contention moves identical runs ±50%, so a single run's
-            # ratio only means something next to its same-run ceilings
-            "banked": [
-                {
-                    "cores_n": p["local_n"]["cores"],
-                    "cores_4n": p["local_4n"]["cores"],
-                    "clips_n": p["clips_n"],
-                    "clips_per_sec_n": p["local_n"]["clips_per_sec"],
-                    "clips_per_sec_4n": p["local_4n"]["clips_per_sec"],
-                    "scaling_efficiency": p["scaling_efficiency"],
-                    "hw_ceiling_efficiency": p["cpu_control"]["hw_scaling_efficiency"],
-                    "bw_ceiling_efficiency": p["bw_control"]["bw_scaling_efficiency"],
-                }
-                for p in _load_pair_sidecars()
-            ],
-        }
-
-    result["bench_wall_s"] = round(time.time() - t_all, 1)
     print(json.dumps(result))
 
 

@@ -1,20 +1,15 @@
-"""Transcript normalization UDFs — byte-parity path and JVM fast path.
+"""Transcript normalization UDF — the byte-parity path.
 
 The authoritative implementation is hydra_spark.textnorm.normalize (NFC +
 lower + whitespace collapse + strip); the pandas UDF here simply maps it
 over Arrow batches, so engine output and oracle output share one code
 path (BASELINE.md byte-for-byte gate).
-
-A builtin-function variant is provided for the pure-ASCII fast path —
-it keeps the expression inside WholeStageCodegen (no Python worker
-round-trip) and is provably identical to the UDF when the input has no
-non-NFC codepoints.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, functions as F, types as T
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from hydra_spark import textnorm
@@ -23,8 +18,3 @@ from hydra_spark import textnorm
 @pandas_udf(T.StringType())
 def normalize_transcript(s: pd.Series) -> pd.Series:
     return textnorm.normalize_series(s)
-
-
-def normalize_transcript_builtin(col: Column) -> Column:
-    """JVM-side variant: lower + collapse \\s+ + trim (no NFC)."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))

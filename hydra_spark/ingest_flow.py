@@ -90,9 +90,3 @@ def ingest_requests(
         status.alias("status_code"),
         error.alias("error"),
     )
-
-
-def ingestion_report(results: DataFrame) -> DataFrame:
-    """Aggregate report — per status code: request count (the summary
-    Hydra's supervisor exposes per ingestor over all requests)."""
-    return results.groupBy("status_code").agg(F.count("*").alias("n_requests"))

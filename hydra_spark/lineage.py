@@ -55,13 +55,3 @@ def groups_inversion(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
         F.array_sort(F.collect_set(item_col)).alias("items"),
         F.countDistinct(item_col).alias("n_items"),
     )
-
-
-def batch_lineage_rows(batch_df: DataFrame) -> DataFrame:
-    """(partition, start_offset, end_offset, rows) for one micro-batch —
-    appended in the same transaction as the data commit (L1)."""
-    return batch_df.groupBy("ingest_partition").agg(
-        F.min("ingest_offset").alias("start_offset"),
-        F.max("ingest_offset").alias("end_offset"),
-        F.count("*").alias("rows"),
-    )

@@ -730,55 +730,6 @@ def minhash_lsh_pairs(
     )
 
 
-def exact_jaccard_of_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact n-gram Jaccard for a GIVEN candidate-pair set only.
-
-    The LSH verification stage: cost is O(candidate docs' grams), never
-    O(all-pairs) — at web scale the candidate set is what makes MinHash
-    LSH tractable, so the verifier must not fan back out to a full
-    shared-gram self-join. Output: (d1, d2, jaccard rounded 4).
-    """
-    docs = pairs.select(F.col("d1").alias(id_col)).union(
-        pairs.select(F.col("d2").alias(id_col))
-    ).distinct()
-    # grams of candidate docs feed three consumers (counts, both join
-    # sides) — cache to shingle once
-    g = word_ngrams(df.join(docs, id_col), n, text_col, id_col).persist()
-    counts = g.groupBy(id_col).agg(F.count("*").alias("n_grams"))
-    # intersection per candidate pair: route each pair's two gram sets
-    # together by joining grams to the pair list on each side
-    g1 = g.select(F.col(id_col).alias("d1"), "gram")
-    g2 = g.select(F.col(id_col).alias("d2"), "gram")
-    inter = (
-        pairs.join(g1, "d1")
-        .join(g2, ["d2", "gram"])
-        .groupBy("d1", "d2")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    ca = counts.select(F.col(id_col).alias("d1"), F.col("n_grams").alias("n1"))
-    cb = counts.select(F.col(id_col).alias("d2"), F.col("n_grams").alias("n2"))
-    return (
-        pairs.join(inter, ["d1", "d2"], "left")
-        .join(ca, "d1")
-        .join(cb, "d2")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.coalesce(F.col("n_inter"), F.lit(0))
-                / (F.col("n1") + F.col("n2") - F.coalesce(F.col("n_inter"), F.lit(0))),
-                4,
-            ),
-        )
-        .select("d1", "d2", "jaccard")
-    )
-
-
 # ---------------------------------------------------------------- simhash
 
 def _sim_bit_votes(h: np.ndarray, lens: np.ndarray, n_bits: int) -> np.ndarray:

@@ -53,12 +53,6 @@ def seek_predicate(start_offsets: dict[int, int]):
     return reduce(lambda a, b: a | b, clauses) | (~known)
 
 
-def stream_from_offsets(
-    spark: SparkSession, path: str, start_offsets: dict[int, int], **kw
-) -> DataFrame:
-    return stream_table(spark, path, **kw).where(seek_predicate(start_offsets))
-
-
 def bounded_tail(
     spark: SparkSession, path: str, n: int, max_offset: int | None = None
 ) -> DataFrame:

@@ -385,9 +385,6 @@ def split_streams(
     # file), so it must comfortably exceed the executor core count
     aud.repartition(files).write.mode("overwrite").parquet(audio_dir)
 
-    # single source of truth for the delay bands — write_streams_direct's
-    # row-identity to this path (tests/test_synth_direct.py) depends on
-    # both callers sharing this expression
     delay_s = _transcript_delay_col(late_pct, very_late_pct)
     tr = (
         clips.where(F.col("transcript").isNotNull())
@@ -410,94 +407,6 @@ def _transcript_delay_col(late_pct: float = 0.05, very_late_pct: float = 0.01):
     )
 
 
-def write_streams_direct(
-    spark: SparkSession,
-    audio_dir: str,
-    transcripts_dir: str,
-    n: int,
-    seed: int = DEFAULT_SEED,
-    n_partitions: int = N_INGEST_PARTITIONS,
-    files: int = 128,
-    late_pct: float = 0.05,
-    very_late_pct: float = 0.01,
-) -> tuple[str, str]:
-    """Generate the two join-side streams WITHOUT the joined clips
-    intermediate. Row-identical to write_clips + split_streams (same
-    seeded metadata, same per-``_i`` waveforms, same deterministic
-    transcript delays) — only the file layout differs, which the replay
-    source doesn't observe. The joined table for n clips is ~2x the
-    audio stream on disk; at bench sizes (1M x ~37 KB) skipping it
-    halves peak disk. This is also the honest cluster shape: a 10^12-row
-    source table is written once by the producer, never materialized
-    twice."""
-    meta = synth_metadata(n, seed, n_partitions)
-    meta_schema = T.StructType(
-        [T.StructField("_i", T.LongType(), False), *CLIPS_SCHEMA.fields[:1], *CLIPS_SCHEMA.fields[2:]]
-    )
-    audio_schema = T.StructType([f for f in CLIPS_SCHEMA.fields if f.name != "transcript"])
-
-    sdf = spark.createDataFrame(meta, schema=meta_schema)
-    # generate straight into `files` output files: parallelism = files
-    # tasks (>= 4x cores at bench sizes), no post-encode shuffle of the
-    # waveform bytes
-    aud = (
-        sdf.drop("transcript")
-        .repartition(files, "_i")
-        .mapInPandas(_encode_audio_batches(seed, audio_schema), schema=audio_schema)
-    )
-    aud.write.mode("overwrite").parquet(audio_dir)
-
-    tr = (
-        spark.createDataFrame(
-            meta[["clip_id", "transcript", "event_time"]].dropna(subset=["transcript"]),
-            schema=T.StructType(
-                [
-                    T.StructField("clip_id", T.StringType(), False),
-                    T.StructField("transcript", T.StringType(), True),
-                    T.StructField("event_time", T.TimestampType(), False),
-                ]
-            ),
-        )
-        .withColumn(
-            "event_time",
-            F.col("event_time")
-            + F.make_dt_interval(secs=_transcript_delay_col(late_pct, very_late_pct).cast("double")),
-        )
-        .repartition(files)
-    )
-    tr.write.mode("overwrite").parquet(transcripts_dir)
-    return audio_dir, transcripts_dir
-
-
-def _encode_audio_batches(seed: int, out_schema: T.StructType):
-    """mapInPandas fn: waveform bytes for the audio stream (no
-    transcript column — the fused write_streams_direct path)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_bytes = [
-                audio.encode(audio.waveform(int(i), int(sr), int(dur), seed), str(codec))
-                for i, sr, dur, codec in zip(pdf["_i"], pdf["sr_hz"], pdf["dur_ms"], pdf["codec"])
-            ]
-            pdf = pdf.assign(bytes=out_bytes)
-            yield pdf[[f.name for f in out_schema.fields]]
-
-    return fn
-
-
-# Average on-disk bytes per clip (parquet audio stream) — measured on
-# the cached bench datasets; used only for disk preflight estimates.
-BYTES_PER_CLIP = 39_000
-
-# Above this size the joined clips intermediate (~2x the audio stream)
-# is deleted once the split streams exist: at bench scale it is pure
-# disk overhead (round-4 post-mortem: an 18 GB stale intermediate +
-# regeneration of the 960k streams overflowed the driver's disk and
-# killed the bench run before any number existed). Small/test datasets
-# keep it — the pytest `clips` fixture reads it directly.
-DROP_INTERMEDIATE_MIN_N = 100_000
-
-
 def _purge_aborted(path: str) -> None:
     """Remove a dataset directory left behind by a crashed write (no
     _SUCCESS marker): it holds partial task output that wastes disk and
@@ -508,97 +417,30 @@ def _purge_aborted(path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
-def dataset_bytes_needed(root: str, n: int) -> int:
-    """Disk bytes ensure_dataset would still have to write for size n
-    (0 if the split streams are already cached)."""
-    if os.path.exists(os.path.join(root, f"transcripts_n{n}", "_SUCCESS")):
-        return 0
-    need = n * BYTES_PER_CLIP
-    if n < DROP_INTERMEDIATE_MIN_N:
-        # small/test sizes take the two-step path: the joined
-        # intermediate coexists with the audio stream until the split
-        # finishes. Bench sizes (>= DROP_INTERMEDIATE_MIN_N) use the
-        # fused writer, whose only footprint is the output itself (the
-        # pre-encode metadata shuffle is KB-scale).
-        need *= 2
-    return need
-
-
-def drop_dataset(root: str, n: int) -> None:
-    """Free every on-disk artifact of size n (the inverse of
-    ensure_dataset — bench uses it to keep only one large dataset
-    resident at a time)."""
-    import shutil
-
-    for name in (f"clips_n{n}", f"clips_audio_n{n}", f"transcripts_n{n}"):
-        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-
-
 def ensure_dataset(
     spark: SparkSession,
     root: str,
     n: int,
     seed: int = DEFAULT_SEED,
-    with_streams: bool = True,
 ) -> dict[str, str]:
-    """Idempotent: build clips (+ split streams) under root if missing."""
-    import shutil
-
+    """Idempotent: build clips + split streams under root if missing."""
     paths = {
         "clips": os.path.join(root, f"clips_n{n}"),
         "audio": os.path.join(root, f"clips_audio_n{n}"),
         "transcripts": os.path.join(root, f"transcripts_n{n}"),
     }
-    have_clips = os.path.exists(os.path.join(paths["clips"], "_SUCCESS"))
-    have_streams = os.path.exists(os.path.join(paths["transcripts"], "_SUCCESS"))
-    if with_streams and have_streams:
-        # split streams already exist — the intermediate clips table may
-        # have been deleted to reclaim disk; nothing to do
+    if os.path.exists(os.path.join(paths["transcripts"], "_SUCCESS")):
         return paths
     # aborted partial writes (no _SUCCESS) are dead weight: purge before
-    # estimating or regenerating
+    # regenerating
     for k in ("clips", "audio", "transcripts"):
         _purge_aborted(paths[k])
-    if with_streams and n >= DROP_INTERMEDIATE_MIN_N:
-        # bench sizes: a cached joined intermediate is NOT worth
-        # splitting from — split_streams repartitions the waveform
-        # bytes, so its shuffle spill alone equals the output size
-        # (round-5 post-mortem: split-from-intermediate at 480k hit
-        # ENOSPC with 25 GiB free). The fused writer regenerates
-        # waveforms with a KB-scale metadata shuffle instead; reclaim
-        # the intermediate's ~2x-audio footprint up front.
-        shutil.rmtree(paths["clips"], ignore_errors=True)
-    have_clips = os.path.exists(os.path.join(paths["clips"], "_SUCCESS"))
-    need = dataset_bytes_needed(root, n)
-    free = shutil.disk_usage(root if os.path.isdir(root) else "/").free
-    if need and free < need + 5 * 2**30:  # keep a 5 GiB safety floor
-        raise RuntimeError(
-            f"ensure_dataset(n={n}) needs ~{need / 2**30:.0f} GiB plus a 5 GiB "
-            f"floor but only {free / 2**30:.0f} GiB is free under {root} — free "
-            f"cached datasets first (hydra_spark.synth.drop_dataset(root, n) "
-            f"removes one size; stale bench sizes live in {root})"
-        )
     # file count bounds streaming scan/decode parallelism (one task
     # per file) — scale with n, cap at 128
     files = max(8, min(128, n // 2000))
-    if with_streams and not have_clips and n >= DROP_INTERMEDIATE_MIN_N:
-        # bench sizes: fused generation — skip the joined intermediate
-        # entirely (its ~2x-audio disk footprint doesn't fit next to the
-        # other cached bench datasets, and it would only be deleted after
-        # the split anyway); row-identical to the two-step path
-        # (tests/test_synth_direct.py pins parity).
-        write_streams_direct(
-            spark, paths["audio"], paths["transcripts"], n, seed, files=files
-        )
-        return paths
-    if not have_clips:
+    if not os.path.exists(os.path.join(paths["clips"], "_SUCCESS")):
         write_clips(spark, paths["clips"], n, seed)
-    if with_streams and not have_streams:
-        split_streams(spark, paths["clips"], paths["audio"], paths["transcripts"], seed, files=files)
-    if with_streams and n >= DROP_INTERMEDIATE_MIN_N:
-        # bench scale: the joined intermediate served only the split —
-        # reclaim its ~2x-audio footprint immediately
-        shutil.rmtree(paths["clips"], ignore_errors=True)
+    split_streams(spark, paths["clips"], paths["audio"], paths["transcripts"], seed, files=files)
     return paths
 
 

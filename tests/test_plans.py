@@ -9,6 +9,8 @@ degraded even though results stay correct.
 
 import contextlib
 import io
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +25,15 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def scanned_tables(plan: str) -> set[str]:
+    """Table names read by the plan's parquet scans, from each scan's
+    ``Location: InMemoryFileIndex [file:.../<table>.parquet]`` line."""
+    return {
+        os.path.basename(loc.rstrip("/")).removesuffix(".parquet")
+        for loc in re.findall(r"Location: \w+ \[([^\],]+)", plan)
+    }
 
 
 def test_seek_predicate_pushed_to_scan(spark):
@@ -257,6 +268,7 @@ def test_tpch_q15_single_fact_pass(spark):
     # each scan up to twice (tree + detail header), so >4 would mean a
     # re-scan of the fact; assert the bound, not the exact format count
     assert 0 < p.count("Scan parquet") <= 4, p
+    assert scanned_tables(p) == {"lineitem", "supplier"}, p
     assert "BroadcastHashJoin" in p and "Window" in p
     assert "GreaterThanOrEqual(l_shipdate" in p
 
@@ -294,6 +306,7 @@ def test_tpch_q21_decorrelated_single_fact_pass(spark):
     # prints each scan up to twice (tree + detail header), so >6 would
     # mean the decorrelation left a second fact scan behind
     assert 0 < p.count("Scan parquet") <= 6, p
+    assert scanned_tables(p) == {"lineitem", "orders", "supplier"}, p
     assert "BroadcastHashJoin" in p
     # status filter pushed to the orders scan
     assert "EqualTo(o_orderstatus,F)" in p

@@ -3,10 +3,9 @@
 # north-rule submission mode. Usage:
 #   tools/submit.sh <master> <audio_dir> <transcripts_dir> <out_root> [extra runner args...]
 # e.g.
-#   tools/submit.sh local[8]  .data/bench/clips_audio_n60000 .data/bench/transcripts_n60000 /tmp/run8  --bounded
-#   tools/submit.sh local[32] ...                                                           /tmp/run32 --bounded
-# On a real cluster, swap the master for yarn/k8s and size executors
-# N vs 4N; nothing else changes.
+#   tools/submit.sh local[4] .data/smoke/clips_audio_n2000 .data/smoke/transcripts_n2000 /tmp/run4 --bounded
+# (tools/smoke_flagship.py generates the .data/smoke dataset.)
+# On a real cluster, swap the master for yarn/k8s; nothing else changes.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
