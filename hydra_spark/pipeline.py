@@ -4,13 +4,14 @@ This is the end-to-end CEP job the north rule describes, assembled from
 the engine's operators. Architecture (deliberate, scale-driven):
 
   stream side, stateless prefix (runs before any state store):
-      admission checks → salted repartition by (codec, sr_hz, salt) →
-      vectorized Arrow decode — **drops the audio bytes**
+      admission checks → drop admission rejects (the side stream
+      delivers them) → vectorized Arrow decode, in place on source
+      partitions — **drops the audio bytes**
   stream side, stateful (RocksDB-backed):
       decoded clips ⋈ transcript stream — interval join, watermarked
   batch side, per micro-batch (stateless, inside foreachBatch):
-      transcript normalize → tumbling-window key → keyed MERGE +
-      quarantine + lineage + metrics in one atomic commit
+      transcript normalize → tumbling-window key → keyed insert-only
+      commit + quarantine + lineage + metrics
 
 **Decode runs BEFORE the join — this ordering is load-bearing at scale.**
 A stream-stream join buffers both inputs in the state store until the
@@ -27,7 +28,7 @@ core/src/main/scala/hydra/core/ingest/Ingestor.scala:57-92.)
 Keeping exactly ONE stateful operator in the streaming plan (the join)
 sidesteps Spark's chained-stateful-operator restrictions (SURVEY.md §7
 risk) and keeps state-store size = join state only. Cross-batch
-duplicate delivery is absorbed by the MERGE key (clip_id, window_start)
+duplicate delivery is absorbed by the sink key (clip_id, window_start)
 — idempotence replaces a second dedup state store; the standalone dedup
 operator (operators/join.dedup_within_watermark) remains available and
 tested for pipelines that need pre-join dedup.
@@ -77,65 +78,47 @@ def _transcript_schema():
     )
 
 
-def pre_join_spec(
-    num_partitions: int = 32,
-    max_bytes: int | None = 4_000_000,
-    salt: bool = True,
-    drop_rejected: bool = True,
-) -> transforms.Spec:
+def pre_join_spec(max_bytes: int | None = 4_000_000) -> transforms.Spec:
     """The flagship's stateless pre-join stage chain as a registry spec
     (the assembly the reference does through its component loader /
     record-factory lookup — RecordFactory.scala:25-30). Deployments
     extend or replace stages by name via transforms.register_stage and
-    editing this list; see tests/test_transforms.py for a custom stage
-    spliced into the chain."""
-    spec: transforms.Spec = [("admission", {"max_bytes": max_bytes})]
-    spec.append("drop_rejected" if drop_rejected else "null_rejected_payload")
-    if salt:
-        spec.append(("salt_spread", {"num_partitions": num_partitions}))
-    spec += ["decode", "tag_decode_rejects"]
-    return spec
+    editing this list — e.g. splicing in ``salt_spread`` before decode
+    when the source layout concentrates decode work by codec; see
+    tests/test_transforms.py."""
+    return [
+        ("admission", {"max_bytes": max_bytes}),
+        "drop_rejected",
+        "decode",
+        "tag_decode_rejects",
+    ]
 
 
-def pre_join_transform(
-    audio: DataFrame,
-    num_partitions: int = 32,
-    max_bytes: int | None = 4_000_000,
-    salt: bool = True,
-    drop_rejected: bool = True,
-) -> DataFrame:
+def pre_join_transform(audio: DataFrame, max_bytes: int | None = 4_000_000) -> DataFrame:
     """Stateless pre-join stage (Hydra's record-factory, run *before*
-    transport): admission checks → salted repartition → vectorized
-    decode. Drops ``bytes``; emits ``reject_reason`` (admission rule or
-    decode error — first failure wins) for the sink's quarantine split.
+    transport): admission checks → drop rejects → vectorized decode.
+    Drops ``bytes``; emits ``reject_reason`` (decode error) for the
+    sink's quarantine split.
 
-    ``drop_rejected`` (default): admission-rejected rows leave the main
-    stream here — BEFORE decode (an oversized payload must never be
-    gathered into a decode batch) and before the watermarked join (a row
-    rejected for ``timestamp-millis<=0`` has a garbage event time, so the
-    join would silently discard it as late data — exactly the rows the
-    admission rule exists to capture). They are delivered to the
-    quarantine table by the stateless side stream
-    (``start_quarantine_stream``) instead. With ``drop_rejected=False``
-    rejected rows stay in-stream for the sink's split, but their payload
-    is nulled out so decode never touches it (the admission reason still
-    wins over the resulting null-bytes decode error).
+    Admission-rejected rows leave the main stream here — BEFORE decode
+    (an oversized payload must never be gathered into a decode batch)
+    and before the watermarked join (a row rejected for
+    ``timestamp-millis<=0`` has a garbage event time, so the join would
+    silently discard it as late data — exactly the rows the admission
+    rule exists to capture). They are delivered to the quarantine table
+    by the stateless side stream (``start_quarantine_stream``) instead.
 
-    ``salt``: repartition by (codec, sr_hz, hash-salt) before decode.
-    At scale the input table is typically partitioned by codec, so
-    decode tasks would inherit the dominant-codec skew; the salt spreads
-    them. This is the one place the encoded payload crosses a shuffle —
-    after decode only ~100 B/row feature rows move.
+    Decode runs in place on source partitions: shuffling the encoded
+    payload costs a full pass of the audio bytes over the wire, decode
+    cost per sample is codec-independent, and codec-keyed aggregations
+    downstream are already skew-safe via map-side partial aggregation +
+    AQE.
 
     Assembled from the transform-stage registry (``pre_join_spec``);
     stage resolution happens here at build time, execution is still one
     Catalyst plan.
     """
-    spec = pre_join_spec(
-        num_partitions=num_partitions, max_bytes=max_bytes,
-        salt=salt, drop_rejected=drop_rejected,
-    )
-    return transforms.build_transform(spec)(audio)
+    return transforms.build_transform(pre_join_spec(max_bytes))(audio)
 
 
 def finish_batch(batch_df: DataFrame) -> DataFrame:
@@ -158,38 +141,28 @@ def start_flagship(
     out_root: str,
     files_per_trigger: int = 8,
     ack: str = "replicated",
-    num_partitions: int | None = None,
-    salt: bool = False,
     max_bytes: int | None = 4_000_000,
 ):
-    """Start the enriched-output streaming query. Returns (query, sink).
-
-    ``salt``: opt-in pre-decode salted repartition. Shuffling the encoded
-    payload costs a full pass of the audio bytes over the wire, so it
-    only pays when the SOURCE layout concentrates decode work (e.g. an
-    input table partitioned by codec). Decode cost per sample is
-    codec-independent, and codec-keyed aggregations downstream are
-    already skew-safe via map-side partial aggregation + AQE — so the
-    default pipeline decodes in place on source partitions."""
-    num_partitions = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    """Start the enriched-output streaming query. Returns (query, sink,
+    tables)."""
     t = build_tables(out_root)
     audio = stream_table(spark, audio_dir, schema=_audio_schema(), files_per_trigger=files_per_trigger)
     trs = stream_table(spark, transcripts_dir, schema=_transcript_schema(), files_per_trigger=files_per_trigger)
     # decode BEFORE the stateful join — join state must hold feature
     # rows, never audio payloads (see module docstring)
-    decoded = pre_join_transform(audio, num_partitions, max_bytes=max_bytes, salt=salt)
+    decoded = pre_join_transform(audio, max_bytes=max_bytes)
     joined = clip_transcript_join(
         decoded, trs, lo=JOIN_LO, hi=JOIN_HI, how="left_outer",
         clip_watermark=WATERMARK, transcript_watermark=WATERMARK,
     )
-    # append_dedup: the flagship output is append-only keyed by
-    # (clip_id, window_start) — insert-only commits keep per-batch cost
-    # flat as the table grows. Contract note: append_dedup is FIRST-wins
-    # across micro-batches (a key committed in batch k keeps its row if
-    # re-emitted in batch k+1 — e.g. a replayed noack publish); pipelines
-    # that need cross-batch latest-wins (late transcript updates must
-    # overwrite) use strategy="merge" (merge_upsert) instead.
-    sink = ExactlyOnceSink(t, ["clip_id", "window_start"], ack=ack, strategy="append_dedup")
+    # the flagship output is append-only keyed by (clip_id,
+    # window_start) — insert-only commits keep per-batch cost flat as
+    # the table grows. Contract note: the sink is FIRST-wins across
+    # micro-batches (a key committed in batch k keeps its row if
+    # re-emitted in batch k+1 — e.g. a replayed noack publish);
+    # cross-batch latest-wins (late transcript updates must overwrite)
+    # needs TransactionalTable.merge_upsert instead.
+    sink = ExactlyOnceSink(t, ["clip_id", "window_start"], ack=ack)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sink(finish_batch(batch_df), batch_id)

@@ -1,16 +1,12 @@
-"""spark-submit entry point — restart loop, listener metrics, CLI.
+"""The flagship's entry point — restart loop, listener metrics, CLI.
 
-The north rule requires the engine be runnable via
-``spark-submit --py-files`` on a multi-executor cluster at two cluster
-sizes. This module is that entry point:
+Runs the flagship query and its admission-reject side stream, under
+``spark-submit --py-files`` (``tools/submit.sh`` wraps the packaging;
+on a real cluster only ``--master`` changes) or directly on the host:
 
-    zip -r hydra_spark.zip hydra_spark
-    spark-submit --master local[8]  --py-files hydra_spark.zip \
-        hydra_spark/runner.py --audio ... --transcripts ... --out ...
-    spark-submit --master local[32] --py-files hydra_spark.zip ...
+    python -m hydra_spark.runner --audio ... --transcripts ... --out ... --bounded
 
-(tools/submit.sh wraps the packaging; on a real cluster only --master
-changes — e.g. yarn / k8s with N vs 4N executors.)
+Both paths take their engine settings from ``session.get_spark``.
 
 Pieces:
   * run_with_restarts — Hydra's infinite stream retry: rerun the query
@@ -33,7 +29,6 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
 
@@ -139,22 +134,17 @@ def main(argv=None) -> int:
     ap.add_argument("--max-restarts", type=int, default=-1)
     ap.add_argument("--rollup", action="store_true", help="also run the window rollup query")
     ap.add_argument(
-        "--no-quarantine-stream", action="store_true",
-        help="skip the admission-reject side stream (benchmarking only)",
-    )
-    ap.add_argument(
         "--batch-timeout-ms", type=int, default=None,
         help="flag batches slower than this in the progress feed (Hydra ingest-timeout analog)",
     )
     args = ap.parse_args(argv)
 
-    # under spark-submit the session config (master, memory, shuffle
-    # partitions) comes from the submit command line; only engine-level
-    # defaults are set here, and only if unset.
-    spark = SparkSession.builder.appName("hydra_spark_runner").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     from hydra_spark import pipeline
+    from hydra_spark.session import get_spark
+
+    # under spark-submit the master and driver memory come from the
+    # submit command; run directly, the session is sized to the host
+    spark = get_spark(app_name="hydra_spark_runner")
 
     spark.streams.addListener(
         ProgressListener(
@@ -174,15 +164,12 @@ def main(argv=None) -> int:
         rq, _ = pipeline.start_window_rollup(spark, args.audio, args.out, args.files_per_trigger)
         queries.append(rq)
 
-    if not args.no_quarantine_stream:
-        # dead-letter delivery: admission rejects leave the main stream
-        # pre-join (a ts-invalid row would be watermark-dropped there),
-        # so the stateless side stream MUST run alongside the flagship
-        # or RecordTooLarge/InvalidLogicalType rows are silently lost
-        qq, _ = pipeline.start_quarantine_stream(
-            spark, args.audio, args.out, args.files_per_trigger
-        )
-        queries.append(qq)
+    # dead-letter delivery: admission rejects leave the main stream
+    # pre-join (a ts-invalid row would be watermark-dropped there), so
+    # the stateless side stream MUST run alongside the flagship or
+    # RecordTooLarge/InvalidLogicalType rows are silently lost
+    qq, _ = pipeline.start_quarantine_stream(spark, args.audio, args.out, args.files_per_trigger)
+    queries.append(qq)
 
     tables, restarts = run_with_restarts(
         start_flagship, max_restarts=args.max_restarts, bounded=args.bounded

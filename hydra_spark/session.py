@@ -1,11 +1,13 @@
-"""SparkSession factory for the engine.
+"""SparkSession factory for the engine — the one home of its settings.
 
-Local sandbox runs on local[N] (single JVM); on a real cluster the same
-builder config applies unchanged except master/memory. Every knob here
-scales with `cores` so the local[8] vs local[32] scaling-efficiency
-measurement (BASELINE.md) is apples-to-apples: shuffle partitions,
-state-store partitions and source partitioning all track parallelism —
-no fixed-width stage that would flatten the scaling curve.
+``get_spark`` applies ``ENGINE_CONF`` on both entry paths:
+
+  * in-process (tests, perfbench, tools): a ``local[cores]`` session
+    sized to the host — ``cores`` defaults to ``SPARK_GRAFT_CPUS``, else
+    every core, and shuffle partitions track it;
+  * under ``spark-submit`` (``runner.main`` via ``tools/submit.sh``): the
+    submit command's master and driver memory win, and shuffle
+    partitions track the session's default parallelism.
 """
 
 from __future__ import annotations
@@ -17,6 +19,39 @@ from pyspark.sql import SparkSession
 # RocksDB-backed state store: state spills to disk instead of growing the
 # JVM heap — required posture for 10^12-key state at cluster scale.
 ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+ENGINE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # audio rows carry ~10-60 KB binary payloads; cap Arrow batch rows
+    # so a decode batch stays ~10-60 MB, not 10k-row default x 60 KB.
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "1024",
+    "spark.sql.streaming.stateStore.providerClass": ROCKSDB,
+    # incremental (changelog) state checkpoints: upload per-batch
+    # deltas, not a full RocksDB snapshot per store per batch
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    # per-op row counting in RocksDB costs a get per put; metrics
+    # come from the listener instead
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
+    "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "true",
+    "spark.sql.parquet.compression.codec": "zstd",
+    # INT64 micros, not legacy INT96: INT96 timestamps carry NO
+    # parquet column stats, which blinds manifest-level file
+    # skipping (tables.plan_files) to every time-range predicate —
+    # and Iceberg spec forbids INT96 anyway.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # local FS: driver-side file listing is microseconds; the default
+    # threshold (32 paths) launches a 128-task listing job per stream
+    # start — pure scheduling overhead here. On object storage with
+    # 10^5+ files per table, drop this back to the default so listing
+    # distributes.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "10000",
+    "spark.ui.enabled": "false",
+    "spark.driver.maxResultSize": "4g",
+}
 
 
 def _set_allocator_env() -> None:
@@ -60,50 +95,23 @@ def get_spark(
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = repo_root + (os.pathsep + pp if pp else "")
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        # at cluster scale: 2-3x total executor cores; locally: = cores
-        shuffle_partitions = cores
 
-    b = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", driver_memory)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # audio rows carry ~10-60 KB binary payloads; cap Arrow batch rows
-        # so a decode batch stays ~10-60 MB, not 10k-row default x 60 KB.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
-        # incremental (changelog) state checkpoints: upload per-batch
-        # deltas, not a full RocksDB snapshot per store per batch
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-        # per-op row counting in RocksDB costs a get per put; metrics
-        # come from the listener instead
-        .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # INT64 micros, not legacy INT96: INT96 timestamps carry NO
-        # parquet column stats, which blinds manifest-level file
-        # skipping (tables.plan_files) to every time-range predicate —
-        # and Iceberg spec forbids INT96 anyway.
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        # local FS: driver-side file listing is microseconds; the default
-        # threshold (32 paths) launches a 128-task listing job per stream
-        # start — pure scheduling overhead here. On object storage with
-        # 10^5+ files per table, drop this back to the default so listing
-        # distributes.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.maxResultSize", "4g")
-    )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    # spark-submit starts the JVM first and hands its port to Python
+    # (pyspark/java_gateway.py joins it instead of launching one)
+    submitted = "PYSPARK_GATEWAY_PORT" in os.environ
+    b = SparkSession.builder.appName(app_name)
+    if not submitted:
+        if cores is None:
+            cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+        b = b.master(f"local[{cores}]").config(
+            map={
+                "spark.sql.shuffle.partitions": str(shuffle_partitions or cores),
+                "spark.driver.memory": driver_memory,
+            }
+        )
+    spark = b.config(map={**ENGINE_CONF, **(extra_conf or {})}).getOrCreate()
+    if submitted and not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
+        parallelism = shuffle_partitions or spark.sparkContext.defaultParallelism
+        spark.conf.set("spark.sql.shuffle.partitions", str(parallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark

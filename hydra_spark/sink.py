@@ -3,19 +3,21 @@
 Hydra's transport dispatches on AckStrategy — NoAck (fire-and-forget),
 Persisted (journaled locally), Replicated (wait for broker ack)
 (reference: core/src/main/scala/hydra/core/transport/AckStrategy.scala:35-45,
-Transport.scala:51-83). The Spark mapping (SURVEY.md §2.4 K1):
+Transport.scala:51-83). The Spark mapping (SURVEY.md §2.4 K1): every
+mode commits the output through ``TransactionalTable.append_dedup``
+(keyed insert-only, first-wins) and writes quarantine + metrics rows;
+the modes differ only in the commit id and in lineage:
 
-  * noack      — blind append, no idempotence bookkeeping (fastest,
-                 at-most-once under replay races)
-  * persisted  — append with batch-id idempotent file naming
-                 (at-least-once input -> no double-append)
-  * replicated — keyed MERGE + lineage + metrics committed atomically
-                 per micro-batch (exactly-once; the default, and the
-                 mode all correctness gates use)
+  * noack      — a fresh commit id per call: a replayed batch commits
+                 again, and only the key dedup keeps the output
+                 key-unique
+  * persisted  — commit id = batch_id: a replayed batch is a no-op
+  * replicated — persisted + per-partition offset lineage rows (the
+                 default, and the mode all correctness gates use)
 
 Structured Streaming replays uncommitted batches after failure
 (at-least-once, the analog of Hydra's AtLeastOnceDelivery redelivery,
-Transport.scala:13-49); the batch_id-keyed MERGE makes the replay a
+Transport.scala:13-49); the batch_id-keyed commit makes the replay a
 no-op — together: exactly-once.
 
 Determinism note (SURVEY.md §7): nothing in this path calls
@@ -33,45 +35,23 @@ from pyspark.sql import DataFrame, functions as F
 
 from hydra_spark.operators.state import latest_wins_hash
 
+# within-batch latest-wins order column
+TS_COL = "event_time"
+# ingest partitions are 0..LINEAGE_PARTITIONS-1 (synth layout); lineage
+# aggregates ride the write job as per-partition conditional observe()
+# metrics — ids outside the range would not be tracked
+LINEAGE_PARTITIONS = 32
+
 
 class ExactlyOnceSink:
     """foreachBatch callable. Writes output + quarantine + lineage +
     metrics for each micro-batch, idempotent per batch_id."""
 
-    def __init__(
-        self,
-        tables: dict,
-        key_cols: list[str],
-        ack: str = "replicated",
-        ts_col: str = "event_time",
-        has_lineage_cols: bool = True,
-        strategy: str = "merge",
-        lineage_partitions: int = 32,
-        commit_offsets: bool = True,
-    ):
+    def __init__(self, tables: dict, key_cols: list[str], ack: str = "replicated"):
         assert ack in ("noack", "persisted", "replicated")
-        assert strategy in ("merge", "append_dedup")
         self.tables = tables
         self.key_cols = key_cols
         self.ack = ack
-        self.ts_col = ts_col
-        self.has_lineage_cols = has_lineage_cols
-        # merge = copy-on-write upsert (latest-wins, tombstones);
-        # append_dedup = insert-only keyed append (streaming fast path,
-        # commit cost stays flat as the table grows)
-        self.strategy = strategy
-        # ingest partitions are 0..lineage_partitions-1 (synth layout);
-        # lineage aggregates ride the write job as per-partition
-        # conditional observe() metrics — ids outside the range would
-        # not be tracked
-        self.lineage_partitions = lineage_partitions
-        # L3 per-run offset-commit toggle (Hydra's consumer commit flag,
-        # KafkaClientAlgebra.scala:370-376): False skips the lineage
-        # (offset-checkpoint) table writes entirely — Spark's own query
-        # checkpoint still provides resume, exactly like a Kafka consumer
-        # running with auto-commit off and externally-managed offsets.
-        self.commit_offsets = commit_offsets
-        self.batches_seen: list = []
 
     @classmethod
     def for_existing(cls, root: str, key_cols: list[str], **kw) -> "ExactlyOnceSink":
@@ -89,15 +69,6 @@ class ExactlyOnceSink:
         if not os.path.exists(os.path.join(out_path, "CURRENT")):
             raise TableNotFoundError(f"output table not bootstrapped at {out_path}")
         return cls(tbl.bootstrap(root, key_cols), key_cols, **kw)
-
-    def _commit(self, spark, df: DataFrame, batch_id) -> bool:
-        if self.strategy == "append_dedup":
-            # preclustered: the latest_wins_hash groupBy just shuffled the
-            # batch by exactly the key columns, so every bucket's rows are
-            # already co-located — the table skips its pre-write
-            # repartition (one shuffle per batch, not two)
-            return self.tables["output"].append_dedup(spark, df, batch_id, preclustered=True)
-        return self.tables["output"].merge_upsert(spark, df, batch_id)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Observation
@@ -127,17 +98,12 @@ class ExactlyOnceSink:
             else batch_df
         )
 
-        track_lineage = (
-            self.ack == "replicated"
-            and self.commit_offsets
-            and self.has_lineage_cols
-            and "ingest_partition" in good.columns
-        )
+        track_lineage = self.ack == "replicated" and "ingest_partition" in good.columns
         lin_obs = None
         if track_lineage:
             lin_obs = Observation(f"lineage-{batch_id}")
             aggs = []
-            for p in range(self.lineage_partitions):
+            for p in range(LINEAGE_PARTITIONS):
                 off = F.when(F.col("ingest_partition") == p, F.col("ingest_offset"))
                 aggs += [
                     F.min(off).alias(f"lo{p}"),
@@ -147,73 +113,66 @@ class ExactlyOnceSink:
             good = good.observe(lin_obs, *aggs)
 
         # within-batch latest-wins on the sink key (caller may have
-        # already deduped; this makes MERGE input key-unique).
+        # already deduped; this makes the commit input key-unique).
         # hash-agg (max_by), not window sort — see latest_wins_hash
-        order_cols = [self.ts_col] + (
+        order_cols = [TS_COL] + (
             ["transcript_time"] if "transcript_time" in good.columns else []
         )
         deduped = latest_wins_hash(good, self.key_cols, order_cols)
-        if self.strategy == "merge":
-            # merge_upsert runs two actions (bucket discovery + write);
-            # cache the deduped input so upstream runs once
-            deduped = deduped.persist()
 
-        try:
-            committed = True
-            if self.ack == "noack":
-                # fire-and-forget append (RecordAccepted immediately)
-                self._commit(spark, deduped, f"noack-{batch_id}-{time.time_ns()}")
-            else:  # persisted / replicated
-                committed = self._commit(spark, deduped, batch_id)
+        # noack: fire-and-forget append (RecordAccepted immediately);
+        # persisted / replicated: batch_id-idempotent commit
+        commit_id = f"noack-{batch_id}-{time.time_ns()}" if self.ack == "noack" else batch_id
+        # preclustered: the latest_wins_hash groupBy just shuffled the
+        # batch by exactly the key columns, so every bucket's rows are
+        # already co-located — the table skips its pre-write
+        # repartition (one shuffle per batch, not two)
+        committed = self.tables["output"].append_dedup(spark, deduped, commit_id, preclustered=True)
 
-            if not committed:
-                # replayed batch: the table commit is a no-op, but the
-                # micro-batch's state stores (join state, watermarks)
-                # still must process and commit every partition — drain
-                # the batch through a noop write or Spark's state-store
-                # commit validation fails the query on resume
-                batch_df.write.format("noop").mode("overwrite").save()
+        if not committed:
+            # replayed batch: the table commit is a no-op, but the
+            # micro-batch's state stores (join state, watermarks)
+            # still must process and commit every partition — drain
+            # the batch through a noop write or Spark's state-store
+            # commit validation fails the query on resume
+            batch_df.write.format("noop").mode("overwrite").save()
+            return
 
-            got = obs.get if committed else {"n_in": 0, "n_quar": 0}
-            n_in, n_quar = int(got["n_in"] or 0), int(got["n_quar"] or 0)
-            if n_quar and committed:
-                # executor-side write: a bad codec can quarantine a whole
-                # batch, which must never be collected to the driver.
-                # Recomputing the rare path is safe (state-store versions
-                # make micro-batch re-execution deterministic).
-                quar = batch_df.where(F.col("reject_reason").isNotNull())
-                qcols = [c for c in quar.columns if c not in ("bytes", "pcm")]
-                self.tables["quarantine"].append_df(quar.select(*qcols), batch_id)
-            if track_lineage and committed:
-                lrows = self._lineage_rows(lin_obs.get, batch_id)
-                if len(lrows):
-                    self.tables["lineage"].append_pandas(lrows, batch_id)
+        got = obs.get
+        n_in, n_quar = int(got["n_in"] or 0), int(got["n_quar"] or 0)
+        if n_quar:
+            # executor-side write: a bad codec can quarantine a whole
+            # batch, which must never be collected to the driver.
+            # Recomputing the rare path is safe (state-store versions
+            # make micro-batch re-execution deterministic).
+            quar = batch_df.where(F.col("reject_reason").isNotNull())
+            qcols = [c for c in quar.columns if c not in ("bytes", "pcm")]
+            self.tables["quarantine"].append_df(quar.select(*qcols), batch_id)
+        if track_lineage:
+            lrows = self._lineage_rows(lin_obs.get, batch_id)
+            if len(lrows):
+                self.tables["lineage"].append_pandas(lrows, batch_id)
 
-            if committed:
-                mrow = pd.DataFrame(
-                    [
-                        {
-                            "batch_id": int(batch_id),
-                            "rows_in": int(n_in),
-                            "rows_quarantined": int(n_quar),
-                            "ack": self.ack,
-                            "commit_wall_s": time.time() - t0,
-                            "committed_at_unix": time.time(),  # _metrics only
-                        }
-                    ]
-                )
-                self.tables["metrics"].append_pandas(mrow, batch_id)
-            self.batches_seen.append(batch_id)
-        finally:
-            if self.strategy == "merge":
-                deduped.unpersist()
+        mrow = pd.DataFrame(
+            [
+                {
+                    "batch_id": int(batch_id),
+                    "rows_in": int(n_in),
+                    "rows_quarantined": int(n_quar),
+                    "ack": self.ack,
+                    "commit_wall_s": time.time() - t0,
+                    "committed_at_unix": time.time(),  # _metrics only
+                }
+            ]
+        )
+        self.tables["metrics"].append_pandas(mrow, batch_id)
 
     def _lineage_rows(self, got: dict, batch_id) -> pd.DataFrame:
         """observe() metrics -> (partition, start, end, rows) lineage rows
         (Hydra's per-partition offset checkpoint records,
         ConsumerGroupsOffsetConsumer.processRecord :103-145)."""
         rows = []
-        for p in range(self.lineage_partitions):
+        for p in range(LINEAGE_PARTITIONS):
             n = int(got.get(f"n{p}") or 0)
             if n:
                 rows.append(

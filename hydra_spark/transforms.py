@@ -112,14 +112,6 @@ def _drop_rejected(df: DataFrame) -> DataFrame:
     return df.where(F.col("reject_reason").isNull())
 
 
-@register_stage("null_rejected_payload")
-def _null_rejected_payload(df: DataFrame) -> DataFrame:
-    # keep rejected rows in-stream but never let decode touch their bytes
-    return df.withColumn(
-        "bytes", F.when(F.col("reject_reason").isNull(), F.col("bytes"))
-    )
-
-
 @register_stage("salt_spread")
 def _salt_spread(df: DataFrame, num_partitions: int = 32) -> DataFrame:
     from hydra_spark.operators.skew import salted_repartition

@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 
 from tests.conftest import flush_sentinels
 
-RUNNER = ["/root/.pyenv/versions/3.11.7/bin/python", "/root/repo/tools/run_flagship.py"]
+RUNNER = [sys.executable, "-m", "hydra_spark.runner"]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _prepare_streams(spark, dataset, tag):
@@ -43,8 +44,8 @@ def _current_version(out_root):
 def _run(aud, trs, out, wait=True):
     p = subprocess.Popen(
         RUNNER + ["--audio", aud, "--transcripts", trs, "--out", out,
-                  "--cores", "8", "--files-per-trigger", "4"],
-        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+                  "--files-per-trigger", "4", "--bounded"],
+        cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
     )
     if wait:
         out_b, _ = p.communicate(timeout=420)

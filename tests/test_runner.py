@@ -8,11 +8,13 @@ resumes from the checkpoint without loss or duplication (Transport.scala
 AtLeastOnceDelivery + our idempotent sink).
 """
 
+import glob
 import json
 import os
 import subprocess
 import sys
 
+import pyarrow.parquet as pq
 import pytest
 
 sys.path.insert(0, "/root/repo")
@@ -96,6 +98,18 @@ def test_spark_submit_py_files(dataset, tmp_path):
     assert any(p["event"] == "progress" and p["num_input_rows"] > 0 for p in progress)
     # per-partition lineage rows written by the same commits
     assert os.path.isdir(os.path.join(out, "_lineage"))
+    # the engine settings of session.get_spark reach the submit path:
+    # changelog state checkpoints and zstd output files
+    state = glob.glob(os.path.join(out, "_checkpoint", "state", "**", "*.changelog"), recursive=True)
+    assert state, "join state holds no changelog checkpoints"
+    files = glob.glob(os.path.join(out, "output", "data", "**", "*.parquet"), recursive=True)
+    codecs = {
+        meta.row_group(g).column(c).compression
+        for meta in (pq.ParquetFile(f).metadata for f in files)
+        for g in range(meta.num_row_groups)
+        for c in range(meta.num_columns)
+    }
+    assert codecs == {"ZSTD"}, codecs
 
 
 def test_progress_listener_batch_timeout_flag(tmp_path):

@@ -6,6 +6,7 @@ ConsumerGroupsAlgebra.scala:254-303, + idempotent keyed publish).
 """
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from hydra_spark.tables import TransactionalTable
@@ -60,20 +61,29 @@ def test_snapshot_isolation_versions(spark, tmp_path):
     assert 0 in t.committed_batches()
 
 
-def test_commit_offsets_toggle(spark, tmp_path, clips):
-    """L3 offset-commit flag analog (KafkaClientAlgebra.scala:370-376):
-    commit_offsets=False skips the lineage (offset-checkpoint) writes;
-    output and metrics are unaffected."""
+@pytest.mark.parametrize("ack", ["noack", "persisted", "replicated"])
+def test_ack_modes(spark, tmp_path, clips, ack):
+    """Hydra ack strategies (AckStrategy.scala:35-45): every mode writes
+    the output and a metrics row; only replicated writes per-partition
+    offset lineage. A replayed batch_id is a no-op for persisted and
+    replicated; noack commits again, and the key dedup keeps its output
+    key-unique."""
     from hydra_spark import tables as tbl
     from hydra_spark.sink import ExactlyOnceSink
 
     batch = clips.limit(200).select(
         "clip_id", "codec", "event_time", "ingest_partition", "ingest_offset"
     )
-    for flag in (True, False):
-        t = tbl.bootstrap(str(tmp_path / f"co_{flag}"), ["clip_id"])
-        sink = ExactlyOnceSink(t, ["clip_id"], commit_offsets=flag)
-        sink(batch, 0)
-        assert t["output"].read(spark).count() == 200
-        assert not t["metrics"].is_empty()
-        assert t["lineage"].is_empty() is (not flag)
+    t = tbl.bootstrap(str(tmp_path / ack), ["clip_id"])
+    sink = ExactlyOnceSink(t, ["clip_id"], ack=ack)
+    sink(batch, 0)
+    assert t["output"].read(spark).count() == 200
+    assert t["metrics"].read(spark).count() == 1
+    assert t["lineage"].is_empty() is (ack != "replicated")
+
+    version = t["output"].manifest()["version"]
+    sink(batch, 0)  # replay
+    out = t["output"].read(spark)
+    assert out.count() == 200
+    assert out.select("clip_id").distinct().count() == 200
+    assert t["output"].manifest()["version"] == version + (ack == "noack")

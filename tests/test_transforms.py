@@ -44,7 +44,7 @@ def test_custom_stage_spliced_into_flagship_chain(spark, clips):
         lambda d, lang="en": d.withColumn("lang", F.lit(lang)),
         replace=True,
     )
-    spec = pre_join_spec(num_partitions=4, salt=False)
+    spec = pre_join_spec()
     spec.insert(1, ("test_lang_tag", {"lang": "sv"}))
     out = transforms.build_transform(spec)(clips.limit(50))
     rows = out.collect()
@@ -55,9 +55,12 @@ def test_custom_stage_spliced_into_flagship_chain(spark, clips):
 
 def test_flagship_specs_resolve():
     """Every stage name the flagship's default specs reference exists in
-    the registry (build_transform resolves at build time)."""
+    the registry (build_transform resolves at build time), and so does
+    the salted repartition a deployment splices in before decode."""
     transforms.build_transform(pre_join_spec())
-    transforms.build_transform(pre_join_spec(salt=True, drop_rejected=False))
+    spec = pre_join_spec()
+    spec.insert(spec.index("decode"), ("salt_spread", {"num_partitions": 4}))
+    transforms.build_transform(spec)
     assert {"admission", "decode", "window_key"} <= set(transforms.stage_names())
 
 

@@ -16,7 +16,7 @@ from hydra_spark import synth, pipeline  # noqa: E402
 
 
 def main() -> None:
-    spark = get_spark(cores=8)
+    spark = get_spark()
     root = "/root/repo/.data/smoke"
     paths = synth.ensure_dataset(spark, root, n=2000)
     out_root = os.path.join(root, "out")

@@ -6,6 +6,8 @@
 #   tools/submit.sh local[4] .data/smoke/clips_audio_n2000 .data/smoke/transcripts_n2000 /tmp/run4 --bounded
 # (tools/smoke_flagship.py generates the .data/smoke dataset.)
 # On a real cluster, swap the master for yarn/k8s; nothing else changes.
+# Only deployment settings live here: the engine settings come from
+# hydra_spark/session.py, which runner.main applies.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -15,11 +17,10 @@ ZIP=/tmp/hydra_spark_pkg.zip
 rm -f "$ZIP"
 zip -qr "$ZIP" hydra_spark -x '*__pycache__*'
 
-CORES=$(echo "$MASTER" | grep -oE '[0-9]+' | head -1 || echo 32)
-
 # allocator tunables for the Python decode workers (see
 # hydra_spark/session.py:_set_allocator_env) — exported for local mode,
-# spark.executorEnv.* for cluster executors
+# spark.executorEnv.* for cluster executors; both must exist before the
+# JVM starts
 export MALLOC_MMAP_THRESHOLD_=1073741824 MALLOC_TRIM_THRESHOLD_=1073741824
 export MALLOC_TOP_PAD_=67108864 MALLOC_ARENA_MAX=2
 
@@ -30,13 +31,6 @@ exec spark-submit \
   --conf spark.executorEnv.MALLOC_TOP_PAD_=67108864 \
   --conf spark.executorEnv.MALLOC_ARENA_MAX=2 \
   --py-files "$ZIP" \
-  --conf spark.sql.shuffle.partitions="${CORES}" \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.sql.session.timeZone=UTC \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.execution.arrow.maxRecordsPerBatch=1024 \
-  --conf spark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider \
   --conf spark.driver.memory=32g \
-  --conf spark.ui.enabled=false \
   hydra_spark/runner.py \
   --audio "$AUDIO" --transcripts "$TRS" --out "$OUT" "$@"
