@@ -38,37 +38,20 @@ class StateFormatError(RuntimeError):
     """Checkpoint was written under an incompatible custom-state layout."""
 
 
-def pin_state_format(
-    checkpoint_dir: str,
-    version: int = STATE_FORMAT_VERSION,
-    holds_custom_state: bool = True,
-) -> None:
+def pin_state_format(checkpoint_dir: str, version: int = STATE_FORMAT_VERSION) -> None:
     """Record / verify the custom-state layout version of a checkpoint.
 
-    Call before (re)starting any streaming query, passing
-    ``holds_custom_state=True`` iff the query's checkpoint holds
+    Call before (re)starting any streaming query whose checkpoint holds
     applyInPandasWithState state (latest_wins_stream,
     sequence_matches_stream). First start writes a marker file; a
     resume under a different layout version raises StateFormatError
     instead of letting same-physical-type state (e.g. the v1 ms -> v2 us
     change) be silently reinterpreted. Spark validates state *schema*
     on resume, but not semantics — this marker covers the gap.
-
-    ``holds_custom_state=False`` (e.g. the flagship, whose only stateful
-    operator is the built-in stream-stream join — its layout is Spark's,
-    not ours) still stamps the marker for forward tracking but accepts
-    unmarked pre-existing checkpoints: there is no custom state to
-    misread, so refusing them would discard stream progress for nothing.
     """
     os.makedirs(checkpoint_dir, exist_ok=True)
     marker = os.path.join(checkpoint_dir, "_hydra_state_format.json")
     if os.path.exists(marker):
-        if not holds_custom_state:
-            # no custom state in this checkpoint -> no layout to
-            # misread; a version-bump for the applyInPandasWithState
-            # ops must not refuse resumes of queries that never held
-            # such state (the marker stays as written)
-            return
         with open(marker) as f:
             found = json.load(f).get("state_format_version")
         if found != version:
@@ -81,7 +64,7 @@ def pin_state_format(
     # state: it predates version markers (= v1) — stamping it with the
     # CURRENT version here would be exactly the silent reinterpretation
     # this function exists to prevent
-    if holds_custom_state and os.path.exists(os.path.join(checkpoint_dir, "offsets")):
+    if os.path.exists(os.path.join(checkpoint_dir, "offsets")):
         raise StateFormatError(
             f"checkpoint {checkpoint_dir} predates state-format markers (assumed v1), "
             f"engine expects v{version}; start from a fresh checkpoint"

@@ -10,8 +10,10 @@ the engine's operators. Architecture (deliberate, scale-driven):
   stream side, stateful (RocksDB-backed):
       decoded clips ⋈ transcript stream — interval join, watermarked
   batch side, per micro-batch (stateless, inside foreachBatch):
-      transcript normalize → tumbling-window key → keyed insert-only
-      commit + quarantine + lineage + metrics
+      transcript normalize → tumbling-window key → one cached pass:
+      keyed insert-only output commit (the batch's commit point), then
+      quarantine + lineage + metrics rows, rewritten by batch id on a
+      replay
 
 **Decode runs BEFORE the join — this ordering is load-bearing at scale.**
 A stream-stream join buffers both inputs in the state store until the
@@ -167,14 +169,6 @@ def start_flagship(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sink(finish_batch(batch_df), batch_id)
 
-    # stamp the state-format marker. holds_custom_state=False: the
-    # flagship's only stateful operator is the built-in stream-stream
-    # join (Spark's layout, not ours), so unmarked pre-existing
-    # checkpoints remain resumable; queries using the
-    # applyInPandasWithState ops pass True (see operators/state.py)
-    from hydra_spark.operators.state import pin_state_format
-
-    pin_state_format(os.path.join(out_root, "_checkpoint"), holds_custom_state=False)
     q = (
         joined.writeStream.foreachBatch(process)
         .option("checkpointLocation", os.path.join(out_root, "_checkpoint"))

@@ -11,14 +11,22 @@ the modes differ only in the commit id and in lineage:
   * noack      — a fresh commit id per call: a replayed batch commits
                  again, and only the key dedup keeps the output
                  key-unique
-  * persisted  — commit id = batch_id: a replayed batch is a no-op
+  * persisted  — commit id = batch_id: a replayed batch's output commit
+                 is a no-op
   * replicated — persisted + per-partition offset lineage rows (the
                  default, and the mode all correctness gates use)
 
-Structured Streaming replays uncommitted batches after failure
-(at-least-once, the analog of Hydra's AtLeastOnceDelivery redelivery,
-Transport.scala:13-49); the batch_id-keyed commit makes the replay a
-no-op — together: exactly-once.
+Each micro-batch is computed once (Spark's foreachBatch pattern for
+writing one batch several times): the sink persists the batch, one
+aggregate over it runs the upstream plan and yields the row counts and
+per-partition lineage, and every write then reads the cache.
+
+The output manifest swap is the batch's only commit point. Structured
+Streaming replays an uncommitted batch after failure (at-least-once,
+the analog of Hydra's AtLeastOnceDelivery redelivery,
+Transport.scala:13-49): the batch_id-keyed output commit is then a
+no-op and the side rows are rewritten by batch id, so a crash after the
+output commit loses nothing — together, exactly-once.
 
 Determinism note (SURVEY.md §7): nothing in this path calls
 current_timestamp(); processing-time fields live only in _metrics.
@@ -37,10 +45,6 @@ from hydra_spark.operators.state import latest_wins_hash
 
 # within-batch latest-wins order column
 TS_COL = "event_time"
-# ingest partitions are 0..LINEAGE_PARTITIONS-1 (synth layout); lineage
-# aggregates ride the write job as per-partition conditional observe()
-# metrics — ids outside the range would not be tracked
-LINEAGE_PARTITIONS = 32
 
 
 class ExactlyOnceSink:
@@ -71,117 +75,76 @@ class ExactlyOnceSink:
         return cls(tbl.bootstrap(root, key_cols), key_cols, **kw)
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
         t0 = time.time()
         spark = batch_df.sparkSession
         has_reject = "reject_reason" in batch_df.columns
-        # Single-action design: the table write is the ONE Spark job per
-        # micro-batch. Row counts AND per-partition offset lineage ride
-        # that job as observe() metrics — no persist(), no cache
-        # materialization, no extra passes. (Quarantine extraction, the
-        # rare path, recomputes; state-store versions make re-execution
-        # of a micro-batch plan safe.)
-        obs = Observation(f"sink-{batch_id}")
-        batch_df = batch_df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_in"),
-            (
-                F.sum(F.col("reject_reason").isNotNull().cast("long")).alias("n_quar")
-                if has_reject
-                else F.lit(0).alias("n_quar")
-            ),
-        )
-        good = (
-            batch_df.where(F.col("reject_reason").isNull()).drop("reject_reason")
-            if has_reject
-            else batch_df
-        )
-
-        track_lineage = self.ack == "replicated" and "ingest_partition" in good.columns
-        lin_obs = None
-        if track_lineage:
-            lin_obs = Observation(f"lineage-{batch_id}")
-            aggs = []
-            for p in range(LINEAGE_PARTITIONS):
-                off = F.when(F.col("ingest_partition") == p, F.col("ingest_offset"))
+        track_lineage = self.ack == "replicated" and "ingest_partition" in batch_df.columns
+        batch_df = batch_df.persist()
+        try:
+            # the batch's one pass over the upstream plan: fills the cache
+            # and commits the micro-batch's state stores, also on a replay.
+            # Counts and per-partition offset lineage (Hydra's offset
+            # checkpoints, ConsumerGroupsOffsetConsumer.processRecord
+            # :103-145) come from this one groupBy.
+            good_row = F.col("reject_reason").isNull() if has_reject else F.lit(True)
+            aggs = [F.count(F.lit(1)).alias("n_in"), F.sum((~good_row).cast("long")).alias("n_quar")]
+            if track_lineage:
+                off = F.when(good_row, F.col("ingest_offset"))
                 aggs += [
-                    F.min(off).alias(f"lo{p}"),
-                    F.max(off).alias(f"hi{p}"),
-                    F.count(off).alias(f"n{p}"),
+                    F.min(off).alias("start_offset"),
+                    F.max(off).alias("end_offset"),
+                    F.count(off).alias("rows"),
                 ]
-            good = good.observe(lin_obs, *aggs)
+            keys = ["ingest_partition"] if track_lineage else []
+            groups = batch_df.groupBy(*keys).agg(*aggs).collect()
+            n_in = sum(g.n_in for g in groups)
+            n_quar = sum(g.n_quar or 0 for g in groups)
 
-        # within-batch latest-wins on the sink key (caller may have
-        # already deduped; this makes the commit input key-unique).
-        # hash-agg (max_by), not window sort — see latest_wins_hash
-        order_cols = [TS_COL] + (
-            ["transcript_time"] if "transcript_time" in good.columns else []
-        )
-        deduped = latest_wins_hash(good, self.key_cols, order_cols)
+            good = batch_df.where(good_row).drop("reject_reason") if has_reject else batch_df
+            # within-batch latest-wins on the sink key (caller may have
+            # already deduped; this makes the commit input key-unique).
+            # hash-agg (max_by), not window sort — see latest_wins_hash
+            order_cols = [TS_COL] + (
+                ["transcript_time"] if "transcript_time" in good.columns else []
+            )
+            deduped = latest_wins_hash(good, self.key_cols, order_cols)
 
-        # noack: fire-and-forget append (RecordAccepted immediately);
-        # persisted / replicated: batch_id-idempotent commit
-        commit_id = f"noack-{batch_id}-{time.time_ns()}" if self.ack == "noack" else batch_id
-        # preclustered: the latest_wins_hash groupBy just shuffled the
-        # batch by exactly the key columns, so every bucket's rows are
-        # already co-located — the table skips its pre-write
-        # repartition (one shuffle per batch, not two)
-        committed = self.tables["output"].append_dedup(spark, deduped, commit_id, preclustered=True)
+            # noack: fire-and-forget append (RecordAccepted immediately);
+            # persisted / replicated: batch_id-idempotent commit
+            commit_id = f"noack-{batch_id}-{time.time_ns()}" if self.ack == "noack" else batch_id
+            # preclustered: the latest_wins_hash groupBy just shuffled the
+            # batch by exactly the key columns, so every bucket's rows are
+            # already co-located — the table skips its pre-write
+            # repartition (one shuffle per batch, not two)
+            self.tables["output"].append_dedup(spark, deduped, commit_id, preclustered=True)
 
-        if not committed:
-            # replayed batch: the table commit is a no-op, but the
-            # micro-batch's state stores (join state, watermarks)
-            # still must process and commit every partition — drain
-            # the batch through a noop write or Spark's state-store
-            # commit validation fails the query on resume
-            batch_df.write.format("noop").mode("overwrite").save()
-            return
-
-        got = obs.get
-        n_in, n_quar = int(got["n_in"] or 0), int(got["n_quar"] or 0)
-        if n_quar:
-            # executor-side write: a bad codec can quarantine a whole
-            # batch, which must never be collected to the driver.
-            # Recomputing the rare path is safe (state-store versions
-            # make micro-batch re-execution deterministic).
-            quar = batch_df.where(F.col("reject_reason").isNotNull())
-            qcols = [c for c in quar.columns if c not in ("bytes", "pcm")]
-            self.tables["quarantine"].append_df(quar.select(*qcols), batch_id)
-        if track_lineage:
-            lrows = self._lineage_rows(lin_obs.get, batch_id)
+            # side rows are rewritten under the batch id whether or not
+            # the output commit was a replay's no-op
+            if n_quar:
+                # executor-side write: a bad codec can quarantine a whole
+                # batch, which must never be collected to the driver
+                quar = batch_df.where(~good_row)
+                qcols = [c for c in quar.columns if c not in ("bytes", "pcm")]
+                self.tables["quarantine"].append_df(quar.select(*qcols), batch_id)
+            lrows = pd.DataFrame(
+                [
+                    (g.ingest_partition, g.start_offset, g.end_offset, g.rows, batch_id)
+                    for g in groups
+                    if track_lineage and g.ingest_partition is not None and g.rows
+                ],
+                columns=["ingest_partition", "start_offset", "end_offset", "rows", "batch_id"],
+            )
             if len(lrows):
                 self.tables["lineage"].append_pandas(lrows, batch_id)
 
-        mrow = pd.DataFrame(
-            [
-                {
-                    "batch_id": int(batch_id),
-                    "rows_in": int(n_in),
-                    "rows_quarantined": int(n_quar),
-                    "ack": self.ack,
-                    "commit_wall_s": time.time() - t0,
-                    "committed_at_unix": time.time(),  # _metrics only
-                }
-            ]
-        )
-        self.tables["metrics"].append_pandas(mrow, batch_id)
-
-    def _lineage_rows(self, got: dict, batch_id) -> pd.DataFrame:
-        """observe() metrics -> (partition, start, end, rows) lineage rows
-        (Hydra's per-partition offset checkpoint records,
-        ConsumerGroupsOffsetConsumer.processRecord :103-145)."""
-        rows = []
-        for p in range(LINEAGE_PARTITIONS):
-            n = int(got.get(f"n{p}") or 0)
-            if n:
-                rows.append(
-                    {
-                        "ingest_partition": p,
-                        "start_offset": int(got[f"lo{p}"]),
-                        "end_offset": int(got[f"hi{p}"]),
-                        "rows": n,
-                        "batch_id": batch_id,
-                    }
-                )
-        return pd.DataFrame(rows)
+            mrow = {
+                "batch_id": int(batch_id),
+                "rows_in": n_in,
+                "rows_quarantined": n_quar,
+                "ack": self.ack,
+                "commit_wall_s": time.time() - t0,
+                "committed_at_unix": time.time(),  # _metrics only
+            }
+            self.tables["metrics"].append_pandas(pd.DataFrame([mrow]), batch_id)
+        finally:
+            batch_df.unpersist()

@@ -9,6 +9,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hydra_spark import tables as tbl
+from hydra_spark.sink import ExactlyOnceSink
 from hydra_spark.tables import TransactionalTable
 
 
@@ -65,12 +67,10 @@ def test_snapshot_isolation_versions(spark, tmp_path):
 def test_ack_modes(spark, tmp_path, clips, ack):
     """Hydra ack strategies (AckStrategy.scala:35-45): every mode writes
     the output and a metrics row; only replicated writes per-partition
-    offset lineage. A replayed batch_id is a no-op for persisted and
-    replicated; noack commits again, and the key dedup keeps its output
-    key-unique."""
-    from hydra_spark import tables as tbl
-    from hydra_spark.sink import ExactlyOnceSink
-
+    offset lineage. A replayed batch_id's output commit is a no-op for
+    persisted and replicated; noack commits again, and the key dedup
+    keeps its output key-unique. Every mode rewrites its side rows on a
+    replay instead of appending them."""
     batch = clips.limit(200).select(
         "clip_id", "codec", "event_time", "ingest_partition", "ingest_offset"
     )
@@ -81,9 +81,70 @@ def test_ack_modes(spark, tmp_path, clips, ack):
     assert t["metrics"].read(spark).count() == 1
     assert t["lineage"].is_empty() is (ack != "replicated")
 
-    version = t["output"].manifest()["version"]
+    def n_lineage():
+        return 0 if t["lineage"].is_empty() else t["lineage"].read(spark).count()
+
+    version, lineage = t["output"].manifest()["version"], n_lineage()
     sink(batch, 0)  # replay
     out = t["output"].read(spark)
     assert out.count() == 200
     assert out.select("clip_id").distinct().count() == 200
     assert t["output"].manifest()["version"] == version + (ack == "noack")
+    # side rows are rewritten under the batch id, not appended
+    assert t["metrics"].read(spark).count() == 1
+    assert n_lineage() == lineage
+
+
+def _side_batch(spark, rows):
+    """(ingest_partition, ingest_offset, reject_reason) -> sink rows."""
+    from datetime import datetime, timedelta
+
+    return spark.createDataFrame(
+        [(f"c{i}", datetime(2025, 1, 1) + timedelta(seconds=i), *r) for i, r in enumerate(rows)],
+        "clip_id string, event_time timestamp, ingest_partition int, "
+        "ingest_offset long, reject_reason string",
+    )
+
+
+def test_side_rows_survive_crash_after_output_commit(spark, tmp_path, monkeypatch):
+    """A crash between the output commit and the side writes: the
+    replay of the same batch_id leaves the output (rows and manifest
+    version) as committed and writes every quarantine, lineage and
+    metrics row the crash lost."""
+    rows = [(0, o, None) for o in range(6)] + [(1, o, None) for o in range(4)]
+    rows += [(1, 4, "decode_error"), (0, 6, "decode_error")]
+    batch = _side_batch(spark, rows)
+    t = tbl.bootstrap(str(tmp_path / "t"), ["clip_id"])
+    sink = ExactlyOnceSink(t, ["clip_id"], ack="replicated")
+
+    def crash(self, pdf, batch_id):
+        raise RuntimeError("crash after the output commit")
+
+    monkeypatch.setattr(tbl.AppendTable, "append_pandas", crash)
+    with pytest.raises(RuntimeError, match="crash after"):
+        sink(batch, 7)
+    monkeypatch.undo()
+    version = t["output"].manifest()["version"]
+    assert 7 in t["output"].committed_batches()
+    assert t["output"].read(spark).count() == 10
+    assert t["lineage"].is_empty() and t["metrics"].is_empty()
+
+    sink(batch, 7)  # Structured Streaming's replay of the batch
+    assert t["output"].manifest()["version"] == version
+    assert t["output"].read(spark).count() == 10
+    assert t["quarantine"].read(spark).count() == 2
+    lin = sorted(tuple(r) for r in t["lineage"].read(spark).collect())
+    assert lin == [(0, 0, 5, 6, 7), (1, 0, 3, 4, 7)]  # partition, start, end, rows, batch
+    met = t["metrics"].read(spark).collect()
+    assert [(m.batch_id, m.rows_in, m.rows_quarantined) for m in met] == [(7, 12, 2)]
+
+
+def test_lineage_every_partition(spark, tmp_path):
+    """Every ingest partition id gets its lineage row, however large
+    the id; rows with a NULL partition get none."""
+    rows = [(0, o, None) for o in (3, 4, 5)] + [(5, o, None) for o in (10, 12)]
+    rows += [(40, o, None) for o in (100, 101, 102, 103)] + [(None, 9, None)]
+    t = tbl.bootstrap(str(tmp_path / "t"), ["clip_id"])
+    ExactlyOnceSink(t, ["clip_id"], ack="replicated")(_side_batch(spark, rows), 0)
+    lin = sorted(tuple(r) for r in t["lineage"].read(spark).collect())
+    assert lin == [(0, 3, 5, 3, 0), (5, 10, 12, 2, 0), (40, 100, 103, 4, 0)]

@@ -271,15 +271,11 @@ def test_state_format_marker(tmp_path):
         pin_state_format(cp)      # old-format checkpoint -> loud failure
 
     # unmarked checkpoint that already holds streaming state: assumed v1
-    # for custom-state queries (loud failure) — but accepted when the
-    # query holds NO custom state (flagship: built-in join state only,
-    # refusing it would discard stream progress for nothing)
+    # (loud failure)
     old = str(tmp_path / "old_cp")
     (tmp_path / "old_cp" / "offsets").mkdir(parents=True)
     with pytest.raises(StateFormatError):
         pin_state_format(old)
-    pin_state_format(old, holds_custom_state=False)   # stamps + accepts
-    pin_state_format(old)                              # now marked: fine
 
 
 def test_cep_kleene_stream_matches_reference(spark, tmp_path):
