@@ -1,12 +1,15 @@
 """Flagship pipeline: source → validate → decode → join → window → sink.
 
-This is the end-to-end CEP job the north rule describes, assembled from
-the engine's operators. Architecture (deliberate, scale-driven):
+This is the end-to-end CEP job the north rule describes. Every stage is
+a plain function called directly, in order, in this file; a deployment
+that wants another stage calls another Python function. Architecture
+(deliberate, scale-driven):
 
   stream side, stateless prefix (runs before any state store):
       admission checks → drop admission rejects (the side stream
       delivers them) → vectorized Arrow decode, in place on source
-      partitions — **drops the audio bytes**
+      partitions — **drops the audio bytes** → decode errors tagged
+      into ``reject_reason``
   stream side, stateful (RocksDB-backed):
       decoded clips ⋈ transcript stream — interval join, watermarked
   batch side, per micro-batch (stateless, inside foreachBatch):
@@ -46,20 +49,22 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from hydra_spark import tables as tbl, transforms, validation
+from hydra_spark import tables as tbl, validation
 from hydra_spark.functions.decode import decode_features
+from hydra_spark.functions.text import normalize_transcript
 from hydra_spark.operators import windows as win
 from hydra_spark.operators.join import clip_transcript_join
 from hydra_spark.sink import ExactlyOnceSink
 from hydra_spark.sources.replay import stream_table
 from hydra_spark.synth import CLIPS_SCHEMA
-from hydra_spark.transforms import (  # noqa: F401 (public re-exports)
-    WINDOW_SIZE,
-    window_start_col,
-)
 
 WATERMARK = "60 seconds"
 JOIN_LO, JOIN_HI = "10 seconds", "60 seconds"
+# the flagship's tumbling-window size: the sink key's window_start and
+# the rollup's windows
+WINDOW_SIZE = "10 seconds"
+# admission's per-clip payload limit (RecordTooLarge above it)
+MAX_BYTES = 4_000_000
 
 
 def _audio_schema():
@@ -80,27 +85,20 @@ def _transcript_schema():
     )
 
 
-def pre_join_spec(max_bytes: int | None = 4_000_000) -> transforms.Spec:
-    """The flagship's stateless pre-join stage chain as a registry spec
-    (the assembly the reference does through its component loader /
-    record-factory lookup — RecordFactory.scala:25-30). Deployments
-    extend or replace stages by name via transforms.register_stage and
-    editing this list — e.g. splicing in ``salt_spread`` before decode
-    when the source layout concentrates decode work by codec; see
-    tests/test_transforms.py."""
-    return [
-        ("admission", {"max_bytes": max_bytes}),
-        "drop_rejected",
-        "decode",
-        "tag_decode_rejects",
-    ]
+def window_start_col():
+    """Deterministic tumbling-window floor of ``event_time``: the second
+    half of the sink key (clip_id, window_start)."""
+    secs = int(WINDOW_SIZE.split()[0])
+    return F.timestamp_seconds(
+        (F.unix_timestamp(F.col("event_time")) / secs).cast("long") * secs
+    )
 
 
-def pre_join_transform(audio: DataFrame, max_bytes: int | None = 4_000_000) -> DataFrame:
+def pre_join_transform(audio: DataFrame) -> DataFrame:
     """Stateless pre-join stage (Hydra's record-factory, run *before*
-    transport): admission checks → drop rejects → vectorized decode.
-    Drops ``bytes``; emits ``reject_reason`` (decode error) for the
-    sink's quarantine split.
+    transport): admission checks → drop rejects → vectorized decode →
+    decode errors tagged into ``reject_reason`` for the sink's
+    quarantine split. Drops ``bytes``.
 
     Admission-rejected rows leave the main stream here — BEFORE decode
     (an oversized payload must never be gathered into a decode batch)
@@ -114,22 +112,32 @@ def pre_join_transform(audio: DataFrame, max_bytes: int | None = 4_000_000) -> D
     payload costs a full pass of the audio bytes over the wire, decode
     cost per sample is codec-independent, and codec-keyed aggregations
     downstream are already skew-safe via map-side partial aggregation +
-    AQE.
-
-    Assembled from the transform-stage registry (``pre_join_spec``);
-    stage resolution happens here at build time, execution is still one
-    Catalyst plan.
+    AQE. A deployment whose source layout concentrates decode work by
+    codec calls ``operators.skew.salted_repartition`` before decode.
     """
-    return transforms.build_transform(pre_join_spec(max_bytes))(audio)
+    admitted = validation.admission_checks(audio, max_bytes=MAX_BYTES).where(
+        F.col("reject_reason").isNull()
+    )
+    decoded = decode_features(admitted)
+    # first failure wins: an admission reason outranks the decode error
+    return decoded.withColumn(
+        "reject_reason",
+        F.coalesce(
+            F.col("reject_reason"),
+            F.when(
+                F.col("decode_error").isNotNull(),
+                F.concat(F.lit("DecodeError:"), F.col("decode_error")),
+            ),
+        ),
+    )
 
 
 def finish_batch(batch_df: DataFrame) -> DataFrame:
     """Per-micro-batch stateless tail: transcript normalize + tumbling
-    window key (the sink's MERGE key is (clip_id, window_start)) —
-    registry-assembled like the pre-join chain."""
-    return transforms.build_transform(
-        ["normalize_transcript", ("window_key", {"size": WINDOW_SIZE})]
-    )(batch_df)
+    window key (the sink's key is (clip_id, window_start))."""
+    return batch_df.withColumn(
+        "transcript_norm", normalize_transcript(F.col("transcript"))
+    ).withColumn("window_start", window_start_col())
 
 
 def build_tables(root: str) -> dict:
@@ -143,7 +151,6 @@ def start_flagship(
     out_root: str,
     files_per_trigger: int = 8,
     ack: str = "replicated",
-    max_bytes: int | None = 4_000_000,
 ):
     """Start the enriched-output streaming query. Returns (query, sink,
     tables)."""
@@ -152,7 +159,7 @@ def start_flagship(
     trs = stream_table(spark, transcripts_dir, schema=_transcript_schema(), files_per_trigger=files_per_trigger)
     # decode BEFORE the stateful join — join state must hold feature
     # rows, never audio payloads (see module docstring)
-    decoded = pre_join_transform(audio, max_bytes=max_bytes)
+    decoded = pre_join_transform(audio)
     joined = clip_transcript_join(
         decoded, trs, lo=JOIN_LO, hi=JOIN_HI, how="left_outer",
         clip_watermark=WATERMARK, transcript_watermark=WATERMARK,
@@ -183,7 +190,6 @@ def start_quarantine_stream(
     audio_dir: str,
     out_root: str,
     files_per_trigger: int = 8,
-    max_bytes: int | None = 4_000_000,
 ):
     """Stateless admission-reject delivery stream.
 
@@ -200,7 +206,7 @@ def start_quarantine_stream(
     """
     t = build_tables(out_root)
     audio = stream_table(spark, audio_dir, schema=_audio_schema(), files_per_trigger=files_per_trigger)
-    rejects = validation.admission_checks(audio, max_bytes=max_bytes).where(
+    rejects = validation.admission_checks(audio, max_bytes=MAX_BYTES).where(
         F.col("reject_reason").isNotNull()
     ).drop("bytes")
 

@@ -393,17 +393,12 @@ class TransactionalTable:
     def _write_manifest(self, m: dict) -> None:
         # scan-planning stats ride every snapshot (Iceberg manifest
         # bounds): footer stats are read ONCE, when a file first enters
-        # a manifest, then carried forward by path — commit cost is
-        # O(new files), and rollback/compact re-reads footers only for
-        # files absent from the current snapshot.
+        # a manifest, then carried forward by path. Every caller builds
+        # ``m`` from a manifest it just loaded (a rollback from the
+        # target snapshot, whose stats cover the files it restores), so
+        # commit cost is O(new files).
         live = {p for fl in m["files"].values() for p in fl}
-        prev: dict = {}
-        cv = self._current_version()
-        if cv is not None:
-            try:
-                prev = self.manifest_at(cv).get("file_stats", {})
-            except SnapshotExpiredError:
-                prev = {}
+        prev = m.get("file_stats", {})
         fstats = {p: prev[p] for p in live if p in prev}
         for p in sorted(live - set(fstats)):
             fstats[p] = _file_column_stats(p)

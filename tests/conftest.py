@@ -1,14 +1,17 @@
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the tree this file lives in: its engine is the one under test
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from hydra_spark.session import get_spark  # noqa: E402
 from hydra_spark import synth  # noqa: E402
 
-TEST_ROOT = "/root/repo/.data/tests"
+TEST_ROOT = str(REPO / ".data" / "tests")
 N = 2000
 
 

@@ -17,15 +17,14 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import flush_sentinels
+from tests.conftest import REPO, TEST_ROOT, flush_sentinels
 
 RUNNER = [sys.executable, "-m", "hydra_spark.runner"]
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _prepare_streams(spark, dataset, tag):
-    aud = f"/root/repo/.data/tests/audio_{tag}"
-    trs = f"/root/repo/.data/tests/trs_{tag}"
+    aud = os.path.join(TEST_ROOT, f"audio_{tag}")
+    trs = os.path.join(TEST_ROOT, f"trs_{tag}")
     for src, dst in [(dataset["audio"], aud), (dataset["transcripts"], trs)]:
         shutil.rmtree(dst, ignore_errors=True)
         shutil.copytree(src, dst)
@@ -56,8 +55,8 @@ def _run(aud, trs, out, wait=True):
 @pytest.mark.slow
 def test_kill_and_resume_exactly_once(spark, dataset):
     aud, trs = _prepare_streams(spark, dataset, "kill")
-    out_victim = "/root/repo/.data/tests/out_victim"
-    out_clean = "/root/repo/.data/tests/out_clean"
+    out_victim = os.path.join(TEST_ROOT, "out_victim")
+    out_clean = os.path.join(TEST_ROOT, "out_clean")
     shutil.rmtree(out_victim, ignore_errors=True)
     shutil.rmtree(out_clean, ignore_errors=True)
 

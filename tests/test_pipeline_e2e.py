@@ -13,16 +13,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from hydra_spark import pipeline, textnorm
-from tests.conftest import flush_sentinels
+from tests.conftest import TEST_ROOT, flush_sentinels
 
 
 @pytest.fixture(scope="module")
 def flagship_out(spark, dataset):
-    out_root = "/root/repo/.data/tests/flagship_out"
+    out_root = os.path.join(TEST_ROOT, "flagship_out")
     shutil.rmtree(out_root, ignore_errors=True)
     # fresh copies of stream dirs (sentinels are appended)
-    aud = "/root/repo/.data/tests/audio_e2e"
-    trs = "/root/repo/.data/tests/trs_e2e"
+    aud = os.path.join(TEST_ROOT, "audio_e2e")
+    trs = os.path.join(TEST_ROOT, "trs_e2e")
     for src, dst in [(dataset["audio"], aud), (dataset["transcripts"], trs)]:
         shutil.rmtree(dst, ignore_errors=True)
         shutil.copytree(src, dst)
@@ -39,6 +39,9 @@ def test_output_complete_and_key_unique(spark, flagship_out, clips):
     n_clips = clips.count()
     assert out.count() == n_clips  # every clip emitted exactly once
     assert out.select("clip_id", "window_start").distinct().count() == n_clips
+    # decode ran before the join: features present, audio payload dropped
+    assert {"n_samples", "rms_db", "peak"} <= set(out.columns)
+    assert "bytes" not in out.columns
 
 
 def test_transcript_byte_parity(spark, flagship_out, clips):

@@ -71,9 +71,7 @@ def test_decode_scan_prunes_columns(spark, clips):
     every clip column through the Arrow stage's parent scan."""
     from hydra_spark.functions.decode import decode_features
 
-    out = decode_features(spark.read.parquet("/root/repo/.data/tests/clips_n2000")).select(
-        "clip_id", "n_samples"
-    )
+    out = decode_features(clips).select("clip_id", "n_samples")
     p = plan_of(out)
     scan = p[p.index("Scan parquet"):]
     schema_line = scan[scan.index("ReadSchema"):].splitlines()[0]

@@ -15,7 +15,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from hydra_spark import pipeline
-from tests.conftest import flush_sentinels
+from tests.conftest import TEST_ROOT, flush_sentinels
 
 
 def _bad_rows(spark):
@@ -27,7 +27,7 @@ def _bad_rows(spark):
         ("bad-ts", b"\x00\x00", "pcm16", epoch),
         ("bad-ts2", b"\x00\x00", "ulaw", epoch),
         # oversized payload: must never reach a decode batch
-        ("bad-big", bytes(2_000_000), "pcm16", ok_ts),
+        ("bad-big", bytes(pipeline.MAX_BYTES + 2), "pcm16", ok_ts),
         # valid admission, undecodable codec: main-pipeline quarantine
         ("bad-codec", b"\x00\x00", "corrupt", ok_ts),
     ]
@@ -52,7 +52,7 @@ def _bad_rows(spark):
 
 
 def test_rejects_reach_quarantine_despite_watermark(spark, dataset):
-    root = "/root/repo/.data/tests/quar_stream"
+    root = os.path.join(TEST_ROOT, "quar_stream")
     aud = os.path.join(root, "audio")
     trs = os.path.join(root, "trs")
     out_root = os.path.join(root, "out")
@@ -61,13 +61,8 @@ def test_rejects_reach_quarantine_despite_watermark(spark, dataset):
     shutil.copytree(dataset["transcripts"], trs)
     _bad_rows(spark).coalesce(1).write.mode("append").parquet(aud)
 
-    # max_bytes=1MB: real clips pass, bad-big (2 MB) is rejected
-    q, sink, t = pipeline.start_flagship(
-        spark, aud, trs, out_root, files_per_trigger=64, max_bytes=1_000_000
-    )
-    qq, _tq = pipeline.start_quarantine_stream(
-        spark, aud, out_root, files_per_trigger=64, max_bytes=1_000_000
-    )
+    q, sink, t = pipeline.start_flagship(spark, aud, trs, out_root, files_per_trigger=64)
+    qq, _tq = pipeline.start_quarantine_stream(spark, aud, out_root, files_per_trigger=64)
     q.processAllAvailable()
     flush_sentinels(spark, aud, trs)
     q.processAllAvailable()
@@ -93,7 +88,7 @@ def test_whole_batch_quarantined_executor_side(spark, dataset):
     """A bad codec can reject an entire batch — the quarantine write
     must stay executor-side (never a driver collect) and the run must
     stay exactly-once under that load."""
-    root = "/root/repo/.data/tests/quar_big"
+    root = os.path.join(TEST_ROOT, "quar_big")
     aud = os.path.join(root, "audio")
     trs = os.path.join(root, "trs")
     out_root = os.path.join(root, "out")

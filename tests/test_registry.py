@@ -5,10 +5,11 @@ both failure modes have nearly shipped. Pin them here."""
 import re
 
 import __spark_entry__ as E
+from tests.conftest import REPO
 
 
 def _source_block():
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = open(REPO / "__spark_entry__.py").read()
     start = src.index("def queries(")
     end = src.index("def oracle_sql(")
     return src[start:end]

@@ -12,14 +12,12 @@ import glob
 import json
 import os
 import subprocess
-import sys
 
 import pyarrow.parquet as pq
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from hydra_spark.runner import ProgressListener, run_with_restarts  # noqa: E402
+from hydra_spark.runner import ProgressListener, run_with_restarts
+from tests.conftest import REPO
 
 
 class FakeQuery:
@@ -84,7 +82,7 @@ def test_spark_submit_py_files(dataset, tmp_path):
             "bash", "tools/submit.sh", "local[4]",
             dataset["audio"], dataset["transcripts"], out, "--bounded",
         ],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=420,

@@ -13,8 +13,10 @@ cd "$(dirname "$0")/.."
 
 MASTER="$1"; AUDIO="$2"; TRS="$3"; OUT="$4"; shift 4
 
-ZIP=/tmp/hydra_spark_pkg.zip
-rm -f "$ZIP"
+# a private package per run: concurrent runs never share one zip
+PKG_DIR="$(mktemp -d)"
+trap 'rm -rf "$PKG_DIR"' EXIT
+ZIP="$PKG_DIR/hydra_spark.zip"
 zip -qr "$ZIP" hydra_spark -x '*__pycache__*'
 
 # allocator tunables for the Python decode workers (see
@@ -24,7 +26,7 @@ zip -qr "$ZIP" hydra_spark -x '*__pycache__*'
 export MALLOC_MMAP_THRESHOLD_=1073741824 MALLOC_TRIM_THRESHOLD_=1073741824
 export MALLOC_TOP_PAD_=67108864 MALLOC_ARENA_MAX=2
 
-exec spark-submit \
+spark-submit \
   --master "$MASTER" \
   --conf spark.executorEnv.MALLOC_MMAP_THRESHOLD_=1073741824 \
   --conf spark.executorEnv.MALLOC_TRIM_THRESHOLD_=1073741824 \
