@@ -964,7 +964,7 @@ def _ensure_index(sf_dir: str, subdir: str, build) -> str:
     src = os.path.join(sf_dir, "embeddings.parquet")
     prefix = os.path.basename(os.path.normpath(sf_dir))
     key = f"{prefix}_{int(os.path.getmtime(src))}"
-    root = os.path.join("/root/repo/.data", subdir)
+    root = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".data", subdir)
     path = os.path.join(root, key)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         if os.path.isdir(root):

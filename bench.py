@@ -20,7 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count())))
@@ -89,7 +90,7 @@ def run_headline(spark) -> dict[str, float]:
     if "ann_lsh_indexed" in HEADLINE:
         import shutil
 
-        shutil.rmtree("/root/repo/.data/lsh_index", ignore_errors=True)
+        shutil.rmtree(os.path.join(REPO, ".data", "lsh_index"), ignore_errors=True)
         t0 = time.time()
         E.ensure_lsh_index(spark, SF_DIR)
         out["ann_lsh_index_build"] = round(time.time() - t0, 3)

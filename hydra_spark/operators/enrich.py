@@ -29,6 +29,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from hydra_spark.sources.replay import FILES_PER_TRIGGER, stream_table
 from hydra_spark.tables import TransactionalTable
 
 
@@ -69,7 +70,7 @@ def start_routed_stream(
     audio_dir: str,
     registry: TransactionalTable,
     out_root: str,
-    files_per_trigger: int = 8,
+    files_per_trigger: int = FILES_PER_TRIGGER,
 ):
     """Stream the clips table through live registry routing into a
     keyed transactional output (exactly-once via batch-labeled
@@ -79,8 +80,6 @@ def start_routed_stream(
     DataFrame at query start — so a MERGE enabling a codec re-routes
     every batch after the commit. tests/test_routing.py pins that
     semantics with a mid-stream registry flip."""
-    from hydra_spark.sources.replay import stream_table
-
     out = TransactionalTable(
         os.path.join(out_root, "routed"), ["clip_id"], n_buckets=8
     )

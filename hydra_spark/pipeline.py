@@ -55,7 +55,7 @@ from hydra_spark.functions.text import normalize_transcript
 from hydra_spark.operators import windows as win
 from hydra_spark.operators.join import clip_transcript_join
 from hydra_spark.sink import ExactlyOnceSink
-from hydra_spark.sources.replay import stream_table
+from hydra_spark.sources.replay import FILES_PER_TRIGGER, stream_table
 from hydra_spark.synth import CLIPS_SCHEMA
 
 WATERMARK = "60 seconds"
@@ -149,7 +149,7 @@ def start_flagship(
     audio_dir: str,
     transcripts_dir: str,
     out_root: str,
-    files_per_trigger: int = 8,
+    files_per_trigger: int = FILES_PER_TRIGGER,
     ack: str = "replicated",
 ):
     """Start the enriched-output streaming query. Returns (query, sink,
@@ -189,7 +189,7 @@ def start_quarantine_stream(
     spark: SparkSession,
     audio_dir: str,
     out_root: str,
-    files_per_trigger: int = 8,
+    files_per_trigger: int = FILES_PER_TRIGGER,
 ):
     """Stateless admission-reject delivery stream.
 
@@ -228,7 +228,7 @@ def start_window_rollup(
     spark: SparkSession,
     audio_dir: str,
     out_root: str,
-    files_per_trigger: int = 8,
+    files_per_trigger: int = FILES_PER_TRIGGER,
 ):
     """Independent per-(window, codec) rollup query (append mode —
     windows emit once, when the watermark passes)."""

@@ -17,11 +17,20 @@ Determinism rules for oracle parity (value-hash comparison):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from hydra_spark import lineage as lin
 from hydra_spark.operators import windows as win
 from hydra_spark.sources.replay import seek_predicate
+
+# the tables the stateful rows build live under the tree this file is in
+ENTRY_DATA = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".data",
+    "entry",
+)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -808,7 +817,7 @@ def kleene_stream_scan(spark, sf_dir):
     import shutil as _shutil
 
     tag = _os.path.basename(sf_dir.rstrip("/"))
-    root = _os.path.join("/root/repo/.data/entry", f"kleene_{tag}")
+    root = _os.path.join(ENTRY_DATA, f"kleene_{tag}")
     _shutil.rmtree(root, ignore_errors=True)
     src = _os.path.join(root, "src")
     ev = _kleene_events(spark, sf_dir)
@@ -884,7 +893,7 @@ def kleene_unordered_scan(spark, sf_dir):
     from hydra_spark.operators.reorder import reorder_events
 
     tag = _os.path.basename(sf_dir.rstrip("/"))
-    root = _os.path.join("/root/repo/.data/entry", f"kleene_unord_{tag}")
+    root = _os.path.join(ENTRY_DATA, f"kleene_unord_{tag}")
     _shutil.rmtree(root, ignore_errors=True)
     src = _os.path.join(root, "src")
     _os.makedirs(src)
@@ -978,7 +987,7 @@ def dpp_partitioned_scan(spark, sf_dir):
     import os as _os
 
     tag = _os.path.basename(sf_dir.rstrip("/"))
-    root = _os.path.join("/root/repo/.data/entry", f"dpp_{tag}")
+    root = _os.path.join(ENTRY_DATA, f"dpp_{tag}")
     fact_dir = _os.path.join(root, "events_by_type")
     dim_dir = _os.path.join(root, "type_dim")
     src_mtime = str(
@@ -1227,7 +1236,7 @@ def schema_evolution(spark, sf_dir):
 
     from hydra_spark.tables import TransactionalTable
 
-    root = _os.path.join("/root/repo/.data/entry", f"schema_evo_{_os.path.basename(sf_dir.rstrip('/'))}")
+    root = _os.path.join(ENTRY_DATA, f"schema_evo_{_os.path.basename(sf_dir.rstrip('/'))}")
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["o_orderkey"], n_buckets=8)
     v1 = t.register_schema(
@@ -1272,7 +1281,7 @@ def table_time_travel(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"time_travel_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA, f"time_travel_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["o_orderkey"], n_buckets=8)
@@ -1319,7 +1328,7 @@ def _changes_fixture(spark, sf_dir, name):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"{name}_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA, f"{name}_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["o_orderkey"], n_buckets=8)
@@ -1365,7 +1374,7 @@ def table_skipping_scan(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"skip_scan_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA, f"skip_scan_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=8)
@@ -1530,7 +1539,7 @@ def table_zorder_scan(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"zorder_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA, f"zorder_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=1)
@@ -2263,7 +2272,7 @@ def table_delete_where(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"del_where_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA, f"del_where_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=8)
@@ -2315,7 +2324,7 @@ def table_update_where(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"upd_where_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA, f"upd_where_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=8)
@@ -2369,7 +2378,7 @@ def table_rebucket(spark, sf_dir):
     from hydra_spark.tables import TransactionalTable
 
     root = _os.path.join(
-        "/root/repo/.data/entry", f"rebucket_{_os.path.basename(sf_dir.rstrip('/'))}"
+        ENTRY_DATA, f"rebucket_{_os.path.basename(sf_dir.rstrip('/'))}"
     )
     _shutil.rmtree(root, ignore_errors=True)
     t = TransactionalTable(root, ["event_id"], n_buckets=4)

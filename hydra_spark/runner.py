@@ -124,11 +124,13 @@ def run_with_restarts(
 
 
 def main(argv=None) -> int:
+    from hydra_spark.sources.replay import FILES_PER_TRIGGER
+
     ap = argparse.ArgumentParser(description="hydra_spark streaming engine runner")
     ap.add_argument("--audio", required=True, help="audio clips stream dir")
     ap.add_argument("--transcripts", required=True, help="transcripts stream dir")
     ap.add_argument("--out", required=True, help="output root (tables + checkpoint)")
-    ap.add_argument("--files-per-trigger", type=int, default=16)
+    ap.add_argument("--files-per-trigger", type=int, default=FILES_PER_TRIGGER)
     ap.add_argument("--ack", choices=["noack", "persisted", "replicated"], default="replicated")
     ap.add_argument("--bounded", action="store_true", help="replay to end, then exit")
     ap.add_argument("--max-restarts", type=int, default=-1)

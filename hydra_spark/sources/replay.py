@@ -25,12 +25,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from hydra_spark.synth import CLIPS_SCHEMA
 
+# default micro-batch size of every file-stream query, in files
+FILES_PER_TRIGGER = 8
+
 
 def stream_table(
     spark: SparkSession,
     path: str,
     schema=None,
-    files_per_trigger: int = 8,
+    files_per_trigger: int = FILES_PER_TRIGGER,
 ) -> DataFrame:
     """S4: rate-controlled micro-batched replay of a parquet table."""
     schema = schema or CLIPS_SCHEMA

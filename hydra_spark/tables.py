@@ -18,6 +18,12 @@ Iceberg on a real cluster:
   * tombstone deletes: rows flagged ``_delete`` remove their key
     (Hydra null-payload deletion, HydraRequest.scala:7, MERGE ... DELETE).
 
+Every data-writing operation (append_dedup, merge_upsert, compact,
+rebucket, delete_where, update_where) publishes through one method,
+``TransactionalTable._commit``: an Iceberg-shaped snapshot of (files
+added, files removed, batch id), data files first, the CURRENT swap
+last.
+
 On a real cluster, swap TransactionalTable for
 ``spark.sql("MERGE INTO ...")`` against an Iceberg catalog — the sink
 API (hydra_spark.sink) is written against this interface only.
@@ -422,11 +428,67 @@ class TransactionalTable:
     def committed_batches(self) -> set:
         return set(self.manifest()["committed_batches"])
 
+    def _commit(
+        self,
+        m: dict,
+        out: DataFrame | None,
+        removed=(),
+        batch_id=None,
+        n_buckets: int | None = None,
+        max_file_rows: int | None = None,
+    ) -> dict:
+        """The one data commit: publish version ``m["version"] + 1`` as
+        (files added, files removed, batch id). Returns the new file map.
+
+        ``out`` (already carrying ``_bucket`` and the caller's
+        partitioning; None writes nothing) lands under one fresh
+        ``data/c<uuid>`` directory. The next file map is the current
+        one minus the ``removed`` paths plus the written files, so a
+        bucket whose files were all removed stays listed, empty.
+        ``n_buckets`` (rebucket only, which removes every file) changes
+        the bucket spec: the map then lists exactly that many buckets.
+        Data files are written before the manifest, and the CURRENT swap
+        in ``_write_manifest`` is the commit point, so a crash anywhere
+        earlier leaves the previous snapshot current.
+
+        ``committed_batches`` is carried unchanged and gains ``batch_id``
+        when one is given, so replay idempotence survives every rewrite
+        (compact, rebucket, delete_where, update_where);
+        ``key_cols`` and ``n_buckets`` are stamped on every snapshot.
+        """
+        written = {}
+        if out is not None:
+            out_dir = os.path.join(self.path, "data", f"c{uuid.uuid4().hex[:12]}")
+            writer = out.write.mode("overwrite")
+            if max_file_rows is not None:
+                writer = writer.option("maxRecordsPerFile", max_file_rows)
+            with _micros_timestamps(out):
+                writer.partitionBy("_bucket").parquet(out_dir)
+            written = self._scan_bucket_output(out_dir)
+        gone = set(removed)
+        files = {b: [p for p in fl if p not in gone] for b, fl in m["files"].items()}
+        if n_buckets is not None:
+            files = {str(b): files.get(str(b), []) for b in range(n_buckets)}
+        for b, fl in written.items():
+            files[b] = files.get(b, []) + fl
+        self._record_file_schemas(m, files)
+        self._write_manifest(
+            {
+                **m,  # carry schema_versions / properties forward
+                "version": m["version"] + 1,
+                "files": files,
+                "committed_batches": m["committed_batches"]
+                + ([] if batch_id is None else [batch_id]),
+                "key_cols": self.key_cols,
+                "n_buckets": self.n_buckets if n_buckets is None else n_buckets,
+            }
+        )
+        return files
+
     @staticmethod
     def _scan_bucket_output(out_dir: str) -> dict[str, list[str]]:
-        """Parquet files per bucket id written by a
-        ``partitionBy('_bucket')`` job — the one place the commit paths
-        (merge_upsert / append_dedup / compact) parse the output layout."""
+        """Parquet files per bucket id written by ``_commit``'s
+        ``partitionBy('_bucket')`` job."""
         out: dict[str, list[str]] = {}
         for entry in os.listdir(out_dir):
             if entry.startswith("_bucket="):
@@ -749,8 +811,7 @@ class TransactionalTable:
         Data-identical and snapshot-safe: rows are re-read through the
         same schema resolution as ``read()`` (declared defaults
         materialize, explicit NULLs survive — identical to a merge
-        rewrite), ``committed_batches`` is carried unchanged so replay
-        idempotence is unaffected, retained older snapshots keep
+        rewrite), retained older snapshots keep
         referencing the old files (``expire_snapshots`` deletes them
         once unreferenced), and ``read_changes`` across a compaction
         emits ZERO rows (the file lists differ, the content doesn't).
@@ -802,8 +863,6 @@ class TransactionalTable:
         df = self._read_files(spark, files, m).withColumn("_bucket", self._bucket_col())
         if zorder_by:
             df = df.withColumn("_zkey", self._zorder_key(df, zorder_by, m, files))
-        commit_id = uuid.uuid4().hex[:12]
-        out_dir = os.path.join(self.path, "data", f"compact-{commit_id}")
         out = df.repartition(len(cands), "_bucket")
         # one task per bucket (repartition on the bucket key), so each
         # bucket directory receives exactly one file — unless a sorted
@@ -814,30 +873,10 @@ class TransactionalTable:
             # the projection dropping the key runs above the sort and
             # preserves row order; files then hold contiguous Z-ranges
             out = out.sortWithinPartitions("_bucket", "_zkey").drop("_zkey")
-        writer = out.write.mode("overwrite")
-        if target_file_rows is not None:
-            if target_file_rows < 1:
-                raise ValueError(f"target_file_rows must be >= 1, got {target_file_rows}")
-            writer = writer.option("maxRecordsPerFile", target_file_rows)
-        with _micros_timestamps(out):
-            writer.partitionBy("_bucket").parquet(out_dir)
-        new_files = {k: list(v) for k, v in m["files"].items()}
-        written = self._scan_bucket_output(out_dir)
-        new_files.update(written)
-        for b in cands:
-            if b not in written:  # all-empty generations collapse to none
-                new_files[b] = []
-        self._record_file_schemas(m, new_files)
-        self._write_manifest(
-            {
-                **m,
-                "version": m["version"] + 1,
-                "files": new_files,
-                "committed_batches": m["committed_batches"],
-                "key_cols": self.key_cols,
-                "n_buckets": self.n_buckets,
-            }
-        )
+        if target_file_rows is not None and target_file_rows < 1:
+            raise ValueError(f"target_file_rows must be >= 1, got {target_file_rows}")
+        # all-empty generations collapse to an empty bucket
+        new_files = self._commit(m, out, removed=files, max_file_rows=target_file_rows)
         return {
             "buckets_compacted": len(cands),
             "files_before": len(files),
@@ -860,11 +899,11 @@ class TransactionalTable:
         fewer rows per bucket.
 
         Data-identical and snapshot-safe like compact(): rows re-read
-        through schema resolution, ``committed_batches`` carried (replay
-        idempotence), retained snapshots keep their files, and
-        ``read_changes`` across a rebucket emits ZERO rows (every bucket's
-        file list changes, the content doesn't). Returns {"n_buckets_before",
-        "n_buckets_after", "files_before", "files_after"}."""
+        through schema resolution, retained snapshots keep their files,
+        and ``read_changes`` across a rebucket emits ZERO rows (every
+        bucket's file list changes, the content doesn't). Returns
+        {"n_buckets_before", "n_buckets_after", "files_before",
+        "files_after"}."""
         if new_n_buckets < 1:
             raise ValueError(f"new_n_buckets must be >= 1, got {new_n_buckets}")
         m = self.manifest()
@@ -875,36 +914,16 @@ class TransactionalTable:
                 "n_buckets_before": n_before, "n_buckets_after": n_before,
                 "files_before": len(files), "files_after": len(files),
             }
-        self.n_buckets = new_n_buckets
-        try:
-            if files:
-                df = self._read_files(spark, files, m).withColumn(
-                    "_bucket", self._bucket_col()
-                )
-                commit_id = uuid.uuid4().hex[:12]
-                out_dir = os.path.join(self.path, "data", f"rebucket-{commit_id}")
-                with _micros_timestamps(df):
-                    df.repartition(new_n_buckets, "_bucket").write.mode(
-                        "overwrite"
-                    ).partitionBy("_bucket").parquet(out_dir)
-                written = self._scan_bucket_output(out_dir)
-            else:
-                written = {}
-            new_files = {str(b): written.get(str(b), []) for b in range(new_n_buckets)}
-            self._record_file_schemas(m, new_files)
-            self._write_manifest(
-                {
-                    **m,
-                    "version": m["version"] + 1,
-                    "files": new_files,
-                    "committed_batches": m["committed_batches"],
-                    "key_cols": self.key_cols,
-                    "n_buckets": new_n_buckets,
-                }
+        out = None
+        if files:
+            out = (
+                self._read_files(spark, files, m)
+                .withColumn("_bucket", self._bucket_col(new_n_buckets))
+                .repartition(new_n_buckets, "_bucket")
             )
-        except BaseException:
-            self.n_buckets = n_before  # failed rewrite must not poison
-            raise  # this handle's routing for later commits
+        new_files = self._commit(m, out, removed=files, n_buckets=new_n_buckets)
+        # routing switches only once the new layout is published
+        self.n_buckets = new_n_buckets
         return {
             "n_buckets_before": n_before,
             "n_buckets_after": new_n_buckets,
@@ -932,38 +951,6 @@ class TransactionalTable:
             if any(p in admitted_set for p in fl)
         }
 
-    def _commit_cow_rewrite(
-        self, m: dict, cands: dict, admitted_set: set, out: DataFrame, prefix: str
-    ) -> None:
-        """Shared copy-on-write commit for the predicate DML rewrites:
-        write ``out`` (already carrying ``_bucket``) as the replacement
-        for the admitted files, splice non-admitted files through by
-        path identity, stamp schemas, commit the next manifest
-        version. DELETE and UPDATE differ only in how they derive
-        ``out``; the commit protocol must stay byte-identical."""
-        commit_id = uuid.uuid4().hex[:12]
-        out_dir = os.path.join(self.path, "data", f"{prefix}-{commit_id}")
-        with _micros_timestamps(out):
-            out.repartition(len(cands), "_bucket").write.mode(
-                "overwrite"
-            ).partitionBy("_bucket").parquet(out_dir)
-        written = self._scan_bucket_output(out_dir)
-        new_files = {k: list(v) for k, v in m["files"].items()}
-        for b in cands:
-            untouched = [p for p in new_files[b] if p not in admitted_set]
-            new_files[b] = untouched + written.get(b, [])
-        self._record_file_schemas(m, new_files)
-        self._write_manifest(
-            {
-                **m,
-                "version": m["version"] + 1,
-                "files": new_files,
-                "committed_batches": m["committed_batches"],
-                "key_cols": self.key_cols,
-                "n_buckets": self.n_buckets,
-            }
-        )
-
     def delete_where(self, spark: SparkSession, predicates: dict) -> dict:
         """Predicate DELETE as a file-pruned rewrite — the Iceberg
         copy-on-write ``DELETE FROM t WHERE lo <= col <= hi`` analog
@@ -979,9 +966,9 @@ class TransactionalTable:
         NULL semantics match ``plan_files``: a range predicate never
         matches NULL, so NULL-valued rows always survive. Retained older
         snapshots still reference the old files (time travel sees the
-        deleted rows until ``expire_snapshots``), ``committed_batches``
-        is carried unchanged, and ``read_changes`` across the delete
-        emits exactly the deleted keys as 'delete' pre-image rows.
+        deleted rows until ``expire_snapshots``), and ``read_changes``
+        across the delete emits exactly the deleted keys as 'delete'
+        pre-image rows.
 
         Returns {"rows_deleted", "files_rewritten", "files_untouched",
         "buckets_touched"}.
@@ -1005,7 +992,7 @@ class TransactionalTable:
                 "files_untouched": total, "buckets_touched": 0,
             }
         survivors = df.where(~match).withColumn("_bucket", self._bucket_col())
-        self._commit_cow_rewrite(m, cands, admitted_set, survivors, "delete")
+        self._commit(m, survivors.repartition(len(cands), "_bucket"), removed=files)
         return {
             "rows_deleted": int(n_del),
             "files_rewritten": len(files),
@@ -1046,9 +1033,9 @@ class TransactionalTable:
         commit — the table is never left half-updated. NULL predicate
         semantics match ``plan_files`` (a range never admits NULL
         rows).
-        Retained snapshots still see pre-update values (time travel),
-        ``committed_batches`` carries unchanged, and ``read_changes``
-        across the commit emits one 'update' row per changed key.
+        Retained snapshots still see pre-update values (time travel), and
+        ``read_changes`` across the commit emits one 'update' row per
+        changed key.
 
         Returns {"rows_updated", "files_rewritten", "files_untouched",
         "buckets_touched"}.
@@ -1122,7 +1109,7 @@ class TransactionalTable:
                 "files_untouched": total, "buckets_touched": 0,
             }
         out = out.withColumn("_bucket", self._bucket_col())
-        self._commit_cow_rewrite(m, cands, admitted_set, out, "update")
+        self._commit(m, out.repartition(len(cands), "_bucket"), removed=files)
         return {
             "rows_updated": int(n_upd),
             "files_rewritten": len(files),
@@ -1316,8 +1303,9 @@ class TransactionalTable:
         return not any(self.manifest()["files"].values())
 
     # ---------------------------------------------------------- write
-    def _bucket_col(self):
-        return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets))
+    def _bucket_col(self, n_buckets: int | None = None):
+        n = self.n_buckets if n_buckets is None else n_buckets
+        return F.pmod(F.hash(*[F.col(c) for c in self.key_cols]), F.lit(n))
 
     def apply_changes(self, spark: SparkSession, changes: DataFrame, batch_id) -> bool:
         """CDC consumer side: apply a ``read_changes``-shaped feed
@@ -1394,37 +1382,15 @@ class TransactionalTable:
             merged = batch
         if has_delete:
             merged = merged.where(~F.coalesce(F.col("_delete"), F.lit(False))).drop("_delete")
-
-        commit_id = uuid.uuid4().hex[:12]
-        out_dir = os.path.join(self.path, "data", f"c{commit_id}")
-        with _micros_timestamps(merged):
-            (
-                merged.repartition(max(1, len(affected)), "_bucket")
-                .write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(out_dir)
-            )
-        new_files = dict(m["files"])
-        written = self._scan_bucket_output(out_dir)
-        new_files.update(written)
-        # buckets that were affected but produced no output (all deleted)
-        for b in affected:
-            if str(b) not in written:
-                new_files[str(b)] = []
-
-        self._record_file_schemas(m, new_files)
-        self._write_manifest(
-            {
-                **m,  # carry schema_versions / properties forward
-                "version": m["version"] + 1,
-                "files": new_files,
-                "committed_batches": m["committed_batches"] + [batch_id],
-                "key_cols": self.key_cols,
-                "n_buckets": self.n_buckets,
-            }
+        # every file of an affected bucket is replaced; a bucket whose
+        # rows were all deleted stays listed, empty
+        self._commit(
+            m,
+            merged.repartition(max(1, len(affected)), "_bucket"),
+            removed=read_files,
+            batch_id=batch_id,
         )
         return True
-
 
     def append_dedup(
         self, spark: SparkSession, batch: DataFrame, batch_id, preclustered: bool = False
@@ -1436,12 +1402,13 @@ class TransactionalTable:
         copy-on-write (rewrites every touched bucket — O(table) per
         batch once all buckets are touched); append_dedup is the
         merge-on-read analog (Iceberg `MERGE ... WHEN NOT MATCHED THEN
-        INSERT`). The existing-keys anti-join is **bucket-pruned**: only
-        the files of buckets the batch actually touches are read, key
-        columns only — per-batch commit cost is O(batch) + O(touched
-        buckets), not O(table), exactly like merge_upsert's pruning.
-        Latest-wins/tombstone workloads still use merge_upsert.
-        Idempotent per batch_id like merge_upsert.
+        INSERT`). The existing-keys anti-join reads the key columns of
+        every file of the table. A key fixes its bucket, so this gives
+        the same rows as reading only the touched buckets, without a
+        job to find them: the write is the commit's only action. Commit
+        cost is O(batch) + O(table keys). Latest-wins/tombstone
+        workloads still use merge_upsert. Idempotent per batch_id like
+        merge_upsert.
 
         ``preclustered``: the caller guarantees the batch is already
         hash-partitioned by the key columns (e.g. it just came out of a
@@ -1456,44 +1423,12 @@ class TransactionalTable:
             return False
 
         batch = batch.withColumn("_bucket", self._bucket_col())
-        pinned = None
-        try:
-            if any(m["files"].values()):
-                # bucket-pruned, column-pruned existing-keys anti-join.
-                # The distinct-buckets probe is a second action over the
-                # batch, so pin the batch first — never re-run the
-                # upstream (decode/join) plan twice.
-                batch = pinned = batch.persist()
-                affected = [int(r[0]) for r in batch.select("_bucket").distinct().collect()]
-                old_files = {int(k): v for k, v in m["files"].items()}
-                read_files = [p for b in affected for p in old_files.get(b, [])]
-                if read_files:
-                    existing_keys = spark.read.parquet(*read_files).select(*self.key_cols)
-                    batch = batch.join(existing_keys, on=self.key_cols, how="left_anti")
-
-            commit_id = uuid.uuid4().hex[:12]
-            out_dir = os.path.join(self.path, "data", f"c{commit_id}")
-            out = batch if preclustered else batch.repartition(self.n_buckets, "_bucket")
-            with _micros_timestamps(out):
-                out.write.mode("overwrite").partitionBy("_bucket").parquet(out_dir)
-        finally:
-            if pinned is not None:
-                pinned.unpersist()
-        new_files = {k: list(v) for k, v in m["files"].items()}
-        for b, fl in self._scan_bucket_output(out_dir).items():
-            new_files.setdefault(b, [])
-            new_files[b] += fl
-        self._record_file_schemas(m, new_files)
-        self._write_manifest(
-            {
-                **m,  # carry schema_versions / properties forward
-                "version": m["version"] + 1,
-                "files": new_files,
-                "committed_batches": m["committed_batches"] + [batch_id],
-                "key_cols": self.key_cols,
-                "n_buckets": self.n_buckets,
-            }
-        )
+        files = [p for fl in m["files"].values() for p in fl]
+        if files:
+            existing_keys = spark.read.parquet(*files).select(*self.key_cols)
+            batch = batch.join(existing_keys, on=self.key_cols, how="left_anti")
+        out = batch if preclustered else batch.repartition(self.n_buckets, "_bucket")
+        self._commit(m, out, batch_id=batch_id)
         return True
 
 

@@ -18,13 +18,14 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-ROOT = "/root/repo/.data/crossover"
+ROOT = os.path.join(REPO, ".data", "crossover")
 DIM = 64
 
 

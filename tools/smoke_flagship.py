@@ -9,7 +9,8 @@ import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from hydra_spark.session import get_spark  # noqa: E402
 from hydra_spark import synth, pipeline  # noqa: E402
@@ -17,7 +18,7 @@ from hydra_spark import synth, pipeline  # noqa: E402
 
 def main() -> None:
     spark = get_spark()
-    root = "/root/repo/.data/smoke"
+    root = os.path.join(REPO, ".data", "smoke")
     paths = synth.ensure_dataset(spark, root, n=2000)
     out_root = os.path.join(root, "out")
     shutil.rmtree(out_root, ignore_errors=True)
