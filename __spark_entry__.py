@@ -34,6 +34,11 @@ from hydra_spark.ops import (
     textstats as X,
 )
 
+# fixtures, tables and indexes live under the tree this file is in; the
+# DuckDB oracle SQL reads the fixtures from ENTRY too
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".data")
+ENTRY = os.path.join(DATA, "entry")
+
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: event-time tumbling
@@ -51,12 +56,12 @@ _CLIPS_N = 500
 def _ensure_sidecar(spark: SparkSession, suffix: str, writer) -> str:
     """Regenerate an expected-values fixture sidecar next to the clips
     parquet iff missing or stale. The sidecar path must stay STABLE (the
-    DuckDB oracle SQL hard-codes it), so staleness is tracked by a
+    DuckDB oracle SQL names it), so staleness is tracked by a
     source-mtime stamp: regenerating the clips fixture forces every
     sidecar to regenerate — expected values can never be joined stale
     against new clips. ``writer(spark, clips_dir, out_dir)`` does the
     actual (mode=overwrite) write."""
-    path = os.path.join("/root/repo/.data/entry", f"clips_n{_CLIPS_N}")
+    path = os.path.join(ENTRY, f"clips_n{_CLIPS_N}")
     spath = path + suffix
     stamp = os.path.join(spath, "_source_mtime")
     want = str(int(os.path.getmtime(os.path.join(path, "_SUCCESS"))))
@@ -75,15 +80,14 @@ def _ensure_sidecar(spark: SparkSession, suffix: str, writer) -> str:
 def _clips(spark: SparkSession) -> DataFrame:
     from hydra_spark import synth
 
-    root = "/root/repo/.data/entry"
-    path = os.path.join(root, f"clips_n{_CLIPS_N}")
+    path = os.path.join(ENTRY, f"clips_n{_CLIPS_N}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         synth.write_clips(spark, path, _CLIPS_N, files=8)
     # _v4: schema grew n_lead_silent/n_trail_silent (clips_silence_trim);
     # _v3 grew centroid_hz/dominant_hz (clips_spectral); _v2 grew
     # n_zero_cross/n_silent (clips_audio_stats). The
     # suffix bump invalidates pre-v4 cached fixtures. The path must stay
-    # STABLE (the DuckDB oracle SQL hard-codes it), so staleness is
+    # STABLE (the DuckDB oracle SQL names it), so staleness is
     # tracked by a source-mtime stamp: regenerating the clips fixture
     # forces the expected features to regenerate too — they can never be
     # joined stale against new clips.
@@ -280,7 +284,7 @@ def codec_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hydra_spark.operators.enrich import route_with_registry
     from hydra_spark.tables import TransactionalTable
 
-    root = "/root/repo/.data/entry/route_registry"
+    root = os.path.join(ENTRY, "route_registry")
     _shutil.rmtree(root, ignore_errors=True)
     reg = TransactionalTable(root, ["codec"], n_buckets=1)
     reg.append_dedup(
@@ -695,7 +699,7 @@ def _ensure_e2e_run(spark: SparkSession) -> str:
 
     from hydra_spark import pipeline, synth
 
-    root = "/root/repo/.data/entry/e2e"
+    root = os.path.join(ENTRY, "e2e")
     paths = synth.ensure_dataset(spark, root, n=_E2E_N)
     out_root = os.path.join(root, "flagship_out")
     stamp = os.path.join(out_root, "_source_mtime")
@@ -964,7 +968,7 @@ def _ensure_index(sf_dir: str, subdir: str, build) -> str:
     src = os.path.join(sf_dir, "embeddings.parquet")
     prefix = os.path.basename(os.path.normpath(sf_dir))
     key = f"{prefix}_{int(os.path.getmtime(src))}"
-    root = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".data", subdir)
+    root = os.path.join(DATA, subdir)
     path = os.path.join(root, key)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         if os.path.isdir(root):
@@ -2008,11 +2012,11 @@ def oracle_sql() -> dict[str, str]:
         # no fan-out; very-late ones fall outside the range exactly like
         # the engine's watermark drops them), codec byte accounting for
         # n_samples, 10 s tumbling window key, shared SQL normalize.
-        "pipeline_e2e": """
+        "pipeline_e2e": f"""
             WITH a AS (SELECT clip_id, codec, bytes, event_time
-                       FROM read_parquet('/root/repo/.data/entry/e2e/clips_audio_n2000/*.parquet')),
+                       FROM read_parquet('{ENTRY}/e2e/clips_audio_n2000/*.parquet')),
                  t AS (SELECT clip_id, transcript, event_time
-                       FROM read_parquet('/root/repo/.data/entry/e2e/transcripts_n2000/*.parquet')),
+                       FROM read_parquet('{ENTRY}/e2e/transcripts_n2000/*.parquet')),
                  j AS (SELECT a.clip_id,
                               CAST(floor(epoch(a.event_time)/10)*10 AS BIGINT) AS window_start_s,
                               CAST(CASE WHEN a.codec = 'pcm16' THEN octet_length(a.bytes)//2
@@ -2858,9 +2862,9 @@ def oracle_sql() -> dict[str, str]:
             FROM documents
         """,
         # clips fixture oracles read the deterministic parquet the Spark
-        # side synthesizes (absolute path; seeded, content-stable)
-        "clips_sample_rollup": """
-            WITH c AS (SELECT * FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+        # side synthesizes (under ENTRY; seeded, content-stable)
+        "clips_sample_rollup": f"""
+            WITH c AS (SELECT * FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
                        WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL),
             s AS (SELECT CAST(floor(epoch(event_time)/10)*10 AS BIGINT) AS window_start_s, codec,
                          CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
@@ -2872,10 +2876,10 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(CASE WHEN transcript IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_with_transcript
             FROM s GROUP BY 1,2
         """,
-        "clips_window_rollup": """
-            WITH c AS (SELECT * FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+        "clips_window_rollup": f"""
+            WITH c AS (SELECT * FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
                        WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL),
-            f AS (SELECT * FROM read_parquet('/root/repo/.data/entry/clips_n500_features_v4/*.parquet')),
+            f AS (SELECT * FROM read_parquet('{ENTRY}/clips_n500_features_v4/*.parquet')),
             j AS (SELECT CAST(floor(epoch(c.event_time)/10)*10 AS BIGINT) AS window_start_s,
                          c.codec, f.n_samples, f.rms_db, f.peak, c.transcript
                   FROM c JOIN f USING (clip_id)
@@ -2887,13 +2891,13 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(CASE WHEN transcript IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_with_transcript
             FROM j GROUP BY 1,2
         """,
-        "clips_audio_stats": """
+        "clips_audio_stats": f"""
             SELECT clip_id, n_samples, n_zero_cross, n_silent
-            FROM read_parquet('/root/repo/.data/entry/clips_n500_features_v4/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500_features_v4/*.parquet')
             WHERE n_samples IS NOT NULL
         """,
-        "clips_fingerprint_dedup": """
-            WITH c AS (SELECT * FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')),
+        "clips_fingerprint_dedup": f"""
+            WITH c AS (SELECT * FROM read_parquet('{ENTRY}/clips_n500/*.parquet')),
             u AS (
               SELECT clip_id, bytes, event_time FROM c
               UNION ALL
@@ -2905,21 +2909,21 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_copies
             FROM u GROUP BY 1
         """,
-        "clips_spectral": """
+        "clips_spectral": f"""
             SELECT c.clip_id, c.sr_hz, f.n_samples,
                    round(f.centroid_hz, 4) AS centroid_hz,
                    round(f.dominant_hz, 4) AS dominant_hz
-            FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet') c
-            JOIN read_parquet('/root/repo/.data/entry/clips_n500_features_v4/*.parquet') f
+            FROM read_parquet('{ENTRY}/clips_n500/*.parquet') c
+            JOIN read_parquet('{ENTRY}/clips_n500_features_v4/*.parquet') f
               USING (clip_id)
             WHERE f.n_samples IS NOT NULL
         """,
-        "clips_resample": """
+        "clips_resample": f"""
             WITH s AS (
               SELECT clip_id, codec, sr_hz,
                      CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                           ELSE octet_length(bytes) END AS n_in
-              FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
               WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
                 AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)
                 AND sr_hz > 0)
@@ -2930,14 +2934,14 @@ def oracle_sql() -> dict[str, str]:
                    CAST(2*((n_in*16000 + sr_hz - 1)//sr_hz) AS INTEGER) AS n_bytes_out
             FROM s
         """,
-        "clips_segment": """
+        "clips_segment": f"""
             WITH s AS (
               SELECT clip_id, bytes,
                      CASE WHEN codec = 'pcm16' THEN 2 ELSE 1 END AS bps,
                      CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                           ELSE octet_length(bytes) END AS n,
                      sr_hz*250//1000 AS seg_len, sr_hz*125//1000 AS hop
-              FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
               WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
                 AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)
                 AND sr_hz > 0 AND sr_hz*250//1000 >= 1 AND sr_hz*125//1000 >= 1),
@@ -2955,14 +2959,14 @@ def oracle_sql() -> dict[str, str]:
         """,
         # reassembled payload == hex PREFIX of the original bytes
         # (non-overlapping tiling drops the sub-segment tail)
-        "clips_reassemble": """
+        "clips_reassemble": f"""
             WITH s AS (
               SELECT clip_id, bytes,
                      CASE WHEN codec = 'pcm16' THEN 2 ELSE 1 END AS bps,
                      CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                           ELSE octet_length(bytes) END AS n,
                      sr_hz*250//1000 AS seg_len
-              FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
               WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
                 AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)
                 AND sr_hz > 0 AND sr_hz*250//1000 >= 1),
@@ -2976,12 +2980,12 @@ def oracle_sql() -> dict[str, str]:
                                  CAST(n_segments*seg_len*bps*2 AS BIGINT))) AS reassembled_md5
             FROM e
         """,
-        "clips_percentiles": """
+        "clips_percentiles": f"""
             WITH s AS (
               SELECT codec,
                      CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                           ELSE octet_length(bytes) END AS ns
-              FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
               WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
                 AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1))
             SELECT codec, count(*) AS n_clips,
@@ -2997,7 +3001,7 @@ def oracle_sql() -> dict[str, str]:
                    round(sum(value), 4) AS sum_value
             FROM e GROUP BY GROUPING SETS ((event_type), (user_bucket))
         """,
-        "clips_silence_trim": """
+        "clips_silence_trim": f"""
             WITH c AS (
               SELECT clip_id, codec,
                      CASE WHEN codec = 'pcm16' THEN 2 ELSE 1 END AS bps,
@@ -3006,7 +3010,7 @@ def oracle_sql() -> dict[str, str]:
                      || hex(bytes)
                      || CASE WHEN codec = 'pcm16' THEN repeat('00', 32)
                              ELSE repeat('80', 16) END AS hx
-              FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
               WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
                 AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)),
             j AS (
@@ -3015,7 +3019,7 @@ def oracle_sql() -> dict[str, str]:
                      f.n_samples - f.n_lead_silent - f.n_trail_silent AS raw_out,
                      f.n_lead_silent, f.n_trail_silent
               FROM c
-              JOIN read_parquet('/root/repo/.data/entry/clips_n500_features_v4/*.parquet') f
+              JOIN read_parquet('{ENTRY}/clips_n500_features_v4/*.parquet') f
                 USING (clip_id))
             SELECT clip_id, codec,
                    CAST(n AS INT) AS n_samples,
@@ -3155,14 +3159,14 @@ def oracle_sql() -> dict[str, str]:
             FROM upd
             GROUP BY event_type
         """,
-        "clips_transcode": """
+        "clips_transcode": f"""
             SELECT clip_id, codec,
                    CAST(CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                         ELSE octet_length(bytes) END AS INT) AS n_samples,
                    CAST(CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                         ELSE octet_length(bytes) END AS INT) AS n_bytes_out,
                    CASE WHEN codec = 'ulaw' THEN md5(hex(bytes)) END AS passthrough_md5
-            FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
             WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
               AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)
         """,
@@ -3178,18 +3182,18 @@ def oracle_sql() -> dict[str, str]:
         """,
         # integer-exact: fixture computed by the naive per-row frame
         # loop over the same f32 samples/eps; error rows are NULL there
-        "clips_vad": """
+        "clips_vad": f"""
             SELECT clip_id, n_frames, n_speech_frames, n_segments, longest_run
-            FROM read_parquet('/root/repo/.data/entry/clips_n500_vad_v1/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500_vad_v1/*.parquet')
             WHERE n_frames IS NOT NULL
         """,
         # fixture = per-row audio.mel_energies (rfft + mat-vec); 4 dp
         # rounding absorbs the engine's GEMM summation-order difference;
         # NULL-band rows are the fixture's error/empty/sr<=0 markers,
         # excluded symmetrically (engine filters NULL mel_db)
-        "clips_mel_bands": """
+        "clips_mel_bands": f"""
             SELECT clip_id, band, round(mel_db, 4) AS mel_db
-            FROM read_parquet('/root/repo/.data/entry/clips_n500_mel_v1/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500_mel_v1/*.parquet')
             WHERE band IS NOT NULL
         """,
         # balanced mixing: identical hash + rank rule in SQL — kept
@@ -3207,12 +3211,12 @@ def oracle_sql() -> dict[str, str]:
         """,
         # speed perturb 0.9 == resample with ratio 900000/1000000; same
         # admission filter as clips_resample, virtual-rate accounting
-        "clips_speed_perturb": """
+        "clips_speed_perturb": f"""
             WITH s AS (
               SELECT clip_id, codec, sr_hz,
                      CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                           ELSE octet_length(bytes) END AS n_in
-              FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
               WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
                 AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)
                 AND sr_hz > 0)
@@ -3225,11 +3229,11 @@ def oracle_sql() -> dict[str, str]:
         """,
         # CMVN over the mel fixture: identical stats + normalization in
         # SQL; sr_hz from the clips table (mel fixture is per-band only)
-        "clips_mel_cmvn": """
+        "clips_mel_cmvn": f"""
             WITH m AS (
                 SELECT f.clip_id, c.sr_hz, f.band, f.mel_db
-                FROM read_parquet('/root/repo/.data/entry/clips_n500_mel_v1/*.parquet') f
-                JOIN read_parquet('/root/repo/.data/entry/clips_n500/*.parquet') c USING (clip_id)
+                FROM read_parquet('{ENTRY}/clips_n500_mel_v1/*.parquet') f
+                JOIN read_parquet('{ENTRY}/clips_n500/*.parquet') c USING (clip_id)
                 WHERE f.band IS NOT NULL
             ),
             s AS (
@@ -3246,9 +3250,9 @@ def oracle_sql() -> dict[str, str]:
         # NULL n_blocks marks the fixture's error rows (engine filters
         # decode_error instead); short/fully-gated clips keep NULL lufs
         # with real block counts on both sides
-        "clips_loudness": """
+        "clips_loudness": f"""
             SELECT clip_id, round(lufs, 4) AS lufs, n_blocks, n_gated
-            FROM read_parquet('/root/repo/.data/entry/clips_n500_lufs_v1/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500_lufs_v1/*.parquet')
             WHERE n_blocks IS NOT NULL
         """,
         "tpch_q7": """
@@ -3474,10 +3478,10 @@ def oracle_sql() -> dict[str, str]:
         # freq mask: identical md5->ascii fold as clips_time_mask, span
         # n_mels - mask_bands + 1 = 7; masked bands hit the -120 floor,
         # untouched bands must equal the independent mel fixture
-        "clips_freq_mask": """
+        "clips_freq_mask": f"""
             WITH m AS (
               SELECT clip_id, band, mel_db
-              FROM read_parquet('/root/repo/.data/entry/clips_n500_mel_v1/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500_mel_v1/*.parquet')
               WHERE band IS NOT NULL),
             f AS (
               SELECT clip_id,
@@ -3510,47 +3514,47 @@ def oracle_sql() -> dict[str, str]:
         # the registry the row commits is deterministic, so the oracle
         # is a CASE over the same routes; disabled (alaw) and unknown
         # keys both land on 'ignore'
-        "codec_routing": """
+        "codec_routing": f"""
             SELECT codec,
                    CASE WHEN codec = 'pcm16' THEN 'pcm-pipe'
                         WHEN codec = 'ulaw' THEN 'g711-pipe'
                         ELSE 'ignore' END AS route,
                    count(*) AS n_clips,
                    CAST(sum(octet_length(bytes)) AS BIGINT) AS n_bytes
-            FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
             GROUP BY 1, 2
         """,
         # features_v4 rms_db is the independent f64 per-row computation
         # (synth.write_clip_features) — 4 dp rounding absorbs the ~1e-9
         # engine/fixture accumulation difference; -inf (all-silent) and
         # NULL (decode-error / empty) rows are excluded on both sides
-        "clips_rms_normalize": """
+        "clips_rms_normalize": f"""
             SELECT c.clip_id, c.codec, f.n_samples,
                    CAST(2 * f.n_samples AS INT) AS n_bytes_out,
                    round(f.rms_db, 4) AS rms_db_in
-            FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet') c
-            JOIN read_parquet('/root/repo/.data/entry/clips_n500_features_v4/*.parquet') f
+            FROM read_parquet('{ENTRY}/clips_n500/*.parquet') c
+            JOIN read_parquet('{ENTRY}/clips_n500_features_v4/*.parquet') f
               USING (clip_id)
             WHERE f.n_samples IS NOT NULL AND f.n_samples > 0
               AND isfinite(f.rms_db)
         """,
-        "clips_gain": """
+        "clips_gain": f"""
             SELECT clip_id, codec,
                    CAST(CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                         ELSE octet_length(bytes) END AS INT) AS n_samples,
                    CAST(2 * (CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                              ELSE octet_length(bytes) END) AS INT) AS n_bytes_out
-            FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
             WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
               AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)
         """,
-        "clips_time_mask": """
+        "clips_time_mask": f"""
             WITH s AS (
               SELECT clip_id, codec, bytes,
                      CASE WHEN codec = 'pcm16' THEN 2 ELSE 1 END AS bps,
                      CASE WHEN codec = 'pcm16' THEN octet_length(bytes)//2
                           ELSE octet_length(bytes) END AS n
-              FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+              FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
               WHERE codec IN ('pcm16','ulaw','alaw') AND bytes IS NOT NULL
                 AND NOT (codec = 'pcm16' AND octet_length(bytes) % 2 = 1)),
             m AS (
@@ -3573,10 +3577,10 @@ def oracle_sql() -> dict[str, str]:
                                     CAST((ms + ml)*bps*2 + 1 AS BIGINT))) AS masked_md5
             FROM p
         """,
-        "clips_transcript_normalize": """
+        "clips_transcript_normalize": f"""
             SELECT clip_id,
                    trim(regexp_replace(lower(nfc_normalize(transcript)), '\\s+', ' ', 'g')) AS transcript_norm
-            FROM read_parquet('/root/repo/.data/entry/clips_n500/*.parquet')
+            FROM read_parquet('{ENTRY}/clips_n500/*.parquet')
             WHERE transcript IS NOT NULL
         """,
         "binary_metadata": """

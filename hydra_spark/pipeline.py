@@ -150,7 +150,6 @@ def start_flagship(
     transcripts_dir: str,
     out_root: str,
     files_per_trigger: int = FILES_PER_TRIGGER,
-    ack: str = "replicated",
 ):
     """Start the enriched-output streaming query. Returns (query, sink,
     tables)."""
@@ -167,11 +166,11 @@ def start_flagship(
     # the flagship output is append-only keyed by (clip_id,
     # window_start) — insert-only commits keep per-batch cost flat as
     # the table grows. Contract note: the sink is FIRST-wins across
-    # micro-batches (a key committed in batch k keeps its row if
-    # re-emitted in batch k+1 — e.g. a replayed noack publish);
+    # micro-batches (a key committed in batch k keeps its row if a
+    # later batch re-emits it, e.g. a source file delivered twice);
     # cross-batch latest-wins (late transcript updates must overwrite)
     # needs TransactionalTable.merge_upsert instead.
-    sink = ExactlyOnceSink(t, ["clip_id", "window_start"], ack=ack)
+    sink = ExactlyOnceSink(t, ["clip_id", "window_start"])
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sink(finish_batch(batch_df), batch_id)

@@ -17,8 +17,13 @@ Pieces:
     exactly-once sink absorbs the replayed batch).
   * ProgressListener — per-batch StreamingQueryProgress → JSON-lines
     metrics feed (Hydra's Kamon counters/gauges/histograms analog,
-    core/src/main/scala/hydra/core/monitor/HydraMetrics.scala:25-101);
-    in-flight gauge = rows read − rows committed, reconciled per batch.
+    core/src/main/scala/hydra/core/monitor/HydraMetrics.scala:25-101):
+    input rows and rates, batch duration, watermark, and the join
+    state's rows updated, removed and dropped by watermark.
+
+The flagship sink has one delivery mode (see ``hydra_spark.sink``), so
+the runner has no ack option: Hydra's NoAck / Persisted modes shorten
+the wait for a client's reply, and a micro-batch has no such reply.
 """
 
 from __future__ import annotations
@@ -69,7 +74,13 @@ class ProgressListener(StreamingQueryListener):
                 "batch_duration_ms": p.batchDuration,
                 "timed_out": timed_out,
                 "watermark": p.eventTime.get("watermark") if p.eventTime else None,
-                "state_rows": sum(s.numRowsTotal for s in p.stateOperators) if p.stateOperators else 0,
+                # per-batch sums; the row total is not tracked
+                # (session.ENGINE_CONF), so RocksDB reports it as 0
+                "state_rows_updated": sum(s.numRowsUpdated for s in p.stateOperators),
+                "state_rows_removed": sum(s.numRowsRemoved for s in p.stateOperators),
+                "rows_dropped_by_watermark": sum(
+                    s.numRowsDroppedByWatermark for s in p.stateOperators
+                ),
             }
         )
 
@@ -131,7 +142,6 @@ def main(argv=None) -> int:
     ap.add_argument("--transcripts", required=True, help="transcripts stream dir")
     ap.add_argument("--out", required=True, help="output root (tables + checkpoint)")
     ap.add_argument("--files-per-trigger", type=int, default=FILES_PER_TRIGGER)
-    ap.add_argument("--ack", choices=["noack", "persisted", "replicated"], default="replicated")
     ap.add_argument("--bounded", action="store_true", help="replay to end, then exit")
     ap.add_argument("--max-restarts", type=int, default=-1)
     ap.add_argument("--rollup", action="store_true", help="also run the window rollup query")
@@ -158,8 +168,7 @@ def main(argv=None) -> int:
 
     def start_flagship():
         return pipeline.start_flagship(
-            spark, args.audio, args.transcripts, args.out,
-            files_per_trigger=args.files_per_trigger, ack=args.ack,
+            spark, args.audio, args.transcripts, args.out, files_per_trigger=args.files_per_trigger
         )
 
     if args.rollup:

@@ -33,8 +33,9 @@ ENGINE_CONF = {
     # incremental (changelog) state checkpoints: upload per-batch
     # deltas, not a full RocksDB snapshot per store per batch
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    # per-op row counting in RocksDB costs a get per put; metrics
-    # come from the listener instead
+    # per-op row counting in RocksDB costs a get per put; with it off
+    # numRowsTotal reads 0, so progress consumers (runner.ProgressListener,
+    # perfbench) use numRowsUpdated / numRowsRemoved instead
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
     "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "true",
     "spark.sql.parquet.compression.codec": "zstd",

@@ -21,9 +21,9 @@ Reference semantics re-expressed as DataFrame predicates:
   * Publish-error taxonomy (KafkaClientAlgebra.scala:182-202 —
     Timeout / RecordTooLarge / TopicNotFoundInMetadata / Other, mapped
     to HTTP codes at IngestionEndpoint.scala:89-96): ``error_code``
-    maps reject reasons to stable numeric codes; engine-level failures
-    raise the typed exceptions below (TableNotFound fails fast at plan
-    time, not per record).
+    maps reject reasons to stable numeric codes. TopicNotFoundInMetadata
+    has no analog: the flagship bootstraps its tables before the query
+    starts, so a batch never publishes to a missing table.
 
 All checks are JVM-side Column predicates — one pass, whole-stage
 codegen, no Python.
@@ -49,13 +49,6 @@ class PublishTimeout(PublishError):
 
 class RecordTooLargeError(PublishError):
     code = 413
-
-
-class TableNotFoundError(PublishError):
-    """Publish to a missing table fails fast at plan time — the analog
-    of TopicNotFoundInMetadata (no queueing a doomed record)."""
-
-    code = 404
 
 
 class InvalidLogicalTypeError(PublishError):

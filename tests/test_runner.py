@@ -93,7 +93,10 @@ def test_spark_submit_py_files(dataset, tmp_path):
     assert result["rows_out"] > 0
     # listener metrics feed written
     progress = [json.loads(l) for l in open(os.path.join(out, "_progress.jsonl"))]
-    assert any(p["event"] == "progress" and p["num_input_rows"] > 0 for p in progress)
+    batches = [p for p in progress if p["event"] == "progress"]
+    assert any(p["num_input_rows"] > 0 for p in batches)
+    # the join's state churn reaches the feed (its row total is untracked)
+    assert sum(p["state_rows_updated"] for p in batches) > 0
     # per-partition lineage rows written by the same commits
     assert os.path.isdir(os.path.join(out, "_lineage"))
     # the engine settings of session.get_spark reach the submit path:

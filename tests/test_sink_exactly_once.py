@@ -63,36 +63,32 @@ def test_snapshot_isolation_versions(spark, tmp_path):
     assert 0 in t.committed_batches()
 
 
-@pytest.mark.parametrize("ack", ["noack", "persisted", "replicated"])
-def test_ack_modes(spark, tmp_path, clips, ack):
-    """Hydra ack strategies (AckStrategy.scala:35-45): every mode writes
-    the output and a metrics row; only replicated writes per-partition
-    offset lineage. A replayed batch_id's output commit is a no-op for
-    persisted and replicated; noack commits again, and the key dedup
-    keeps its output key-unique. Every mode rewrites its side rows on a
-    replay instead of appending them."""
+def test_replayed_batch(spark, tmp_path, clips):
+    """The sink writes the output, a metrics row and per-partition
+    offset lineage. A replayed batch_id's output commit is a no-op, and
+    its side rows are rewritten under the batch id, not appended."""
+    # 200 clips in the shape of the flagship batch, without rejects
     batch = clips.limit(200).select(
-        "clip_id", "codec", "event_time", "ingest_partition", "ingest_offset"
+        "clip_id", "codec", "event_time", "ingest_partition", "ingest_offset",
+        F.lit(None).cast("string").alias("reject_reason"),
+        F.col("event_time").alias("transcript_time"),
     )
-    t = tbl.bootstrap(str(tmp_path / ack), ["clip_id"])
-    sink = ExactlyOnceSink(t, ["clip_id"], ack=ack)
+    t = tbl.bootstrap(str(tmp_path / "t"), ["clip_id"])
+    sink = ExactlyOnceSink(t, ["clip_id"])
     sink(batch, 0)
     assert t["output"].read(spark).count() == 200
     assert t["metrics"].read(spark).count() == 1
-    assert t["lineage"].is_empty() is (ack != "replicated")
+    lineage = t["lineage"].read(spark).count()
+    assert t["lineage"].read(spark).agg(F.sum("rows")).first()[0] == 200
 
-    def n_lineage():
-        return 0 if t["lineage"].is_empty() else t["lineage"].read(spark).count()
-
-    version, lineage = t["output"].manifest()["version"], n_lineage()
+    version = t["output"].manifest()["version"]
     sink(batch, 0)  # replay
     out = t["output"].read(spark)
     assert out.count() == 200
     assert out.select("clip_id").distinct().count() == 200
-    assert t["output"].manifest()["version"] == version + (ack == "noack")
-    # side rows are rewritten under the batch id, not appended
+    assert t["output"].manifest()["version"] == version
     assert t["metrics"].read(spark).count() == 1
-    assert n_lineage() == lineage
+    assert t["lineage"].read(spark).count() == lineage
 
 
 def _side_batch(spark, rows):
@@ -100,9 +96,9 @@ def _side_batch(spark, rows):
     from datetime import datetime, timedelta
 
     return spark.createDataFrame(
-        [(f"c{i}", datetime(2025, 1, 1) + timedelta(seconds=i), *r) for i, r in enumerate(rows)],
+        [(f"c{i}", datetime(2025, 1, 1) + timedelta(seconds=i), *r, None) for i, r in enumerate(rows)],
         "clip_id string, event_time timestamp, ingest_partition int, "
-        "ingest_offset long, reject_reason string",
+        "ingest_offset long, reject_reason string, transcript_time timestamp",
     )
 
 
@@ -115,7 +111,7 @@ def test_side_rows_survive_crash_after_output_commit(spark, tmp_path, monkeypatc
     rows += [(1, 4, "decode_error"), (0, 6, "decode_error")]
     batch = _side_batch(spark, rows)
     t = tbl.bootstrap(str(tmp_path / "t"), ["clip_id"])
-    sink = ExactlyOnceSink(t, ["clip_id"], ack="replicated")
+    sink = ExactlyOnceSink(t, ["clip_id"])
 
     def crash(self, pdf, batch_id):
         raise RuntimeError("crash after the output commit")
@@ -145,6 +141,6 @@ def test_lineage_every_partition(spark, tmp_path):
     rows = [(0, o, None) for o in (3, 4, 5)] + [(5, o, None) for o in (10, 12)]
     rows += [(40, o, None) for o in (100, 101, 102, 103)] + [(None, 9, None)]
     t = tbl.bootstrap(str(tmp_path / "t"), ["clip_id"])
-    ExactlyOnceSink(t, ["clip_id"], ack="replicated")(_side_batch(spark, rows), 0)
+    ExactlyOnceSink(t, ["clip_id"])(_side_batch(spark, rows), 0)
     lin = sorted(tuple(r) for r in t["lineage"].read(spark).collect())
     assert lin == [(0, 3, 5, 3, 0), (5, 10, 12, 2, 0), (40, 100, 103, 4, 0)]

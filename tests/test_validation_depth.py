@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from hydra_spark import validation as V
-from hydra_spark.tables import TransactionalTable
 
 
 def _nested_df(spark):
@@ -149,19 +148,6 @@ def test_error_codes(spark):
     )
     got = [r[0] for r in df.select(V.error_code(F.col("r"))).collect()]
     assert got == [413, 422, 422, 400, 408, 500, None]
-
-
-def test_publish_to_missing_table_fails_fast(spark, tmp_path):
-    """K6 TopicNotFoundInMetadata analog: the sink refuses at plan time
-    (not per record) when the output table was never bootstrapped."""
-    from hydra_spark.sink import ExactlyOnceSink
-
-    with pytest.raises(V.TableNotFoundError):
-        ExactlyOnceSink.for_existing(str(tmp_path / "nope"), ["k"])
-    # bootstrapped path works
-    t = TransactionalTable(str(tmp_path / "yes" / "output"), ["k"])
-    sink = ExactlyOnceSink.for_existing(str(tmp_path / "yes"), ["k"])
-    assert sink.tables["output"].path == t.path
 
 
 def test_nested_relaxed_preserves_null_struct(spark):
