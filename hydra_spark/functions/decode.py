@@ -76,7 +76,7 @@ def _binary_views(barr, n: int):
     lens = np.diff(off)
     is_null = np.zeros(n, dtype=bool)
     if barr.null_count:
-        is_null = np.asarray(pa.compute.is_null(barr).to_pylist())
+        is_null = pa.compute.is_null(barr).to_numpy(zero_copy_only=False)
     return off, data, lens, is_null
 
 
@@ -301,7 +301,7 @@ def decode_features(df: DataFrame, extended: bool = False) -> DataFrame:
                 )
                 continue
             barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
+            codec = rb.column(names.index("codec")).to_numpy(zero_copy_only=False)
 
             # binary column -> (offsets, data) numpy views, zero-copy
             off, data, lens, is_null = _binary_views(barr, n)

@@ -103,6 +103,12 @@ def test_spark_submit_py_files(dataset, tmp_path):
     # changelog state checkpoints and zstd output files
     state = glob.glob(os.path.join(out, "_checkpoint", "state", "**", "*.changelog"), recursive=True)
     assert state, "join state holds no changelog checkpoints"
+    # the file:// override keeps both checksum layers: Hadoop's
+    # .N.changelog.crc sidecar and Spark's N.changelog.crc checksum file
+    for f in state:
+        d, name = os.path.split(f)
+        assert os.path.isfile(os.path.join(d, f".{name}.crc")), f
+        assert os.path.isfile(f + ".crc"), f
     files = glob.glob(os.path.join(out, "output", "data", "**", "*.parquet"), recursive=True)
     codecs = {
         meta.row_group(g).column(c).compression

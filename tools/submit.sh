@@ -19,6 +19,11 @@ trap 'rm -rf "$PKG_DIR"' EXIT
 ZIP="$PKG_DIR/hydra_spark.zip"
 zip -qr "$ZIP" hydra_spark -x '*__pycache__*'
 
+# the fork-free file:// filesystem that session.ENGINE_CONF names: the
+# driver JVM is already running when runner.main builds its session, so
+# its class path comes from here (--jars ships it to cluster executors)
+LOCALFS_JAR=hydra_spark/jvm/hydra-localfs.jar
+
 # allocator tunables for the Python decode workers (see
 # hydra_spark/session.py:_set_allocator_env) — exported for local mode,
 # spark.executorEnv.* for cluster executors; both must exist before the
@@ -33,6 +38,8 @@ spark-submit \
   --conf spark.executorEnv.MALLOC_TOP_PAD_=67108864 \
   --conf spark.executorEnv.MALLOC_ARENA_MAX=2 \
   --py-files "$ZIP" \
+  --driver-class-path "$LOCALFS_JAR" \
+  --jars "$LOCALFS_JAR" \
   --conf spark.driver.memory=32g \
   hydra_spark/runner.py \
   --audio "$AUDIO" --transcripts "$TRS" --out "$OUT" "$@"
