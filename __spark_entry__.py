@@ -684,36 +684,41 @@ def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return M.frame_sample_plan(media, every_n=10).select("media_id", "frame_idx")
 
 
+# the e2e row's input: perfbench's clean arrival-ordered slices (one
+# sentinel slice at the end), which the DuckDB oracle reads too
+E2E_STREAMS = os.path.join(ENTRY, "e2e", "streams")
+_E2E_N = 2000
+
+
 def _ensure_e2e_run(spark: SparkSession) -> str:
     """Run-once cache of the FULL flagship streaming pipeline (ingest →
     admission → decode → stream-stream join → window key → normalize →
-    exactly-once MERGE sink with lineage+metrics) over a dedicated
-    n=2000 synth dataset under .data/entry/e2e. Keyed by the dataset's
-    _SUCCESS mtime like every other sidecar; sentinels are appended to
-    COPIES of the stream dirs so the canonical parquet the DuckDB
-    oracle reads stays pristine. files_per_trigger=16 >= the dataset's
-    8 files, so all real data lands in micro-batch 0 (nothing is
-    watermark-dropped) and the sentinel rounds flush the left-outer
-    tail — the output is a deterministic function of the data."""
+    keyed insert-only ``append_dedup`` sink with lineage+metrics) over an
+    n=2000 ``backlog_drain`` dataset of ``perfbench/gen.py`` (11 slice
+    files per stream), at the default trigger size. Keyed by the
+    dataset's meta.json mtime like every other sidecar. The slices
+    arrive in order within gen's declared disorder bounds and the last
+    one carries a far-future sentinel that flushes the left-outer tail,
+    so the output is a deterministic function of the data whatever the
+    trigger size."""
     import shutil
 
-    from hydra_spark import pipeline, synth
+    from hydra_spark import pipeline
+    from perfbench import gen
 
-    root = os.path.join(ENTRY, "e2e")
-    paths = synth.ensure_dataset(spark, root, n=_E2E_N)
-    out_root = os.path.join(root, "flagship_out")
+    meta = os.path.join(E2E_STREAMS, "meta.json")
+    if not os.path.exists(meta):
+        shutil.rmtree(E2E_STREAMS, ignore_errors=True)
+        gen.write_dataset(gen.WORKLOADS["backlog_drain"], 1, _E2E_N, E2E_STREAMS)
+    out_root = os.path.join(ENTRY, "e2e", "flagship_out")
     stamp = os.path.join(out_root, "_source_mtime")
-    want = str(int(os.path.getmtime(os.path.join(paths["transcripts"], "_SUCCESS"))))
+    want = str(int(os.path.getmtime(meta)))
     if os.path.exists(stamp) and open(stamp).read() == want:
         return out_root
     shutil.rmtree(out_root, ignore_errors=True)
-    aud = os.path.join(out_root, "streams", "audio")
-    trs = os.path.join(out_root, "streams", "transcripts")
-    shutil.copytree(paths["audio"], aud)
-    shutil.copytree(paths["transcripts"], trs)
-    q, _sink, _t = pipeline.start_flagship(spark, aud, trs, out_root, files_per_trigger=16)
-    q.processAllAvailable()
-    synth.append_watermark_sentinels(spark, aud, trs)
+    q, _sink, _t = pipeline.start_flagship(
+        spark, os.path.join(E2E_STREAMS, "audio"), os.path.join(E2E_STREAMS, "transcripts"), out_root
+    )
     q.processAllAvailable()
     q.stop()
     with open(stamp, "w") as f:
@@ -721,18 +726,15 @@ def _ensure_e2e_run(spark: SparkSession) -> str:
     return out_root
 
 
-_E2E_N = 2000
-
-
 def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPOSED end-to-end certification row (round 5): every stage of
     the flagship streaming pipeline in one oracle-checked result —
     file-replay ingest, admission, vectorized decode (n_samples),
     watermarked stream-stream interval join ([-10 s, +60 s] transcript
-    tolerance; ~1%% very-late transcripts must surface as NULL), 10 s
+    tolerance; ~1%% out-of-interval transcripts must surface as NULL), 10 s
     tumbling window key, transcript normalization, exactly-once keyed
-    MERGE. The DuckDB oracle independently recomputes the whole
-    composition from the pristine source parquet: a LEFT JOIN under the
+    ``append_dedup``. The DuckDB oracle independently recomputes the whole
+    composition from the source slices: a LEFT JOIN under the
     interval predicate + codec byte accounting + the shared SQL
     normalize. Row count == clip count certifies no loss/dup through
     the streaming path; each stage is also certified alone by its own
@@ -2006,17 +2008,19 @@ def oracle_sql() -> dict[str, str]:
                    CAST(unnest(generate_series(0, nf-1, 10)) AS INT) AS frame_idx
             FROM m
         """,
-        # pipeline_e2e: the composed flagship recomputed from the
-        # pristine source streams — LEFT JOIN under the [-10s, +60s]
-        # interval predicate (at most one transcript exists per clip, so
-        # no fan-out; very-late ones fall outside the range exactly like
-        # the engine's watermark drops them), codec byte accounting for
-        # n_samples, 10 s tumbling window key, shared SQL normalize.
+        # pipeline_e2e: the composed flagship recomputed from its gen
+        # source slices, sentinel rows dropped as on the engine side —
+        # LEFT JOIN under the [-10s, +60s] interval predicate (at most
+        # one transcript exists per clip, so no fan-out; out-of-interval
+        # ones surface as NULL like the engine's), codec byte accounting
+        # for n_samples, 10 s tumbling window key, shared SQL normalize.
         "pipeline_e2e": f"""
             WITH a AS (SELECT clip_id, codec, bytes, event_time
-                       FROM read_parquet('{ENTRY}/e2e/clips_audio_n2000/*.parquet')),
+                       FROM read_parquet('{E2E_STREAMS}/audio/*.parquet')
+                       WHERE clip_id NOT LIKE 'sentinel%'),
                  t AS (SELECT clip_id, transcript, event_time
-                       FROM read_parquet('{ENTRY}/e2e/transcripts_n2000/*.parquet')),
+                       FROM read_parquet('{E2E_STREAMS}/transcripts/*.parquet')
+                       WHERE clip_id NOT LIKE 'sentinel%'),
                  j AS (SELECT a.clip_id,
                               CAST(floor(epoch(a.event_time)/10)*10 AS BIGINT) AS window_start_s,
                               CAST(CASE WHEN a.codec = 'pcm16' THEN octet_length(a.bytes)//2

@@ -144,7 +144,6 @@ def main(argv=None) -> int:
     ap.add_argument("--files-per-trigger", type=int, default=FILES_PER_TRIGGER)
     ap.add_argument("--bounded", action="store_true", help="replay to end, then exit")
     ap.add_argument("--max-restarts", type=int, default=-1)
-    ap.add_argument("--rollup", action="store_true", help="also run the window rollup query")
     ap.add_argument(
         "--batch-timeout-ms", type=int, default=None,
         help="flag batches slower than this in the progress feed (Hydra ingest-timeout analog)",
@@ -164,30 +163,22 @@ def main(argv=None) -> int:
         )
     )
 
-    queries = []
-
     def start_flagship():
         return pipeline.start_flagship(
             spark, args.audio, args.transcripts, args.out, files_per_trigger=args.files_per_trigger
         )
-
-    if args.rollup:
-        rq, _ = pipeline.start_window_rollup(spark, args.audio, args.out, args.files_per_trigger)
-        queries.append(rq)
 
     # dead-letter delivery: admission rejects leave the main stream
     # pre-join (a ts-invalid row would be watermark-dropped there), so
     # the stateless side stream MUST run alongside the flagship or
     # RecordTooLarge/InvalidLogicalType rows are silently lost
     qq, _ = pipeline.start_quarantine_stream(spark, args.audio, args.out, args.files_per_trigger)
-    queries.append(qq)
 
     tables, restarts = run_with_restarts(
         start_flagship, max_restarts=args.max_restarts, bounded=args.bounded
     )
-    for q in queries:
-        q.processAllAvailable()
-        q.stop()
+    qq.processAllAvailable()
+    qq.stop()
 
     n = tables["output"].read(spark).count()
     print(json.dumps({"rows_out": int(n), "restarts": restarts}))

@@ -1,4 +1,6 @@
-"""Deterministic synthesis of the input table (FIXTURES.md §1-§3).
+"""Deterministic synthesis of the registry's clips table and its oracle
+sidecars (FIXTURES.md §1, §3). The flagship's two streams come from
+``perfbench/gen.py`` instead (FIXTURES.md §2).
 
 Input shape fixed by BASELINE.json ``input_hint``:
   (clip_id string, bytes binary, sr_hz int, dur_ms int, codec string,
@@ -25,7 +27,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import SparkSession, types as T
 
 from hydra_spark import audio
 
@@ -361,118 +363,16 @@ def write_clip_lufs(
     return out_dir
 
 
-def split_streams(
-    spark: SparkSession,
-    clips_dir: str,
-    audio_dir: str,
-    transcripts_dir: str,
-    seed: int = DEFAULT_SEED,
-    late_pct: float = 0.05,
-    very_late_pct: float = 0.01,
-    files: int = 32,
-) -> tuple[str, str]:
-    """Split the clips table into the two join-side streams (FIXTURES.md §2).
-
-    clips_audio(clip_id, bytes, sr_hz, dur_ms, codec, event_time, lineage)
-    transcripts_late(clip_id, transcript, event_time) — 5%% delayed 1-45 s,
-    1%% delayed beyond the watermark (must be dropped by the engine).
-    Delays are a deterministic hash of clip_id — no RNG at read time.
-    """
-    clips = spark.read.parquet(clips_dir)
-    aud = clips.drop("transcript")
-    # round-robin into exactly `files` even files — file count bounds the
-    # scan+decode task parallelism of the streaming source (one task per
-    # file), so it must comfortably exceed the executor core count
-    aud.repartition(files).write.mode("overwrite").parquet(audio_dir)
-
-    delay_s = _transcript_delay_col(late_pct, very_late_pct)
-    tr = (
-        clips.where(F.col("transcript").isNotNull())
-        .select(
-            "clip_id",
-            "transcript",
-            (F.col("event_time") + F.make_dt_interval(secs=delay_s.cast("double"))).alias("event_time"),
-        )
-    )
-    tr.repartition(files).write.mode("overwrite").parquet(transcripts_dir)
-    return audio_dir, transcripts_dir
-
-
-def _transcript_delay_col(late_pct: float = 0.05, very_late_pct: float = 0.01):
-    h = F.abs(F.hash("clip_id"))
-    return (
-        F.when(h % 100 < int(very_late_pct * 100), 90 + (h % 30))
-        .when(h % 100 < int((late_pct + very_late_pct) * 100), 1 + (h % 45))
-        .otherwise(0)
-    )
-
-
-def _purge_aborted(path: str) -> None:
-    """Remove a dataset directory left behind by a crashed write (no
-    _SUCCESS marker): it holds partial task output that wastes disk and
-    can never be read."""
-    import shutil
-
-    if os.path.isdir(path) and not os.path.exists(os.path.join(path, "_SUCCESS")):
-        shutil.rmtree(path, ignore_errors=True)
-
-
-def ensure_dataset(
+def ensure_clips(
     spark: SparkSession,
     root: str,
     n: int,
     seed: int = DEFAULT_SEED,
-) -> dict[str, str]:
-    """Idempotent: build clips + split streams under root if missing."""
-    paths = {
-        "clips": os.path.join(root, f"clips_n{n}"),
-        "audio": os.path.join(root, f"clips_audio_n{n}"),
-        "transcripts": os.path.join(root, f"transcripts_n{n}"),
-    }
-    if os.path.exists(os.path.join(paths["transcripts"], "_SUCCESS")):
-        return paths
-    # aborted partial writes (no _SUCCESS) are dead weight: purge before
-    # regenerating
-    for k in ("clips", "audio", "transcripts"):
-        _purge_aborted(paths[k])
-    # file count bounds streaming scan/decode parallelism (one task
-    # per file) — scale with n, cap at 128
-    files = max(8, min(128, n // 2000))
-    if not os.path.exists(os.path.join(paths["clips"], "_SUCCESS")):
-        write_clips(spark, paths["clips"], n, seed)
-    split_streams(spark, paths["clips"], paths["audio"], paths["transcripts"], seed, files=files)
-    return paths
-
-
-def append_watermark_sentinels(
-    spark: SparkSession,
-    audio_dir: str,
-    transcripts_dir: str,
-    base_ts: str = "2025-01-02 00:00:00",
-    rounds: int = 2,
-) -> None:
-    """Append far-future sentinel rows to both streams so the watermark
-    advances past all real data and pending left-outer/agg state
-    flushes. Two rounds: the watermark updates at the END of batch N,
-    emission happens in batch N+1. Sentinel clip_ids are prefixed
-    'sentinel' so consumers can filter them; call this on COPIES of
-    canonical stream dirs (it appends files)."""
-    for r in range(rounds):
-        ts = F.lit(base_ts).cast("timestamp") + F.expr(f"interval {r * 10} minutes")
-        aud = spark.range(1).select(
-            F.concat(F.lit("sentinel-a"), F.lit(r)).alias("clip_id"),
-            F.lit(b"\x00\x00").alias("bytes"),
-            F.lit(8000).alias("sr_hz"),
-            F.lit(200).alias("dur_ms"),
-            F.lit("pcm16").alias("codec"),
-            F.lit(0).cast("int").alias("ingest_partition"),
-            F.lit(10**9 + r).cast("long").alias("ingest_offset"),
-            ts.alias("event_time"),
-        )
-        aud.coalesce(1).write.mode("append").parquet(audio_dir)
-        tr = spark.range(1).select(
-            F.concat(F.lit("sentinel-t"), F.lit(r)).alias("clip_id"),
-            F.lit("sentinel").alias("transcript"),
-            ts.alias("event_time"),
-        )
-        tr.coalesce(1).write.mode("append").parquet(transcripts_dir)
+) -> str:
+    """Idempotent: build the clips table under root unless a finished
+    one (with _SUCCESS) is there; the overwrite replaces a crashed
+    write's partial output. Returns its path."""
+    path = os.path.join(root, f"clips_n{n}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        write_clips(spark, path, n, seed)
+    return path

@@ -3,10 +3,11 @@
 Start the flagship pipeline in a subprocess, SIGKILL it mid-stream,
 restart from the same checkpoint, and assert the final output set is
 IDENTICAL to an uninterrupted run: zero lost and zero duplicated
-(clip_id, window_start) keys, no double-committed batch ids.
+(clip_id, window_start) keys, no double-committed batch ids — and that
+both agree with the generator's truth, so a loss common to both runs
+fails too.
 """
 
-import json
 import os
 import shutil
 import signal
@@ -17,19 +18,10 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import REPO, TEST_ROOT, flush_sentinels
+from hydra_spark import pipeline
+from tests.conftest import REPO, TEST_ROOT, oracle
 
 RUNNER = [sys.executable, "-m", "hydra_spark.runner"]
-
-
-def _prepare_streams(spark, dataset, tag):
-    aud = os.path.join(TEST_ROOT, f"audio_{tag}")
-    trs = os.path.join(TEST_ROOT, f"trs_{tag}")
-    for src, dst in [(dataset["audio"], aud), (dataset["transcripts"], trs)]:
-        shutil.rmtree(dst, ignore_errors=True)
-        shutil.copytree(src, dst)
-    flush_sentinels(spark, aud, trs)
-    return aud, trs
 
 
 def _current_version(out_root):
@@ -53,8 +45,8 @@ def _run(aud, trs, out, wait=True):
 
 
 @pytest.mark.slow
-def test_kill_and_resume_exactly_once(spark, dataset):
-    aud, trs = _prepare_streams(spark, dataset, "kill")
+def test_kill_and_resume_exactly_once(spark, streams, truth):
+    aud, trs = os.path.join(streams, "audio"), os.path.join(streams, "transcripts")
     out_victim = os.path.join(TEST_ROOT, "out_victim")
     out_clean = os.path.join(TEST_ROOT, "out_clean")
     shutil.rmtree(out_victim, ignore_errors=True)
@@ -97,3 +89,7 @@ def test_kill_and_resume_exactly_once(spark, dataset):
     # a batch id committed before the kill must not be re-committed
     batches = victim.manifest()["committed_batches"]
     assert len(batches) == len(set(batches))
+
+    # every clip's outcome after the resume, quarantine included
+    verdict = oracle.check(spark, pipeline.build_tables(out_victim), truth)
+    assert verdict["failed"] == 0, verdict["by_cause"]

@@ -72,15 +72,15 @@ def test_progress_listener_writes_jsonl(tmp_path):
     assert lines[1]["event"] == "terminated"
 
 
-def test_spark_submit_py_files(dataset, tmp_path):
+def test_spark_submit_py_files(streams, tmp_path):
     """End-to-end through `spark-submit --py-files` — the packaged-engine
-    submission mode (north rule). Bounded replay of the n=2000 fixture,
-    exactly-once output must match the direct-API row semantics."""
+    submission mode (north rule). Bounded replay of the n=2000 gen
+    fixture, exactly-once output must match the direct-API row semantics."""
     out = str(tmp_path / "submit_out")
     r = subprocess.run(
         [
             "bash", "tools/submit.sh", "local[4]",
-            dataset["audio"], dataset["transcripts"], out, "--bounded",
+            os.path.join(streams, "audio"), os.path.join(streams, "transcripts"), out, "--bounded",
         ],
         cwd=REPO,
         capture_output=True,

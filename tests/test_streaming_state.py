@@ -7,7 +7,6 @@ metadata cache (:78-89).
 """
 
 import os
-import shutil
 
 import pandas as pd
 import pytest
@@ -78,33 +77,28 @@ def test_latest_wins_stream_matches_batch_form(spark, kv_stream_dir):
     assert got == {"k1": "v1b", "k3": "v3a"}
 
 
-def test_window_rollup_stream_matches_batch(spark, dataset, tmp_path):
+def test_window_rollup_stream_matches_batch(spark, streams, tmp_path):
     from hydra_spark import pipeline
     from hydra_spark.functions.decode import decode_features
     from hydra_spark.operators import windows as win
-    from tests.conftest import flush_sentinels
 
-    aud = str(tmp_path / "aud")
-    shutil.copytree(dataset["audio"], aud)
-    out_root = str(tmp_path / "roll")
-    q, rollup_tbl = pipeline.start_window_rollup(spark, aud, out_root, files_per_trigger=16)
-    q.processAllAvailable()
-    # sentinels push the watermark past all real windows (audio side only)
-    flush_sentinels(spark, aud, str(tmp_path / "ignored_trs"))
+    aud = os.path.join(streams, "audio")
+    q, rollup_tbl = pipeline.start_window_rollup(spark, aud, str(tmp_path / "roll"))
+    # the sentinel slice pushes the watermark past all real windows
     q.processAllAvailable()
     q.stop()
 
-    got = (
-        rollup_tbl.read(spark)
-        .where(F.col("window_start") < F.lit("2025-01-01 12:00:00").cast("timestamp"))
-        .select("window_start", "codec", "n_clips", "total_samples")
+    # the real clips' windows: not the ts<=0 clips' or the sentinel's
+    real = F.col("window_start").between(
+        F.lit("2025-01-01 00:00:00").cast("timestamp"), F.lit("2025-01-01 12:00:00").cast("timestamp")
     )
-    real = spark.read.parquet(dataset["audio"])
+    cols = ["window_start", "codec", "n_clips", "total_samples"]
+    got = rollup_tbl.read(spark).where(real).select(*cols)
     expected = win.tumbling(
-        decode_features(real).where(F.col("decode_error").isNull()),
+        decode_features(spark.read.parquet(aud)).where(F.col("decode_error").isNull()),
         pipeline.WINDOW_SIZE, "codec",
         aggs=[F.count("*").alias("n_clips"), F.sum("n_samples").alias("total_samples")],
-    ).select("window_start", "codec", "n_clips", "total_samples")
+    ).where(real).select(*cols)
     assert got.count() == expected.count()
     assert got.exceptAll(expected).count() == 0
 

@@ -3,8 +3,9 @@
 # north-rule submission mode. Usage:
 #   tools/submit.sh <master> <audio_dir> <transcripts_dir> <out_root> [extra runner args...]
 # e.g.
-#   tools/submit.sh local[4] .data/smoke/clips_audio_n2000 .data/smoke/transcripts_n2000 /tmp/run4 --bounded
-# (tools/smoke_flagship.py generates the .data/smoke dataset.)
+#   tools/submit.sh local[4] <ds>/audio <ds>/transcripts /tmp/run4 --bounded
+# where <ds> is a perfbench/gen.py dataset (arrival-ordered slice files),
+# e.g. .data/perfbench/inputs/backlog_drain-n4000-s1 after a perfbench run.
 # On a real cluster, swap the master for yarn/k8s; nothing else changes.
 # Only deployment settings live here: the engine settings come from
 # hydra_spark/session.py, which runner.main applies.
