@@ -27,6 +27,16 @@ the bundled hive-exec registers for ``file://``). Only the
 ``file`` scheme changes, so checkpoints on an object store are
 unaffected. Under spark-submit the driver JVM starts before this module
 runs, so ``tools/submit.sh`` puts the jar on its class path.
+
+The Python workers: ``ENGINE_CONF`` makes ``hydra_spark.pydaemon`` their
+daemon. Spark puts ``pyspark.zip``, the py4j zip and the spark-core jar
+in front of every worker's ``PYTHONPATH``, and each task's
+``importlib.invalidate_caches()`` re-reads all three (~250 ms of CPU per
+task on 4 cores); the daemon drops them from ``sys.path`` before pyspark
+loads when the installed pyspark and py4j are the same. Spark starts it
+as ``python -m hydra_spark.pydaemon``, so the package must be on the
+daemon's ``PYTHONPATH`` from the start: ``get_spark`` exports it in
+process, ``tools/submit.sh`` for spark-submit.
 """
 
 from __future__ import annotations
@@ -79,6 +89,9 @@ ENGINE_CONF = {
     "spark.hadoop.fs.file.impl": "hydra.localfs.NioLocalFileSystem",
     "spark.hadoop.fs.AbstractFileSystem.file.impl": "hydra.localfs.NioLocalFs",
     "spark.driver.extraClassPath": LOCALFS_JAR,
+    # Python workers fork from a daemon that first drops Spark's
+    # redundant archives from sys.path (see hydra_spark/pydaemon.py)
+    "spark.python.daemon.module": "hydra_spark.pydaemon",
 }
 
 
@@ -114,11 +127,12 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     _set_allocator_env()
-    # Python workers must be able to import the engine package: classes
-    # pickled BY REFERENCE (e.g. the hydra_cdf streaming DataSource)
-    # resolve through the worker's import path, not cloudpickle. Export
-    # before the JVM/daemon starts; on a real cluster the package ships
-    # via --py-files / the image and this is a no-op.
+    # Python workers must be able to import the engine package: the
+    # daemon is hydra_spark.pydaemon (ENGINE_CONF), and classes pickled
+    # BY REFERENCE (e.g. the hydra_cdf streaming DataSource) resolve
+    # through the worker's import path, not cloudpickle. Export before
+    # the JVM/daemon starts; --py-files arrive only with the first task,
+    # so under spark-submit tools/submit.sh sets PYTHONPATH itself.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(os.pathsep):

@@ -32,12 +32,20 @@ LOCALFS_JAR=hydra_spark/jvm/hydra-localfs.jar
 export MALLOC_MMAP_THRESHOLD_=1073741824 MALLOC_TRIM_THRESHOLD_=1073741824
 export MALLOC_TOP_PAD_=67108864 MALLOC_ARENA_MAX=2
 
+# the Python worker daemon is hydra_spark.pydaemon (session.ENGINE_CONF),
+# imported before any task runs, so --py-files (added per task) is too
+# late: the package goes on PYTHONPATH, exported for local mode and
+# spark.executorEnv.* (the zip --py-files ships, in the executor's
+# working directory) for cluster executors
+export PYTHONPATH="$ZIP"
+
 spark-submit \
   --master "$MASTER" \
   --conf spark.executorEnv.MALLOC_MMAP_THRESHOLD_=1073741824 \
   --conf spark.executorEnv.MALLOC_TRIM_THRESHOLD_=1073741824 \
   --conf spark.executorEnv.MALLOC_TOP_PAD_=67108864 \
   --conf spark.executorEnv.MALLOC_ARENA_MAX=2 \
+  --conf spark.executorEnv.PYTHONPATH=hydra_spark.zip \
   --py-files "$ZIP" \
   --driver-class-path "$LOCALFS_JAR" \
   --jars "$LOCALFS_JAR" \
