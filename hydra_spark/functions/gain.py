@@ -20,20 +20,22 @@ All-silent clips pass through unscaled; errors are skip-and-count rows
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
-from hydra_spark import audio
 from hydra_spark.functions.decode import (
-    _LUT,
-    _binary_views,
-    _classify_errors,
-    _ragged_gather,
+    _MAX_ROW,
+    _MAX_SLICE,
+    _binary_column,
+    _decoded,
     _ragged_scatter,
+    _runs,
+    _starts,
+    arrow_stage,
 )
-from hydra_spark.functions.resample import _MAX_ROW, _MAX_SLICE
 
 OUT_FIELDS = [
     T.StructField("n_samples", T.IntegerType(), True),
@@ -56,6 +58,48 @@ def rms_normalize_clips(
     return gain_clips(
         df, max_slice_bytes=max_slice_bytes, mode="rms", target_rms=target_rms
     )
+
+
+def _gain(b, mode: str, target: float, max_slice_bytes: int):
+    b.fail(b.n_samp * 2 > _MAX_ROW, "gained output exceeds 2 GiB")
+    out_bytes = b.n_samp * 2  # pcm16 out
+    peak = np.zeros(b.n, dtype=np.float64)
+    for a, z in _runs(out_bytes, max_slice_bytes):
+        out_heads = _starts(b.n_samp[a:z])
+        out_i2 = np.zeros(int(b.n_samp[a:z].sum()), dtype="<i2")
+        for rows, sl, x in _decoded(b, b.ok_in(a, z)):
+            nz = sl > 0
+            if not nz.any():
+                continue
+            bounds = np.concatenate(([0], np.cumsum(sl[nz])[:-1]))
+            if mode == "rms":
+                # f64 squares, sequential reduceat — the
+                # `_group_features` expression, and the per-row oracle's
+                # exact op (gain_clip_rms reduceats the whole row the
+                # same way)
+                sums = np.add.reduceat(np.square(x, dtype=np.float64), bounds)
+                stat = np.sqrt(sums / sl[nz])
+            else:
+                # per-row peak in float64 — the oracle's exact
+                # expression (max of |x| after the f64 cast; abs and max
+                # are value-exact across the cast)
+                stat = np.maximum(
+                    np.maximum.reduceat(x, bounds),
+                    -np.minimum.reduceat(x, bounds),
+                ).astype(np.float64)
+            peak[rows[nz]] = stat
+            scale = np.where(stat == 0.0, 1.0, target / stat)
+            y = x.astype(np.float64) * np.repeat(scale, sl[nz])
+            np.clip(y, -1.0, 1.0, out=y)
+            y *= 32767.0
+            _ragged_scatter(out_i2, out_heads[rows[nz] - a], sl[nz], y.astype("<i2"))
+        span = slice(a, z)
+        yield span, [
+            b.masked(b.n_samp, span),
+            b.masked(peak, span, pa.float64()),
+            _binary_column(out_bytes[span], out_i2.view(np.uint8), b.ok[span]),
+            b.errors(span),
+        ]
 
 
 def gain_clips(
@@ -82,134 +126,7 @@ def gain_clips(
         raise ValueError(f"target_rms must be in (0, 1], got {target_rms}")
     if not 1 <= max_slice_bytes <= _MAX_ROW:
         raise ValueError(f"max_slice_bytes must be in [1, {_MAX_ROW}], got {max_slice_bytes}")
-    import pyarrow as pa
-
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            if n == 0:
-                continue
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null)
-            err_mask = err != None  # noqa: E711
-            ok = ~err_mask
-
-            n_samp = np.zeros(n, dtype=np.int64)
-            is_pcm = codec == "pcm16"
-            n_samp[ok & is_pcm] = lens[ok & is_pcm] // 2
-            n_samp[ok & ~is_pcm] = lens[ok & ~is_pcm]
-            out_bytes = n_samp * 2  # pcm16 out; rows > int32 range -> error
-            too_big = out_bytes > _MAX_ROW
-            if too_big.any():
-                err[too_big] = "ValueError: gained output exceeds 2 GiB"
-                err_mask = err != None  # noqa: E711
-                ok = ~err_mask
-                n_samp[too_big] = 0
-                out_bytes[too_big] = 0
-            peak = np.zeros(n, dtype=np.float64)
-
-            a = 0
-            while a < n:
-                b = a + 1
-                tot = int(out_bytes[a])
-                while b < n and tot + int(out_bytes[b]) <= max_slice_bytes:
-                    tot += int(out_bytes[b])
-                    b += 1
-                m = b - a
-                codec_s = codec[a:b]
-                lens_s = lens[a:b]
-                heads_abs = off[:-1][a:b]
-                ok_s = ok[a:b]
-                n_samp_s = n_samp[a:b]
-                err_mask_s = err_mask[a:b]
-
-                out_heads = np.zeros(m, dtype=np.int64)
-                np.cumsum(n_samp_s[:-1], out=out_heads[1:])
-                out_i2 = np.zeros(int(n_samp_s.sum()), dtype="<i2")
-
-                CHUNK = 1 << 18
-                for c in audio.SUPPORTED_CODECS:
-                    mask = (codec_s == c) & ok_s
-                    if not mask.any():
-                        continue
-                    rows = np.nonzero(mask)[0]
-                    seg = lens_s[rows]
-                    start = 0
-                    while start < len(rows):
-                        end = start + 1
-                        tot_in = int(seg[start])
-                        while end < len(rows) and tot_in + seg[end] <= CHUNK:
-                            tot_in += int(seg[end])
-                            end += 1
-                        r_c = rows[start:end]
-                        s_c = seg[start:end]
-                        start = end
-                        gathered = _ragged_gather(data, heads_abs[r_c], s_c)
-                        if c == "pcm16":
-                            x = gathered.view("<i2").astype(np.float32)
-                            x /= np.float32(32767.0)
-                            sl = s_c // 2
-                        else:
-                            x = _LUT[c][gathered]
-                            sl = s_c
-                        nz = sl > 0
-                        if not nz.any():
-                            continue
-                        bounds = np.concatenate(([0], np.cumsum(sl[nz])[:-1]))
-                        if mode == "rms":
-                            # f64 squares, sequential reduceat — the
-                            # `_group_features` expression, and the
-                            # per-row oracle's exact op (gain_clip_rms
-                            # reduceats the whole row the same way)
-                            sums = np.add.reduceat(
-                                np.square(x, dtype=np.float64), bounds
-                            )
-                            stat = np.sqrt(sums / sl[nz])
-                            target = target_rms
-                        else:
-                            # per-row peak in float64 — the oracle's
-                            # exact expression (max of |x| after the
-                            # f64 cast; abs and max are value-exact
-                            # across the cast)
-                            stat = np.maximum(
-                                np.maximum.reduceat(x, bounds),
-                                -np.minimum.reduceat(x, bounds),
-                            ).astype(np.float64)
-                            target = target_peak
-                        peak[a + r_c[nz]] = stat
-                        scale = np.where(stat == 0.0, 1.0, target / stat)
-                        y = x.astype(np.float64) * np.repeat(scale, sl[nz])
-                        np.clip(y, -1.0, 1.0, out=y)
-                        y *= 32767.0
-                        _ragged_scatter(out_i2, out_heads[r_c[nz]], sl[nz], y.astype("<i2"))
-
-                offsets = np.zeros(m + 1, dtype=np.int32)
-                offsets[1:] = np.cumsum(out_bytes[a:b]).astype(np.int32)
-                bin_bufs = [None, pa.py_buffer(offsets), pa.py_buffer(out_i2.view(np.uint8))]
-                null_count = 0
-                if err_mask_s.any():
-                    bin_bufs[0] = pa.py_buffer(np.packbits(~err_mask_s, bitorder="little"))
-                    null_count = int(err_mask_s.sum())
-                bytes_gain = pa.Array.from_buffers(pa.binary(), m, bin_bufs, null_count=null_count)
-
-                arrays = [rb.column(names.index(k)).slice(a, m) for k in keep_names] + [
-                    pa.array(n_samp_s.astype(np.int32), type=pa.int32(), mask=err_mask_s),
-                    pa.array(peak[a:b], type=pa.float64(), mask=err_mask_s),
-                    bytes_gain,
-                    pa.array(err[a:b], type=pa.string(), from_pandas=True),
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-                )
-                a = b
-
-    return df.mapInArrow(fn, schema=out_schema)
+    target = target_rms if mode == "rms" else target_peak
+    return arrow_stage(
+        df, OUT_FIELDS, partial(_gain, mode=mode, target=target, max_slice_bytes=max_slice_bytes)
+    )

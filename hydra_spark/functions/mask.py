@@ -22,16 +22,16 @@ touches each payload exactly once; the added columns are ~16 B/row.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from fractions import Fraction
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from hydra_spark.functions.decode import (
-    _binary_views,
-    _classify_errors,
+    _binary_column,
+    _filled,
     _ragged_scatter,
+    arrow_stage,
 )
 
 # encoded-zero byte per codec (audio.encode(0)): the scatter fill values
@@ -62,6 +62,28 @@ def mask_position_expr(n_samples, mask_len, id_col: str = "clip_id", salt: str =
     return F.when(span > 0, folded % span).otherwise(F.lit(0))
 
 
+def _time_mask(b):
+    ms = _filled(b.rb, "_ms")
+    ml = _filled(b.rb, "_ml")
+    # one contiguous copy of the whole batch payload, then a single
+    # ragged scatter of the zero patterns over it
+    out = b.data[b.off[0] : b.off[-1]].copy()
+    base = b.off[:-1] - b.off[0]
+    for c, zb in _ZERO_BYTE.items():
+        rows = np.nonzero((b.codec == c) & b.ok & (ml > 0))[0]
+        if not len(rows):
+            continue
+        bps = 2 if c == "pcm16" else 1
+        _ragged_scatter(out, base[rows] + ms[rows] * bps, ml[rows] * bps, zb)
+    yield None, [
+        b.masked(b.n_samp),
+        b.masked(ms),
+        b.masked(ml),
+        _binary_column(b.lens, out, b.ok),
+        b.errors(),
+    ]
+
+
 def time_mask(
     df: DataFrame, mask_frac="0.1", id_col: str = "clip_id", salt: str = ""
 ) -> DataFrame:
@@ -78,7 +100,6 @@ def time_mask(
     if not 0 <= fr < 1:
         raise ValueError(f"mask_frac must be in [0, 1), got {mask_frac}")
     num, den = fr.numerator, fr.denominator
-    bps = F.when(F.col("codec") == "pcm16", F.lit(2)).otherwise(F.lit(1))
     n_samples = (
         F.when(F.col("codec") == "pcm16", F.octet_length("bytes") / 2)
         .otherwise(F.octet_length("bytes"))
@@ -94,61 +115,7 @@ def time_mask(
         "_ms", mask_position_expr(F.col("_n"), F.col("_ml"), id_col, salt)
     )
 
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            if n == 0:
-                continue
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            ms = np.asarray(rb.column(names.index("_ms")).to_pandas().fillna(0), dtype=np.int64)
-            ml = np.asarray(rb.column(names.index("_ml")).to_pandas().fillna(0), dtype=np.int64)
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null)
-            err_mask = err != None  # noqa: E711
-            ok = ~err_mask
-
-            # one contiguous copy of the whole batch payload, then a
-            # single ragged scatter of the zero patterns over it
-            out = data[off[0] : off[-1]].copy()
-            base = off[:-1] - off[0]
-            for c, zb in _ZERO_BYTE.items():
-                rows = np.nonzero((codec == c) & ok & (ml > 0))[0]
-                if not len(rows):
-                    continue
-                b = 2 if c == "pcm16" else 1
-                starts = base[rows] + ms[rows] * b
-                seglens = ml[rows] * b
-                _ragged_scatter(out, starts, seglens, zb)
-
-            offsets = (off - off[0]).astype(np.int32)
-            bin_bufs = [None, pa.py_buffer(offsets), pa.py_buffer(out)]
-            null_count = 0
-            if err_mask.any():
-                bin_bufs[0] = pa.py_buffer(np.packbits(~err_mask, bitorder="little"))
-                null_count = int(err_mask.sum())
-            bytes_masked = pa.Array.from_buffers(pa.binary(), n, bin_bufs, null_count=null_count)
-
-            ns = np.where(codec == "pcm16", lens // 2, lens)
-            arrays = [rb.column(names.index(k)) for k in keep_names] + [
-                pa.array(ns.astype(np.int32), type=pa.int32(), mask=err_mask),
-                pa.array(ms.astype(np.int32), type=pa.int32(), mask=err_mask),
-                pa.array(ml.astype(np.int32), type=pa.int32(), mask=err_mask),
-                bytes_masked,
-                pa.array(err, type=pa.string(), from_pandas=True),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-            )
-
-    return with_pos.mapInArrow(fn, schema=out_schema)
+    return arrow_stage(with_pos, OUT_FIELDS, _time_mask, drop=("bytes", "_n", "_ml", "_ms"))
 
 
 def freq_mask(

@@ -24,26 +24,20 @@ KafkaClientAlgebra.scala:380-395), never exceptions.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
 from hydra_spark import audio
-from hydra_spark.functions.decode import (
-    _binary_views,
-    _classify_errors,
-    _head_windows,
-)
+from hydra_spark.functions.decode import _head_windows, arrow_stage
 
 OUT_FIELDS = [
     T.StructField("n_samples", T.IntegerType(), True),
     T.StructField("mel_db", T.ArrayType(T.DoubleType()), True),
     T.StructField("decode_error", T.StringType(), True),
 ]
-
-# rows per batched FFT — keeps window matrix + spectrum L3-resident
-_FFT_ROWS = 512
 
 # (sr_hz, n_fft, n_mels) -> (n_mels, n_bins) float64; executors see few
 # distinct rates, so this stays tiny and is built once per worker
@@ -58,6 +52,24 @@ def _filterbank(sr: int, n_fft: int, n_mels: int) -> np.ndarray:
     return fb
 
 
+def _mel(b, n_fft: int, n_mels: int):
+    sr = b.sr
+    mel: list = [None] * b.n
+    sel = b.ok & (b.n_samp > 0) & (sr > 0)
+    for r_c, Z in _head_windows(b, sel, n_fft):
+        # identical op sequence to audio.mel_energies:
+        # f32 rfft -> f32 abs -> f64 -> square -> GEMM
+        mag = np.abs(np.fft.rfft(Z, axis=1)).astype(np.float64)
+        power = mag * mag
+        for rate in np.unique(sr[r_c]):
+            sel_r = sr[r_c] == rate
+            fb = _filterbank(int(rate), n_fft, n_mels)
+            db = 10.0 * np.log10(power[sel_r] @ fb.T + audio.MEL_DB_EPS)
+            for j, ri in enumerate(r_c[sel_r]):
+                mel[ri] = db[j]
+    yield None, [b.masked(b.n_samp), pa.array(mel, type=pa.list_(pa.float64())), b.errors()]
+
+
 def mel_clips(
     df: DataFrame, n_fft: int = audio.N_FFT, n_mels: int = audio.N_MELS
 ) -> DataFrame:
@@ -66,71 +78,4 @@ def mel_clips(
     mel_db is NULL for empty clips, non-positive sr_hz, and error rows;
     all-silent windows produce the well-defined -120 dB floor vector.
     """
-    import pyarrow as pa
-
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-    out_names = keep_names + [f.name for f in OUT_FIELDS]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            if n == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(names.index(k)) for k in keep_names]
-                    + [
-                        pa.array([], type=pa.int32()),
-                        pa.array([], type=pa.list_(pa.float64())),
-                        pa.array([], type=pa.string()),
-                    ],
-                    names=out_names,
-                )
-                continue
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            sr = np.asarray(
-                rb.column(names.index("sr_hz")).to_pandas().fillna(0).to_numpy(),
-                dtype=np.int64,
-            )
-
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null)
-            err_mask = err != None  # noqa: E711
-            ok = ~err_mask
-
-            ns = np.zeros(n, dtype=np.int64)
-            is_pcm = codec == "pcm16"
-            ns[ok & is_pcm] = lens[ok & is_pcm] // 2
-            ns[ok & ~is_pcm] = lens[ok & ~is_pcm]
-
-            mel: list = [None] * n
-
-            for c in audio.SUPPORTED_CODECS:
-                mask = (codec == c) & ok & (ns > 0) & (sr > 0)
-                if not mask.any():
-                    continue
-                rows = np.nonzero(mask)[0]
-                for r_c, Z in _head_windows(data, off, lens, rows, c, n_fft, _FFT_ROWS):
-                    # identical op sequence to audio.mel_energies:
-                    # f32 rfft -> f32 abs -> f64 -> square -> GEMM
-                    mag = np.abs(np.fft.rfft(Z, axis=1)).astype(np.float64)
-                    power = mag * mag
-                    for rate in np.unique(sr[r_c]):
-                        sel = sr[r_c] == rate
-                        fb = _filterbank(int(rate), n_fft, n_mels)
-                        db = 10.0 * np.log10(power[sel] @ fb.T + audio.MEL_DB_EPS)
-                        for j, ri in enumerate(r_c[sel]):
-                            mel[ri] = db[j]
-
-            arrays = [rb.column(names.index(k)) for k in keep_names] + [
-                pa.array(ns.astype(np.int32), type=pa.int32(), mask=err_mask),
-                pa.array(mel, type=pa.list_(pa.float64())),
-                pa.array(err, type=pa.string(), from_pandas=True),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(fn, schema=out_schema)
+    return arrow_stage(df, OUT_FIELDS, partial(_mel, n_fft=n_fft, n_mels=n_mels), sr="read")

@@ -28,19 +28,21 @@ KafkaClientAlgebra.scala:380-395), never exceptions.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, types as T
 
-from hydra_spark import audio
 from hydra_spark.functions.decode import (
-    _LUT,
-    _binary_views,
-    _classify_errors,
-    _ragged_gather,
+    _MAX_ROW,
+    _MAX_SLICE,
+    _binary_column,
+    _decoded,
     _ragged_index,
     _ragged_scatter,
+    _runs,
+    _starts,
+    arrow_stage,
 )
 
 OUT_FIELDS = [
@@ -50,15 +52,50 @@ OUT_FIELDS = [
     T.StructField("resample_error", T.StringType(), True),
 ]
 
-# Upsampling amplifies output well past input size (ulaw 8k -> pcm16
-# 44.1k is ~11x), so an input batch comfortably under Arrow's 2 GiB
-# binary-column bound can produce an OUTPUT that overflows the int32
-# offsets. Emit output in slices of at most _MAX_SLICE bytes (multiple
-# RecordBatches per input batch); a single row whose own output exceeds
-# the int32 offset range becomes an error row (it cannot be represented
-# in a non-large Arrow binary column at all).
-_MAX_SLICE = 1 << 30
-_MAX_ROW = (1 << 31) - 1
+
+def _resample(b, dst_sr: int, max_slice_bytes: int):
+    sr = b.sr
+    # per-row sample accounting (vectorized; errors stay 0)
+    n_out = np.zeros(b.n, dtype=np.int64)
+    ok = b.ok
+    n_out[ok] = (b.n_samp[ok] * dst_sr + sr[ok] - 1) // sr[ok]
+    b.fail(n_out * 2 > _MAX_ROW, "resampled output exceeds 2 GiB")
+    n_out[~b.ok] = 0
+    # emit in output-bounded slices: int32 Arrow offsets stay safe no
+    # matter how hard the batch upsamples (common case: 1 slice)
+    out_bytes = n_out * 2
+    for a, z in _runs(out_bytes, max_slice_bytes):
+        # preallocated flat pcm16 output + per-row heads (the ragged
+        # scatter destination — same index trick as the decode gather)
+        out_heads = _starts(n_out[a:z])
+        out_i2 = np.zeros(int(n_out[a:z].sum()), dtype="<i2")
+        for rows, sl, x in _decoded(b, b.ok_in(a, z)):
+            no = n_out[rows]
+            if not no.any():
+                continue
+            in_heads = _starts(sl)
+            # local output index 0..n_out-1 per row, ragged
+            j = _ragged_index(np.zeros(len(no), dtype=np.int64), no).astype(np.float64)
+            ratio = sr[rows].astype(np.float64) / float(dst_sr)
+            pos = j * np.repeat(ratio, no)
+            # n_out > 0 implies n_in > 0, so sl-1 >= 0 here
+            last = (sl - 1).astype(np.int64)
+            np.minimum(pos, np.repeat(last.astype(np.float64), no), out=pos)
+            i0 = pos.astype(np.int64)
+            f = pos - i0
+            base = np.repeat(in_heads, no)
+            i1 = np.minimum(i0 + 1, np.repeat(last, no))
+            y = x[base + i0] * (1.0 - f) + x[base + i1] * f
+            np.clip(y, -1.0, 1.0, out=y)
+            y *= 32767.0
+            _ragged_scatter(out_i2, out_heads[rows - a], no, y.astype("<i2"))
+        span = slice(a, z)
+        yield span, [
+            b.masked(b.n_samp, span),
+            b.masked(n_out, span),
+            _binary_column(out_bytes[span], out_i2.view(np.uint8), b.ok[span]),
+            b.errors(span),
+        ]
 
 
 def resample_clips(
@@ -79,150 +116,5 @@ def resample_clips(
         # a bound past int32 range would silently re-break the offset
         # guard this parameter exists to enforce
         raise ValueError(f"max_slice_bytes must be in [1, {_MAX_ROW}], got {max_slice_bytes}")
-    import pyarrow as pa
-
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            if n == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(names.index(k)) for k in keep_names]
-                    + [
-                        pa.array([], type=pa.int32()),
-                        pa.array([], type=pa.int32()),
-                        pa.array([], type=pa.binary()),
-                        pa.array([], type=pa.string()),
-                    ],
-                    names=keep_names + [f.name for f in OUT_FIELDS],
-                )
-                continue
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            sr = np.asarray(
-                rb.column(names.index("sr_hz")).to_pandas().fillna(0).to_numpy(), dtype=np.int64
-            )
-
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null, sr=sr)
-            err_mask = err != None  # noqa: E711
-
-            # per-row sample accounting (vectorized; errors stay 0)
-            n_in = np.zeros(n, dtype=np.int64)
-            ok = ~err_mask
-            is_pcm = codec == "pcm16"
-            n_in[ok & is_pcm] = lens[ok & is_pcm] // 2
-            n_in[ok & ~is_pcm] = lens[ok & ~is_pcm]
-            n_out = np.zeros(n, dtype=np.int64)
-            n_out[ok] = (n_in[ok] * dst_sr + sr[ok] - 1) // sr[ok]
-            too_big = n_out * 2 > _MAX_ROW
-            if too_big.any():
-                err[too_big] = "ValueError: resampled output exceeds 2 GiB"
-                n_in[too_big] = 0
-                n_out[too_big] = 0
-                err_mask = err != None  # noqa: E711
-                ok = ~err_mask
-
-            # emit in output-bounded slices: int32 Arrow offsets stay safe
-            # no matter how hard the batch upsamples (common case: 1 slice)
-            out_bytes = n_out * 2
-            a = 0
-            while a < n:
-                b = a + 1
-                tot = int(out_bytes[a])
-                while b < n and tot + int(out_bytes[b]) <= max_slice_bytes:
-                    tot += int(out_bytes[b])
-                    b += 1
-                m = b - a
-                codec_s = codec[a:b]
-                lens_s = lens[a:b]
-                heads_abs = off[:-1][a:b]  # absolute byte offsets into data
-                ok_s = ok[a:b]
-                sr_s = sr[a:b]
-                n_out_s = n_out[a:b]
-                err_s = err[a:b]
-                err_mask_s = err_mask[a:b]
-
-                # preallocated flat pcm16 output + per-row heads (the ragged
-                # scatter destination — same index trick as the decode gather)
-                out_heads = np.zeros(m, dtype=np.int64)
-                np.cumsum(n_out_s[:-1], out=out_heads[1:])
-                out_i2 = np.zeros(int(n_out_s.sum()), dtype="<i2")
-
-                CHUNK = 1 << 18  # input samples per inner chunk (see decode.py)
-                for c in audio.SUPPORTED_CODECS:
-                    mask = (codec_s == c) & ok_s
-                    if not mask.any():
-                        continue
-                    rows = np.nonzero(mask)[0]
-                    seg = lens_s[rows]
-                    start = 0
-                    while start < len(rows):
-                        end = start + 1
-                        tot_in = int(seg[start])
-                        while end < len(rows) and tot_in + seg[end] <= CHUNK:
-                            tot_in += int(seg[end])
-                            end += 1
-                        r_c = rows[start:end]
-                        s_c = seg[start:end]
-                        gathered = _ragged_gather(data, heads_abs[r_c], s_c)
-                        if c == "pcm16":
-                            x = gathered.view("<i2").astype(np.float32)
-                            x /= np.float32(32767.0)
-                            sl = s_c // 2
-                        else:
-                            x = _LUT[c][gathered]
-                            sl = s_c
-                        no = n_out_s[r_c]
-                        total_o = int(no.sum())
-                        start = end
-                        if total_o == 0:
-                            continue
-                        in_heads = np.zeros(len(sl), dtype=np.int64)
-                        np.cumsum(sl[:-1], out=in_heads[1:])
-                        # local output index 0..n_out-1 per row, ragged
-                        j = _ragged_index(np.zeros(len(no), dtype=np.int64), no).astype(np.float64)
-                        ratio = sr_s[r_c].astype(np.float64) / float(dst_sr)
-                        pos = j * np.repeat(ratio, no)
-                        # n_out > 0 implies n_in > 0, so sl-1 >= 0 here
-                        last = (sl - 1).astype(np.int64)
-                        np.minimum(pos, np.repeat(last.astype(np.float64), no), out=pos)
-                        i0 = pos.astype(np.int64)
-                        f = pos - i0
-                        base = np.repeat(in_heads, no)
-                        i1 = np.minimum(i0 + 1, np.repeat(last, no))
-                        y = x[base + i0] * (1.0 - f) + x[base + i1] * f
-                        np.clip(y, -1.0, 1.0, out=y)
-                        y *= 32767.0
-                        _ragged_scatter(out_i2, out_heads[r_c], no, y.astype("<i2"))
-
-                # zero-copy Arrow binary column over the flat pcm16 buffer
-                # (py_buffer wraps the ndarray via the buffer protocol and
-                # keeps it alive — no .tobytes() copy of the payload)
-                offsets = np.zeros(m + 1, dtype=np.int32)
-                offsets[1:] = np.cumsum(out_bytes[a:b]).astype(np.int32)
-                bin_bufs = [None, pa.py_buffer(offsets), pa.py_buffer(out_i2.view(np.uint8))]
-                null_count = 0
-                if err_mask_s.any():
-                    bin_bufs[0] = pa.py_buffer(np.packbits(~err_mask_s, bitorder="little"))
-                    null_count = int(err_mask_s.sum())
-                bytes_out = pa.Array.from_buffers(pa.binary(), m, bin_bufs, null_count=null_count)
-
-                arrays = [rb.column(names.index(k)).slice(a, m) for k in keep_names] + [
-                    pa.array(n_in[a:b].astype(np.int32), type=pa.int32(), mask=err_mask_s),
-                    pa.array(n_out_s.astype(np.int32), type=pa.int32(), mask=err_mask_s),
-                    bytes_out,
-                    pa.array(err_s, type=pa.string(), from_pandas=True),
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-                )
-                a = b
-
-    return df.mapInArrow(fn, schema=out_schema)
+    kernel = partial(_resample, dst_sr=dst_sr, max_slice_bytes=max_slice_bytes)
+    return arrow_stage(df, OUT_FIELDS, kernel, sr="check")

@@ -28,18 +28,21 @@ so the registry row ``clips_segment`` byte-checks the gather itself.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
 from hydra_spark.functions.decode import (
-    _binary_views,
-    _classify_errors,
+    _MAX_ROW,
+    _MAX_SLICE,
+    _binary_column,
     _ragged_gather,
     _ragged_index,
+    _runs,
+    arrow_stage,
 )
-from hydra_spark.functions.resample import _MAX_ROW, _MAX_SLICE
 
 OUT_FIELDS = [
     T.StructField("seg_idx", T.IntegerType(), True),
@@ -48,6 +51,45 @@ OUT_FIELDS = [
     T.StructField("bytes_seg", T.BinaryType(), True),
     T.StructField("segment_error", T.StringType(), True),
 ]
+
+
+def _segment(b, seg_ms: int, hop_ms: int, max_slice_bytes: int):
+    seg_len = b.sr * seg_ms // 1000
+    hop = b.sr * hop_ms // 1000
+    b.fail((seg_len < 1) | (hop < 1), "segment or hop shorter than one sample")
+    n_seg = np.zeros(b.n, dtype=np.int64)
+    full = b.ok & (b.n_samp >= seg_len)
+    n_seg[full] = (b.n_samp[full] - seg_len[full]) // hop[full] + 1
+    # total output bytes per row
+    b.fail(n_seg * seg_len * b.bps > _MAX_ROW, "segmented output exceeds 2 GiB")
+    n_seg[~b.ok] = 0
+
+    # flatten to the OUTPUT-row stream: ok rows fan out to n_seg
+    # segment rows, error rows contribute exactly one null row
+    counts = np.where(b.ok, n_seg, 1)
+    if not counts.any():
+        return
+    row_of = np.repeat(np.arange(b.n, dtype=np.int64), counts)
+    seg_of = _ragged_index(np.zeros(b.n, dtype=np.int64), counts).astype(np.int64)
+    err_of = ~b.ok[row_of]
+    bps = b.bps[row_of]
+    start_samp = np.where(err_of, 0, seg_of * hop[row_of])
+    seg_bytes = np.where(err_of, 0, seg_len[row_of] * bps)
+    src_start = b.off[row_of] + start_samp * bps
+
+    # segment-granular output slices: cumulative bytes bound each
+    # emitted RecordBatch so int32 offsets stay safe under overlap
+    for p, q in _runs(seg_bytes, max_slice_bytes):
+        rows = row_of[p:q]
+        e_of = err_of[p:q]
+        sb = seg_bytes[p:q]
+        yield rows, [
+            pa.array(seg_of[p:q].astype(np.int32), type=pa.int32(), mask=e_of),
+            pa.array(start_samp[p:q], type=pa.int64(), mask=e_of),
+            pa.array(seg_len[rows].astype(np.int32), type=pa.int32(), mask=e_of),
+            _binary_column(sb, _ragged_gather(b.data, src_start[p:q], sb), ~e_of),
+            b.errors(rows),
+        ]
 
 
 def segment_clips(
@@ -81,98 +123,5 @@ def segment_clips(
         # a bound past int32 range would silently re-break the offset
         # guard this parameter exists to enforce
         raise ValueError(f"max_slice_bytes must be in [1, {_MAX_ROW}], got {max_slice_bytes}")
-    import pyarrow as pa
-
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            if n == 0:
-                continue
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            sr = np.asarray(
-                rb.column(names.index("sr_hz")).to_pandas().fillna(0).to_numpy(),
-                dtype=np.int64,
-            )
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null, sr=sr)
-
-            bps = np.where(codec == "pcm16", 2, 1).astype(np.int64)
-            seg_len = sr * seg_ms // 1000
-            hop = sr * hop_ms // 1000
-            ok0 = err == None  # noqa: E711
-            sub = ok0 & ((seg_len < 1) | (hop < 1))
-            err[sub] = "ValueError: segment or hop shorter than one sample"
-            ok = err == None  # noqa: E711
-
-            n_samp = np.where(ok, lens // bps, 0)
-            n_seg = np.zeros(n, dtype=np.int64)
-            full = ok & (n_samp >= seg_len)
-            n_seg[full] = (n_samp[full] - seg_len[full]) // hop[full] + 1
-            row_out = n_seg * seg_len * bps  # total output bytes per row
-            too_big = row_out > _MAX_ROW
-            if too_big.any():
-                err[too_big] = "ValueError: segmented output exceeds 2 GiB"
-                ok = err == None  # noqa: E711
-                n_seg[too_big] = 0
-            err_mask = ~ok
-
-            # flatten to the OUTPUT-row stream: ok rows fan out to n_seg
-            # segment rows, error rows contribute exactly one null row
-            counts = np.where(err_mask, 1, n_seg)
-            total = int(counts.sum())
-            if total == 0:
-                continue
-            row_of = np.repeat(np.arange(n, dtype=np.int64), counts)
-            seg_of = _ragged_index(np.zeros(n, dtype=np.int64), counts).astype(np.int64)
-            err_of = err_mask[row_of]
-            start_samp = np.where(err_of, 0, seg_of * hop[row_of])
-            seg_bytes = np.where(err_of, 0, seg_len[row_of] * bps[row_of])
-            src_start = off[:-1][row_of] + start_samp * bps[row_of]
-
-            # segment-granular output slices: cumulative bytes bound each
-            # emitted RecordBatch so int32 offsets stay safe under overlap
-            csum = np.cumsum(seg_bytes)
-            p = 0
-            while p < total:
-                limit = (csum[p - 1] if p else 0) + max(int(seg_bytes[p]), max_slice_bytes)
-                q = int(np.searchsorted(csum, limit, side="right"))
-                q = max(q, p + 1)
-                m = q - p
-                rsel = row_of[p:q]
-                e_of = err_of[p:q]
-                sb = seg_bytes[p:q]
-
-                flat = _ragged_gather(data, src_start[p:q], sb)
-                offsets = np.zeros(m + 1, dtype=np.int32)
-                offsets[1:] = np.cumsum(sb).astype(np.int32)
-                bin_bufs = [None, pa.py_buffer(offsets), pa.py_buffer(flat)]
-                null_count = 0
-                if e_of.any():
-                    bin_bufs[0] = pa.py_buffer(np.packbits(~e_of, bitorder="little"))
-                    null_count = int(e_of.sum())
-                bytes_seg = pa.Array.from_buffers(pa.binary(), m, bin_bufs, null_count=null_count)
-
-                take = pa.array(rsel, type=pa.int64())
-                arrays = [
-                    pa.compute.take(rb.column(names.index(k)), take) for k in keep_names
-                ] + [
-                    pa.array(seg_of[p:q].astype(np.int32), type=pa.int32(), mask=e_of),
-                    pa.array(start_samp[p:q], type=pa.int64(), mask=e_of),
-                    pa.array(seg_len[rsel].astype(np.int32), type=pa.int32(), mask=e_of),
-                    bytes_seg,
-                    pa.array(err[rsel], type=pa.string(), from_pandas=True),
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-                )
-                p = q
-
-    return df.mapInArrow(fn, schema=out_schema)
+    kernel = partial(_segment, seg_ms=seg_ms, hop_ms=hop_ms, max_slice_bytes=max_slice_bytes)
+    return arrow_stage(df, OUT_FIELDS, kernel, sr="check")

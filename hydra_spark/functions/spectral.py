@@ -20,17 +20,14 @@ KafkaClientAlgebra.scala:380-395), never exceptions.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
 from hydra_spark import audio
-from hydra_spark.functions.decode import (
-    _binary_views,
-    _classify_errors,
-    _head_windows,
-)
+from hydra_spark.functions.decode import _head_windows, arrow_stage
 
 OUT_FIELDS = [
     T.StructField("n_samples", T.IntegerType(), True),
@@ -39,9 +36,31 @@ OUT_FIELDS = [
     T.StructField("decode_error", T.StringType(), True),
 ]
 
-# rows per batched FFT: 512 x (N_FFT/2+1) complex128 ~= 4 MB of spectrum
-# plus the 2 MB float32 window matrix — L3-resident like the decode chunks
-_FFT_ROWS = 512
+
+def _spectral(b, n_fft: int):
+    centroid = np.full(b.n, np.nan)
+    dominant = np.full(b.n, np.nan)
+    kw = np.arange(n_fft // 2 + 1, dtype=np.float64)
+    # HEAD-ONLY gather: at most n_fft samples per clip
+    for r_c, Z in _head_windows(b, b.ok, n_fft):
+        m = len(r_c)
+        mag = np.abs(np.fft.rfft(Z, axis=1))
+        tot = mag.sum(axis=1)
+        wsum = (mag * kw).sum(axis=1)
+        nz = tot > 0.0
+        scale = b.sr[r_c] / float(n_fft)
+        cen = np.full(m, np.nan)
+        dom = np.full(m, np.nan)
+        cen[nz] = wsum[nz] / tot[nz] * scale[nz]
+        dom[nz] = np.argmax(mag, axis=1)[nz].astype(np.float64) * scale[nz]
+        centroid[r_c] = cen
+        dominant[r_c] = dom
+    yield None, [
+        b.masked(b.n_samp),
+        pa.array(centroid, type=pa.float64(), from_pandas=True),
+        pa.array(dominant, type=pa.float64(), from_pandas=True),
+        b.errors(),
+    ]
 
 
 def spectral_clips(df: DataFrame, n_fft: int = audio.N_FFT) -> DataFrame:
@@ -50,78 +69,4 @@ def spectral_clips(df: DataFrame, n_fft: int = audio.N_FFT) -> DataFrame:
     centroid/dominant are NULL for empty or all-silent windows and for
     error rows (null bytes, unknown codec, odd pcm16 length).
     """
-    import pyarrow as pa
-
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            names = rb.schema.names
-            if n == 0:
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(names.index(k)) for k in keep_names]
-                    + [
-                        pa.array([], type=pa.int32()),
-                        pa.array([], type=pa.float64()),
-                        pa.array([], type=pa.float64()),
-                        pa.array([], type=pa.string()),
-                    ],
-                    names=keep_names + [f.name for f in OUT_FIELDS],
-                )
-                continue
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            sr = np.asarray(
-                rb.column(names.index("sr_hz")).to_pandas().fillna(0).to_numpy(), dtype=np.float64
-            )
-
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null)
-            err_mask = err != None  # noqa: E711
-            ok = ~err_mask
-
-            ns = np.zeros(n, dtype=np.int64)
-            is_pcm = codec == "pcm16"
-            ns[ok & is_pcm] = lens[ok & is_pcm] // 2
-            ns[ok & ~is_pcm] = lens[ok & ~is_pcm]
-
-            centroid = np.full(n, np.nan)
-            dominant = np.full(n, np.nan)
-            kw = np.arange(n_fft // 2 + 1, dtype=np.float64)
-
-            for c in audio.SUPPORTED_CODECS:
-                mask = (codec == c) & ok
-                if not mask.any():
-                    continue
-                rows = np.nonzero(mask)[0]
-                # HEAD-ONLY gather: at most n_fft samples per clip
-                for r_c, Z in _head_windows(data, off, lens, rows, c, n_fft, _FFT_ROWS):
-                    m = len(r_c)
-                    mag = np.abs(np.fft.rfft(Z, axis=1))
-                    tot = mag.sum(axis=1)
-                    wsum = (mag * kw).sum(axis=1)
-                    nz = tot > 0.0
-                    scale = sr[r_c] / float(n_fft)
-                    cen = np.full(m, np.nan)
-                    dom = np.full(m, np.nan)
-                    cen[nz] = wsum[nz] / tot[nz] * scale[nz]
-                    dom[nz] = np.argmax(mag, axis=1)[nz].astype(np.float64) * scale[nz]
-                    centroid[r_c] = cen
-                    dominant[r_c] = dom
-
-            arrays = [rb.column(names.index(k)) for k in keep_names] + [
-                pa.array(ns.astype(np.int32), type=pa.int32(), mask=err_mask),
-                pa.array(centroid, type=pa.float64(), from_pandas=True),
-                pa.array(dominant, type=pa.float64(), from_pandas=True),
-                pa.array(err, type=pa.string(), from_pandas=True),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-            )
-
-    return df.mapInArrow(fn, schema=out_schema)
+    return arrow_stage(df, OUT_FIELDS, partial(_spectral, n_fft=n_fft), sr="read")

@@ -28,20 +28,24 @@ Arrow slices (int32-offset guard). Errors are skip-and-count rows
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, types as T
 
 from hydra_spark import audio
 from hydra_spark.functions.decode import (
-    _LUT,
-    _binary_views,
-    _classify_errors,
+    _CHUNK,
+    _MAX_ROW,
+    _MAX_SLICE,
+    _binary_column,
+    _decoded,
     _ragged_gather,
     _ragged_scatter,
+    _runs,
+    _starts,
+    arrow_stage,
 )
-from hydra_spark.functions.resample import _MAX_ROW, _MAX_SLICE
 
 OUT_FIELDS = [
     T.StructField("n_samples", T.IntegerType(), True),
@@ -63,6 +67,32 @@ def _encode_batch(x: np.ndarray, to_codec: str) -> np.ndarray:
     return audio.quantize_g711(audio._alaw_compress(x))
 
 
+def _transcode(b, to_codec: str, max_slice_bytes: int):
+    bytes_per_out = 2 if to_codec == "pcm16" else 1
+    b.fail(b.n_samp * bytes_per_out > _MAX_ROW, "transcoded output exceeds 2 GiB")
+    out_bytes = b.n_samp * bytes_per_out
+    for a, z in _runs(out_bytes, max_slice_bytes):
+        out_heads = _starts(out_bytes[a:z])
+        out_buf = np.zeros(int(out_bytes[a:z].sum()), dtype=np.uint8)
+        sel = b.ok_in(a, z)
+        same = sel & (b.codec == to_codec)
+        for rows, sl, x in _decoded(b, sel & ~same):
+            enc = _encode_batch(x, to_codec)
+            _ragged_scatter(out_buf, out_heads[rows - a], sl * bytes_per_out, enc.view(np.uint8))
+        # pass-through: copy source bytes verbatim
+        same_rows = np.flatnonzero(same)
+        for i, j in _runs(b.lens[same_rows], _CHUNK):
+            rows = same_rows[i:j]
+            raw = _ragged_gather(b.data, b.off[rows], b.lens[rows])
+            _ragged_scatter(out_buf, out_heads[rows - a], b.lens[rows], raw)
+        span = slice(a, z)
+        yield span, [
+            b.masked(b.n_samp, span),
+            _binary_column(out_bytes[span], out_buf, b.ok[span]),
+            b.errors(span),
+        ]
+
+
 def transcode_clips(
     df: DataFrame, to_codec: str = "ulaw", max_slice_bytes: int = _MAX_SLICE
 ) -> DataFrame:
@@ -76,109 +106,5 @@ def transcode_clips(
         raise ValueError(f"unsupported target codec: {to_codec}")
     if not 1 <= max_slice_bytes <= _MAX_ROW:
         raise ValueError(f"max_slice_bytes must be in [1, {_MAX_ROW}], got {max_slice_bytes}")
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    keep_names = [f.name for f in keep]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    bytes_per_out = 2 if to_codec == "pcm16" else 1
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            names = rb.schema.names
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null)
-            err_mask = err != None  # noqa: E711
-            ok = ~err_mask
-
-            n_samp = np.zeros(n, dtype=np.int64)
-            is_pcm = codec == "pcm16"
-            n_samp[ok & is_pcm] = lens[ok & is_pcm] // 2
-            n_samp[ok & ~is_pcm] = lens[ok & ~is_pcm]
-            out_bytes = n_samp * bytes_per_out
-            too_big = out_bytes > _MAX_ROW
-            if too_big.any():
-                err[too_big] = "ValueError: transcoded output exceeds 2 GiB"
-                err_mask = err != None  # noqa: E711
-                ok = ~err_mask
-                n_samp[too_big] = 0
-                out_bytes[too_big] = 0
-
-            a = 0
-            while a < n:
-                b = a + 1
-                tot = int(out_bytes[a])
-                while b < n and tot + int(out_bytes[b]) <= max_slice_bytes:
-                    tot += int(out_bytes[b])
-                    b += 1
-                m = b - a
-                codec_s = codec[a:b]
-                lens_s = lens[a:b]
-                heads_abs = off[:-1][a:b]
-                ok_s = ok[a:b]
-                n_samp_s = n_samp[a:b]
-                err_mask_s = err_mask[a:b]
-
-                out_heads = np.zeros(m, dtype=np.int64)
-                np.cumsum(out_bytes[a:b][:-1], out=out_heads[1:])
-                out_buf = np.zeros(int(out_bytes[a:b].sum()), dtype=np.uint8)
-
-                CHUNK = 1 << 18
-                for c in audio.SUPPORTED_CODECS:
-                    mask = (codec_s == c) & ok_s
-                    if not mask.any():
-                        continue
-                    rows = np.nonzero(mask)[0]
-                    seg = lens_s[rows]
-                    start = 0
-                    while start < len(rows):
-                        end = start + 1
-                        tot_in = int(seg[start])
-                        while end < len(rows) and tot_in + seg[end] <= CHUNK:
-                            tot_in += int(seg[end])
-                            end += 1
-                        r_c = rows[start:end]
-                        s_c = seg[start:end]
-                        start = end
-                        gathered = _ragged_gather(data, heads_abs[r_c], s_c)
-                        if c == to_codec:
-                            # pass-through: copy source bytes verbatim
-                            _ragged_scatter(out_buf, out_heads[r_c], s_c, gathered)
-                            continue
-                        if c == "pcm16":
-                            x = gathered.view("<i2").astype(np.float32)
-                            x /= np.float32(32767.0)
-                            sl = s_c // 2
-                        else:
-                            x = _LUT[c][gathered]
-                            sl = s_c
-                        enc = _encode_batch(x, to_codec)
-                        _ragged_scatter(
-                            out_buf, out_heads[r_c], sl * bytes_per_out, enc.view(np.uint8)
-                        )
-
-                offsets = np.zeros(m + 1, dtype=np.int32)
-                offsets[1:] = np.cumsum(out_bytes[a:b]).astype(np.int32)
-                bin_bufs = [None, pa.py_buffer(offsets), pa.py_buffer(out_buf)]
-                null_count = 0
-                if err_mask_s.any():
-                    bin_bufs[0] = pa.py_buffer(np.packbits(~err_mask_s, bitorder="little"))
-                    null_count = int(err_mask_s.sum())
-                bytes_tc = pa.Array.from_buffers(pa.binary(), m, bin_bufs, null_count=null_count)
-
-                arrays = [rb.column(names.index(k)).slice(a, m) for k in keep_names] + [
-                    pa.array(n_samp_s.astype(np.int32), type=pa.int32(), mask=err_mask_s),
-                    bytes_tc,
-                    pa.array(err[a:b], type=pa.string(), from_pandas=True),
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-                )
-                a = b
-
-    return df.mapInArrow(fn, schema=out_schema)
+    kernel = partial(_transcode, to_codec=to_codec, max_slice_bytes=max_slice_bytes)
+    return arrow_stage(df, OUT_FIELDS, kernel)

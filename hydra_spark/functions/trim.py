@@ -26,17 +26,17 @@ KafkaClientAlgebra.scala:380-395).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, types as T
 
 from hydra_spark import audio
 from hydra_spark.functions.decode import (
-    _LUT,
-    _binary_views,
-    _classify_errors,
+    _binary_column,
+    _decoded,
     _ragged_gather,
+    arrow_stage,
 )
 
 OUT_FIELDS = [
@@ -65,70 +65,26 @@ def _lead_trail_chunk(x: np.ndarray, counts: np.ndarray, eps) -> tuple[np.ndarra
     return lead, trail
 
 
+def _trim(b, eps):
+    lead = np.zeros(b.n, dtype=np.int64)
+    trail = np.zeros(b.n, dtype=np.int64)
+    for rows, sl, x in _decoded(b, b.ok):
+        lead[rows], trail[rows] = _lead_trail_chunk(x, sl, eps)
+    n_out = b.n_samp - lead - trail  # 0 on error rows
+    out_bytes = n_out * b.bps
+    flat = _ragged_gather(b.data, b.off[:-1] + lead * b.bps, out_bytes)
+    yield None, [
+        b.masked(b.n_samp),
+        b.masked(lead),
+        b.masked(trail),
+        b.masked(n_out),
+        _binary_column(out_bytes, flat, b.ok),
+        b.errors(),
+    ]
+
+
 def trim_silence(df: DataFrame, eps: float | None = None) -> DataFrame:
     """bytes+codec -> original columns (minus bytes) + n_samples /
     n_lead / n_trail / n_samples_out / bytes_trim / trim_error."""
     eps = np.float32(audio.SILENCE_EPS if eps is None else eps)
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            names = rb.schema.names
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null)
-            err_mask = err != None  # noqa: E711
-            ok = ~err_mask
-
-            bps = np.where(codec == "pcm16", 2, 1).astype(np.int64)
-            ns = np.where(ok, lens // bps, 0)
-            lead = np.zeros(n, dtype=np.int64)
-            trail = np.zeros(n, dtype=np.int64)
-            for c in audio.SUPPORTED_CODECS:
-                mask = (codec == c) & ok
-                if not mask.any():
-                    continue
-                rows = np.nonzero(mask)[0]
-                gathered = _ragged_gather(data, off[:-1][rows], lens[rows])
-                if c == "pcm16":
-                    x = gathered.view("<i2").astype(np.float32)
-                    x /= np.float32(32767.0)
-                else:
-                    x = _LUT[c][gathered]
-                lead[rows], trail[rows] = _lead_trail_chunk(x, ns[rows], eps)
-
-            n_out = np.where(ok, ns - lead - trail, 0)
-            src_start = off[:-1] + np.where(ok, lead * bps, 0)
-            out_bytes = np.where(ok, n_out * bps, 0)
-
-            flat = _ragged_gather(data, src_start, out_bytes)
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            offsets[1:] = np.cumsum(out_bytes).astype(np.int32)
-            bin_bufs = [None, pa.py_buffer(offsets), pa.py_buffer(flat)]
-            null_count = 0
-            if err_mask.any():
-                bin_bufs[0] = pa.py_buffer(np.packbits(ok, bitorder="little"))
-                null_count = int(err_mask.sum())
-            bytes_trim = pa.Array.from_buffers(pa.binary(), n, bin_bufs, null_count=null_count)
-
-            arrays = [rb.column(names.index(k)) for k in keep_names] + [
-                pa.array(ns.astype(np.int32), type=pa.int32(), mask=err_mask),
-                pa.array(lead.astype(np.int32), type=pa.int32(), mask=err_mask),
-                pa.array(trail.astype(np.int32), type=pa.int32(), mask=err_mask),
-                pa.array(n_out.astype(np.int32), type=pa.int32(), mask=err_mask),
-                bytes_trim,
-                pa.array(err, type=pa.string(), from_pandas=True),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-            )
-
-    return df.mapInArrow(fn, schema=out_schema)
+    return arrow_stage(df, OUT_FIELDS, partial(_trim, eps=eps))

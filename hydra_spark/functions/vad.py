@@ -36,18 +36,13 @@ KafkaClientAlgebra.scala:380-395).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, types as T
 
 from hydra_spark import audio
-from hydra_spark.functions.decode import (
-    _LUT,
-    _binary_views,
-    _classify_errors,
-    _ragged_gather,
-)
+from hydra_spark.functions.decode import _decoded, _starts, arrow_stage
 
 OUT_FIELDS = [
     T.StructField("n_frames", T.IntegerType(), True),
@@ -94,79 +89,27 @@ def vad_clip(buf: bytes, codec: str, sr_hz: int, frame_ms: int = 20) -> tuple:
     return nfr, int(n_speech), n_seg, longest
 
 
+def _vad(b, frame_ms: int):
+    flen = b.sr * frame_ms // 1000
+    b.fail(flen < 1, "frame shorter than one sample")
+    eps = audio.SILENCE_EPS
+    out = np.zeros((b.n, 4), dtype=np.int64)
+    for rows, sl, x in _decoded(b, b.ok):
+        bnd = _starts(sl)
+        for j, r in enumerate(rows):
+            fl = int(flen[r])
+            nfr = int(sl[j]) // fl
+            if nfr == 0:
+                continue  # out already zeros
+            fr = np.abs(x[bnd[j] : bnd[j] + nfr * fl]).reshape(nfr, fl)
+            mask = fr.max(axis=1) > eps
+            segs, longest = _mask_runs(mask)
+            out[r] = (nfr, int(mask.sum()), segs, longest)
+    yield None, [b.masked(out[:, i]) for i in range(4)] + [b.errors()]
+
+
 def vad_clips(df: DataFrame, frame_ms: int = 20) -> DataFrame:
     """bytes+codec+sr_hz -> per-clip VAD frame/segment counts."""
     if frame_ms <= 0:
         raise ValueError(f"frame_ms must be positive, got {frame_ms}")
-    import pyarrow as pa
-
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-    eps = audio.SILENCE_EPS
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            names = rb.schema.names
-            barr = rb.column(names.index("bytes"))
-            codec = np.asarray(rb.column(names.index("codec")).to_pylist(), dtype=object)
-            sr = np.asarray(rb.column(names.index("sr_hz")).to_pylist(), dtype=object)
-            sr = np.array([0 if v is None else int(v) for v in sr], dtype=np.int64)
-            off, data, lens, is_null = _binary_views(barr, n)
-            err = _classify_errors(codec, lens, is_null, sr=sr)
-            flen = sr * frame_ms // 1000
-            bad_fr = (err == None) & (flen < 1)  # noqa: E711
-            err[bad_fr] = "ValueError: frame shorter than one sample"
-            err_mask = err != None  # noqa: E711
-            ok = ~err_mask
-
-            out = np.zeros((n, 4), dtype=np.int64)
-            CHUNK = 1 << 18
-            heads_abs = off[:-1]
-            for c in audio.SUPPORTED_CODECS:
-                rows_all = np.nonzero((codec == c) & ok)[0]
-                start = 0
-                while start < len(rows_all):
-                    end = start + 1
-                    tot = int(lens[rows_all[start]])
-                    while end < len(rows_all) and tot + lens[rows_all[end]] <= CHUNK:
-                        tot += int(lens[rows_all[end]])
-                        end += 1
-                    rows = rows_all[start:end]
-                    start = end
-                    gathered = _ragged_gather(data, heads_abs[rows], lens[rows])
-                    if c == "pcm16":
-                        x = gathered.view("<i2").astype(np.float32)
-                        x /= np.float32(32767.0)
-                        sl = lens[rows] // 2
-                    else:
-                        x = _LUT[c][gathered]
-                        sl = lens[rows]
-                    bnd = np.zeros(len(rows) + 1, dtype=np.int64)
-                    np.cumsum(sl, out=bnd[1:])
-                    for j, r in enumerate(rows):
-                        fl = int(flen[r])
-                        nfr = int(sl[j]) // fl
-                        if nfr == 0:
-                            continue  # out already zeros
-                        fr = np.abs(
-                            x[bnd[j] : bnd[j] + nfr * fl]
-                        ).reshape(nfr, fl)
-                        mask = fr.max(axis=1) > eps
-                        segs, longest = _mask_runs(mask)
-                        out[r] = (nfr, int(mask.sum()), segs, longest)
-
-            arrays = [rb.column(names.index(k)) for k in keep_names] + [
-                pa.array(out[:, i].astype(np.int32), type=pa.int32(), mask=err_mask)
-                for i in range(4)
-            ] + [pa.array(err, type=pa.string(), from_pandas=True)]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=keep_names + [f.name for f in OUT_FIELDS]
-            )
-
-    return df.mapInArrow(fn, schema=out_schema)
+    return arrow_stage(df, OUT_FIELDS, partial(_vad, frame_ms=frame_ms), sr="check")

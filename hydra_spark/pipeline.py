@@ -38,9 +38,11 @@ duplicate delivery is absorbed by the sink key (clip_id, window_start)
 operator (operators/join.dedup_within_watermark) remains available and
 tested for pipelines that need pre-join dedup.
 
-A second, independent streaming query computes per-(window, codec)
-aggregates in append mode (windows finalize at the watermark) — the CEP
-rollup output.
+``start_window_rollup`` is a second, independent streaming query:
+per-(window, codec) aggregates in append mode (windows finalize at the
+watermark). It is not part of the flagship — no entry point (runner,
+``tools/submit.sh``, perfbench) starts it; only
+``tests/test_streaming_state.py`` does.
 """
 
 from __future__ import annotations
@@ -118,16 +120,13 @@ def pre_join_transform(audio: DataFrame) -> DataFrame:
     admitted = validation.admission_checks(audio, max_bytes=MAX_BYTES).where(
         F.col("reject_reason").isNull()
     )
-    decoded = decode_features(admitted)
-    # first failure wins: an admission reason outranks the decode error
-    return decoded.withColumn(
+    # every admitted row has a NULL reject_reason: a decode error is the
+    # only reason left
+    return decode_features(admitted).withColumn(
         "reject_reason",
-        F.coalesce(
-            F.col("reject_reason"),
-            F.when(
-                F.col("decode_error").isNotNull(),
-                F.concat(F.lit("DecodeError:"), F.col("decode_error")),
-            ),
+        F.when(
+            F.col("decode_error").isNotNull(),
+            F.concat(F.lit("DecodeError:"), F.col("decode_error")),
         ),
     )
 

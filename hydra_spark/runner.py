@@ -180,7 +180,8 @@ def main(argv=None) -> int:
     qq.processAllAvailable()
     qq.stop()
 
-    n = tables["output"].read(spark).count()
+    out = tables["output"]
+    n = 0 if out.is_empty() else out.read(spark).count()  # no batch: no shape
     print(json.dumps({"rows_out": int(n), "restarts": restarts}))
     return 0
 

@@ -43,6 +43,7 @@ import time
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 @contextlib.contextmanager
@@ -455,9 +456,14 @@ class TransactionalTable:
         when one is given, so replay idempotence survives every rewrite
         (compact, rebucket, delete_where, update_where);
         ``key_cols`` and ``n_buckets`` are stamped on every snapshot.
+        ``columns`` (the DDL of ``out`` without ``_bucket``) is recorded
+        by every write and carried forward, so a table whose writes left
+        no rows still reads back with its shape.
         """
         written = {}
         if out is not None:
+            cols = StructType([f for f in out.schema.fields if f.name != "_bucket"])
+            m = {**m, "columns": cols.toDDL()}
             out_dir = os.path.join(self.path, "data", f"c{uuid.uuid4().hex[:12]}")
             writer = out.write.mode("overwrite")
             if max_file_rows is not None:
@@ -591,9 +597,7 @@ class TransactionalTable:
         m = self.manifest() if version is None else self.manifest_at(version)
         files = [p for fl in m["files"].values() for p in fl]
         if not files:
-            # empty table with correct key schema is the caller's problem;
-            # return empty DF from schema hint if any data ever existed
-            return spark.createDataFrame([], schema="dummy string").limit(0)
+            return self._empty_like(spark, m)
         return self._read_files(spark, files, m)
 
     # ------------------------------------------------- scan planning
@@ -681,8 +685,9 @@ class TransactionalTable:
     def _empty_like(self, spark: SparkSession, m: dict) -> DataFrame:
         """Zero-row DataFrame with the table's real column shape: from
         data files if the snapshot has any, else from the registered
-        schema. A table with neither has no defined shape — loud error,
-        not a placeholder schema the caller's select would trip over."""
+        schema, else from the columns the last write recorded. A table
+        with none of these has no defined shape — loud error, not a
+        placeholder schema the caller's select would trip over."""
         files = [p for fl in m["files"].values() for p in fl]
         if files:
             return self._read_files(spark, files, m).limit(0)
@@ -690,8 +695,11 @@ class TransactionalTable:
         if versions:
             ddl = ", ".join(f"{f['name']} {f['type']}" for f in versions[-1]["fields"])
             return spark.createDataFrame([], schema=ddl)
+        if "columns" in m:
+            return spark.createDataFrame([], schema=m["columns"])
         raise ValueError(
-            f"table {self.path} has no data files and no registered schema"
+            f"table {self.path} has no data files, no registered schema and "
+            "no written columns"
         )
 
     def stats(self, version: int | None = None) -> list[dict]:

@@ -4,7 +4,6 @@ import shutil
 import sys
 from pathlib import Path
 
-import pandas as pd
 import pytest
 
 # the tree this file lives in: its engine is the one under test
@@ -84,10 +83,7 @@ def drain(spark, streams, out_root, files_per_trigger=FILES_PER_TRIGGER):
 def outcomes(spark, tables):
     """(output rows, quarantine rows) of a run as pandas frames, the
     shapes oracle.compare takes."""
-    if tables["output"].is_empty():
-        out = pd.DataFrame(columns=oracle.OUTPUT_COLS, dtype=float).astype({"clip_id": object})
-    else:
-        out = tables["output"].read(spark).select(*oracle.OUTPUT_COLS).toPandas()
+    out = tables["output"].read(spark).select(*oracle.OUTPUT_COLS).toPandas()
     return out, oracle.quarantine_frame(spark, tables)
 
 

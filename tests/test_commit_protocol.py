@@ -102,3 +102,24 @@ def test_table_written_before_one_commit_path(spark, tmp_path):
     assert set(m["file_stats"]) == set(m["file_schema"]) == _live(m)
     got = {r.k: r.v for r in t.read(spark).collect()}
     assert got == {**{k: int(k[1:]) for k in keys}, "k2": 200, "k12": 12, "k13": 13}
+
+
+def test_table_without_rows_keeps_its_columns(spark, tmp_path):
+    """A table whose one commit wrote zero rows, or whose every row a
+    delete removed, reads back empty with the columns it was written
+    with; a never-written table without a registered schema has no
+    shape and says so."""
+    t = TransactionalTable(str(tmp_path / "fresh"), ["k"], n_buckets=2)
+    with pytest.raises(ValueError, match="no written columns"):
+        t.read(spark)
+    t.append_dedup(spark, _kv(spark, []), 0)
+    assert t.is_empty()
+    got = t.read(spark)
+    assert got.dtypes == [("k", "string"), ("v", "bigint")] and got.count() == 0
+
+    d = TransactionalTable(str(tmp_path / "deleted"), ["k"], n_buckets=2)
+    d.append_dedup(spark, _kv(spark, [("a", 1), ("b", 2), ("c", 3)]), 0)
+    assert d.delete_where(spark, {"v": (0, 9)})["rows_deleted"] == 3
+    assert d.is_empty()
+    got = d.read(spark)
+    assert got.dtypes == [("k", "string"), ("v", "bigint")] and got.count() == 0

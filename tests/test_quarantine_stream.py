@@ -51,6 +51,8 @@ def test_whole_batch_quarantined_executor_side(spark, streams, truth):
         os.utime(dst, ns=(mtime, mtime))
 
     tables, _ = drain(spark, root, os.path.join(root, "out"))
+    # no row reached the output table, which still reads with its columns
+    assert tables["output"].read(spark).select(*oracle.OUTPUT_COLS).count() == 0
     # every clip admission accepts is now a decode error; the rest keep
     # their admission reasons; no clip reaches the output table
     expected = truth.assign(kind=truth["kind"].replace("ok", "undecodable"))

@@ -3,6 +3,8 @@ queries() entries, and a Python dict silently swallows duplicate keys —
 both failure modes have nearly shipped. Pin them here."""
 
 import re
+import subprocess
+import sys
 
 import __spark_entry__ as E
 from tests.conftest import REPO
@@ -45,3 +47,15 @@ def test_every_oracle_has_a_query():
         "rows without an oracle_sql entry — every registry row needs a "
         f"DuckDB oracle: {set(qs) - set(os_)}"
     )
+
+
+def test_check_correctness_rejects_unknown_query_names():
+    """A misspelled row name must fail the harness, not run nothing and
+    report 0 pass, 0 fail (it exits before starting Spark)."""
+    name = next(iter(E.queries()))
+    r = subprocess.run(
+        [sys.executable, str(REPO / "tools" / "check_correctness.py"), name, "no_such_query"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode != 0
+    assert "no_such_query" in r.stdout and name not in r.stdout

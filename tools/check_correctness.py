@@ -93,6 +93,11 @@ def main():
     args = sys.argv[1:]
     vanilla = "--vanilla" in args
     only = {a for a in args if not a.startswith("--")}
+    qs, os_ = E.queries(), E.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:  # a typo must not pass as "0 pass, 0 fail"
+        print(f"unknown queries: {' '.join(unknown)}")
+        return 2
     if vanilla:
         # mimic the driver's environment: a DEFAULT SparkSession with none
         # of the repo session's confs (this is what exposed the INT96
@@ -104,7 +109,6 @@ def main():
     else:
         spark = get_spark(cores=16, app_name="check")
     con = duck_con()
-    qs, os_ = E.queries(), E.oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
