@@ -225,7 +225,11 @@ def arrow_stage(
     df: DataFrame, out_fields: list, kernel, sr: str | None = None, drop=("bytes",)
 ) -> DataFrame:
     """``df.mapInArrow`` of ``map_clips``: the input columns not in
-    ``drop``, then ``out_fields``."""
+    ``drop``, then ``out_fields``. A stage that reads ``sr_hz`` (``sr``
+    set) over a frame without it fails here, at plan time."""
+    if sr is not None and "sr_hz" not in df.columns:
+        stage = getattr(kernel, "func", kernel).__name__.lstrip("_")
+        raise ValueError(f"{stage} stage reads sr_hz, which the frame lacks: {df.columns}")
     keep = [f for f in df.schema.fields if f.name not in drop]
     out_names = [f.name for f in out_fields]
 

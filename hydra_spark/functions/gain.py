@@ -88,7 +88,7 @@ def _gain(b, mode: str, target: float, max_slice_bytes: int):
                     -np.minimum.reduceat(x, bounds),
                 ).astype(np.float64)
             peak[rows[nz]] = stat
-            scale = np.where(stat == 0.0, 1.0, target / stat)
+            scale = np.divide(target, stat, out=np.ones_like(stat), where=stat != 0.0)
             y = x.astype(np.float64) * np.repeat(scale, sl[nz])
             np.clip(y, -1.0, 1.0, out=y)
             y *= 32767.0

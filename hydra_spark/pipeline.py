@@ -140,7 +140,13 @@ def finish_batch(batch_df: DataFrame) -> DataFrame:
 
 
 def build_tables(root: str) -> dict:
-    return tbl.bootstrap(root, ["clip_id", "window_start"])
+    # one bucket: the flagship only ever commits through append_dedup,
+    # which anti-joins against every file whatever its bucket; only
+    # merge_upsert and compact use buckets. More buckets would only
+    # multiply the files each commit writes and each later commit
+    # reopens. A table that already exists keeps its stored bucket
+    # count (TransactionalTable.__init__).
+    return tbl.bootstrap(root, ["clip_id", "window_start"], n_buckets=1)
 
 
 def start_flagship(

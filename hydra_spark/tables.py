@@ -215,9 +215,7 @@ def _file_column_stats(path: str) -> dict:
                     t = "str"
                 elif isinstance(lo, _dt.datetime):
                     t = "ts"
-                    epoch = _dt.datetime(1970, 1, 1, tzinfo=lo.tzinfo)
-                    lo = int((lo - epoch).total_seconds() * 1_000_000)
-                    hi = int((hi - epoch).total_seconds() * 1_000_000)
+                    lo, hi = _epoch_micros(lo), _epoch_micros(hi)
                 elif isinstance(lo, _dt.date):
                     t = "str"
                     lo, hi = lo.isoformat(), hi.isoformat()
@@ -238,6 +236,16 @@ def _file_column_stats(path: str) -> dict:
     return agg
 
 
+def _epoch_micros(ts) -> int:
+    """Epoch microseconds of a datetime (naive = UTC), in integers: the
+    float path through ``total_seconds()`` can round a sub-second value
+    down by 1 µs, and a stats bound must never shrink."""
+    import datetime as _dt
+
+    epoch = _dt.datetime(1970, 1, 1, tzinfo=ts.tzinfo)
+    return (ts - epoch) // _dt.timedelta(microseconds=1)
+
+
 def _coerce_bound(v, t):
     """Normalize a caller-supplied predicate bound to the manifest's
     stored representation for comparison (timestamps -> epoch micros)."""
@@ -253,8 +261,7 @@ def _coerce_bound(v, t):
             # how the residual filter's date literal compares in Spark
             v = _dt.datetime.combine(v, _dt.time.min)
         if isinstance(v, _dt.datetime):
-            epoch = _dt.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-            return int((v - epoch).total_seconds() * 1_000_000)
+            return _epoch_micros(v)
         return int(v)
     if t == "str" and isinstance(v, _dt.date):
         # date-typed column stats are stored as 'YYYY-MM-DD'; a DATETIME
@@ -1411,10 +1418,14 @@ class TransactionalTable:
         batch once all buckets are touched); append_dedup is the
         merge-on-read analog (Iceberg `MERGE ... WHEN NOT MATCHED THEN
         INSERT`). The existing-keys anti-join reads the key columns of
-        every file of the table. A key fixes its bucket, so this gives
-        the same rows as reading only the touched buckets, without a
-        job to find them: the write is the commit's only action. Commit
-        cost is O(batch) + O(table keys). Latest-wins/tombstone
+        every file of the table, under the batch's own key schema (no
+        footer-schema inference job). A key fixes its bucket, so this
+        gives the same rows as reading only the touched buckets, without
+        a job to find them: the write is the commit's only action.
+        Commit cost is O(batch) + O(table keys), and the number of files
+        opened grows by the files each commit writes, so a table that
+        only takes append_dedup commits should have one bucket (one file
+        per write task). Latest-wins/tombstone
         workloads still use merge_upsert. Idempotent per batch_id like
         merge_upsert.
 
@@ -1433,7 +1444,8 @@ class TransactionalTable:
         batch = batch.withColumn("_bucket", self._bucket_col())
         files = [p for fl in m["files"].values() for p in fl]
         if files:
-            existing_keys = spark.read.parquet(*files).select(*self.key_cols)
+            key_schema = StructType([batch.schema[c] for c in self.key_cols])
+            existing_keys = spark.read.schema(key_schema).parquet(*files)
             batch = batch.join(existing_keys, on=self.key_cols, how="left_anti")
         out = batch if preclustered else batch.repartition(self.n_buckets, "_bucket")
         self._commit(m, out, batch_id=batch_id)

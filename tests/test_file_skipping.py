@@ -464,3 +464,21 @@ def test_zorder_four_columns_no_sign_overflow(spark, tmp_path):
         kept, total = t.plan_files({col: (6.0, 7.0)})
         assert kept and len(kept) < total, f"axis {col} must prune"
         assert t.read_where(spark, {col: (6.0, 7.0)}).count() == 1024
+
+
+def test_timestamp_stats_are_exact_micros(spark, tmp_path):
+    """Timestamp stats are exact epoch micros: a float path through
+    ``total_seconds()`` rounds 545175556185458 µs down by one, and a
+    bound equal to the file's true maximum would then prune it."""
+    us = 545_175_556_185_458
+    t = TransactionalTable(str(tmp_path / "t"), ["k"], n_buckets=1)
+    df = spark.range(1).select(
+        F.lit("a").alias("k"), F.timestamp_micros(F.lit(us)).alias("ts")
+    )
+    assert t.append_dedup(spark, df, 0)
+    fstats = t.manifest()["file_stats"]
+    assert [s["ts"]["hi"] for s in fstats.values()] == [us]
+    bound = dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=us)
+    for lo in (us, bound):
+        kept, total = t.plan_files({"ts": (lo, None)})
+        assert len(kept) == total == 1

@@ -131,3 +131,55 @@ def test_decode_kernel_is_a_plain_function_of_a_record_batch():
         assert got["peak"][i] == float(np.max(np.abs(ref)))
     assert got["decode_error"][3] == "ValueError: null bytes" and got["rms_db"][3] is None
     assert list(decode.map_clips(rb.slice(0, 0), decode.features, names)) == []
+
+
+# the stages that read sr_hz, each named as its ValueError names it
+SR_STAGES = {
+    "resample": resample.resample_clips,
+    "vad": vad.vad_clips,
+    "segment": lambda df: segment.segment_clips(df, seg_ms=SEG_MS),
+    "mel": mel.mel_clips,
+    "spectral": spectral.spectral_clips,
+}
+
+
+@pytest.mark.parametrize("name", sorted(SR_STAGES))
+def test_stage_reading_sr_hz_fails_at_plan_time_without_it(spark, name):
+    """A stage that reads ``sr_hz`` over a frame without it (the
+    transcode tests' frame) raises when it is planned, not inside a
+    Python worker at run time."""
+    from tests.test_transcode import SCHEMA as NO_SR, _mk_rows
+
+    df = spark.createDataFrame(_mk_rows(), NO_SR)
+    with pytest.raises(ValueError, match=rf"^{name} stage reads sr_hz"):
+        SR_STAGES[name](df)
+
+
+@pytest.mark.parametrize("mode", ["peak", "rms"])
+def test_gain_kernel_scales_silent_clips_without_dividing_by_zero(mode):
+    """No Spark: digitally silent clips pass through unscaled, next to a
+    loud one that matches the per-row oracle, without a numpy warning."""
+    import warnings
+    from functools import partial
+
+    import pyarrow as pa
+
+    loud = np.linspace(-0.3, 0.2, 120)
+    bufs = [audio.encode(x, "pcm16") for x in (np.zeros(160), loud, np.zeros(40), np.zeros(0))]
+    rb = pa.RecordBatch.from_pydict(
+        {
+            "clip_id": ["s", "l", "t", "e"],
+            "bytes": pa.array(bufs, type=pa.binary()),
+            "codec": ["pcm16"] * 4,
+        }
+    )
+    kernel = partial(gain._gain, mode=mode, target=0.5, max_slice_bytes=decode._MAX_SLICE)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        (out,) = decode.map_clips(rb, kernel, [f.name for f in gain.OUT_FIELDS])
+    got = out.to_pydict()
+    assert got["gain_error"] == [None] * 4 and got["n_samples"] == [160, 120, 40, 0]
+    assert got["peak_in"][0] == got["peak_in"][2] == got["peak_in"][3] == 0.0
+    assert [bytes(b) for b in got["bytes_gain"]][::2] == [bytes(320), bytes(80)]
+    oracle = audio.gain_clip_rms if mode == "rms" else audio.gain_clip
+    assert bytes(got["bytes_gain"][1]) == oracle(bufs[1], "pcm16", 0.5)
