@@ -21,31 +21,40 @@ Pipeline order mirrors the reference: size admission first
 KafkaClientAlgebra.scala:204-215), then JSON->typed conversion, then
 key extraction (missing key on a keyed destination is a validation
 error). All checks are one JVM-side projection.
+
+``ingest_verdict`` is that projection over one payload column, with
+status from ``validation.error_code``; ``ingest_requests`` and the
+socket path's ingest frames (``socket_flow.interpret_frames``) both run
+it, so both transports answer a payload alike.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, functions as F
+
+from hydra_spark.validation import error_code
 
 OK = 200
 BAD_REQUEST = 400  # malformed payload / missing key (InvalidRequest)
 TOO_LARGE = 413  # RecordTooLarge
 
 
-def ingest_requests(
-    requests: DataFrame,
+class Verdict(NamedTuple):
+    key: Column  # string extracted at key_path (null without one)
+    value: Column  # struct of the value schema
+    error: Column  # reject reason, null when admitted
+    status: Column  # 200, else error_code(error)
+
+
+def ingest_verdict(
+    payload: Column,
     value_schema: str,
     key_path: str | None = None,
     max_bytes: int | None = None,
-    id_col: str = "correlation_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """(correlation_id, payload) -> typed record + IngestionReport cols.
-
-    Output: id_col, key (string, null unless key_path), value (struct of
-    ``value_schema``, null unless status 200), status_code, error.
-    """
-    payload = F.col(payload_col)
+) -> Verdict:
+    """One payload's admission: size -> json -> key, as Columns."""
     # PERMISSIVE from_json never throws; corrupt payloads land verbatim
     # in the corrupt-record column (the augmented-error-detail analog of
     # IngestionFlow.scala:79-89) instead of nulling legitimate fields
@@ -58,7 +67,6 @@ def ingest_requests(
     # stay in lockstep with the synchronous HTTP handler's raw_decode
     # verdict (http_flow._sync_verdict)
     malformed = parsed.getField(corrupt).isNotNull() | parsed.isNull()
-    parsed = parsed.dropFields(corrupt)
     key = F.get_json_object(payload, key_path) if key_path else F.lit(None).cast("string")
 
     # octet_length: the reference bounds SERIALIZED record bytes
@@ -78,15 +86,29 @@ def ingest_requests(
             F.lit(f"MissingKey:{key_path}"),
         )
     )
-    status = (
-        F.when(error.isNull(), F.lit(OK))
-        .when(error.startswith("RecordTooLarge"), F.lit(TOO_LARGE))
-        .otherwise(F.lit(BAD_REQUEST))
-    )
+    status = F.when(error.isNull(), F.lit(OK)).otherwise(error_code(error))
+    return Verdict(key, parsed.dropFields(corrupt), error, status)
+
+
+def ingest_requests(
+    requests: DataFrame,
+    value_schema: str,
+    key_path: str | None = None,
+    max_bytes: int | None = None,
+    id_col: str = "correlation_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """(correlation_id, payload) -> typed record + IngestionReport cols.
+
+    Output: id_col, key (string, null unless key_path), value (struct of
+    ``value_schema``, null unless status 200), status_code, error.
+    """
+    v = ingest_verdict(F.col(payload_col), value_schema, key_path, max_bytes)
+    admitted = v.status == OK
     return requests.select(
         F.col(id_col),
-        F.when(status == OK, key).alias("key"),
-        F.when(status == OK, parsed).alias("value"),
-        status.alias("status_code"),
-        error.alias("error"),
+        F.when(admitted, v.key).alias("key"),
+        F.when(admitted, v.value).alias("value"),
+        v.status.alias("status_code"),
+        v.error.alias("error"),
     )

@@ -7,8 +7,10 @@ ConsumerGroupsAlgebra.scala:254-303 consumeDVSConsumersTopicIntoCache;
 same pattern MetadataAlgebra.scala:36-119, StreamsManagerActor.scala:78-89).
 
 Spark-first mapping:
-  * batch/refresh: row_number() over (partition by key order by ts desc)
-    = 1, then drop tombstones — one shuffle, whole-stage codegen.
+  * batch/refresh (``latest_wins_hash``, also the flagship sink's
+    within-batch dedup): a ``max_by`` hash aggregate per key over the
+    order columns — no sort, map-side partial aggregation; callers drop
+    tombstones with a filter on the winning row.
   * streaming: applyInPandasWithState — per-key state holds the current
     (ts, value); emits a row whenever the winner changes; tombstone
     (null value) clears the state and emits a deletion marker so the
@@ -22,7 +24,7 @@ import os
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window as W, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 # Custom-state layout version for the applyInPandasWithState operators
@@ -75,22 +77,6 @@ def pin_state_format(checkpoint_dir: str, version: int = STATE_FORMAT_VERSION) -
     os.rename(tmp, marker)
 
 
-def latest_wins_batch(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "event_time",
-    value_col: str = "transcript",
-    tiebreak_cols: list[str] | None = None,
-    drop_tombstones: bool = True,
-) -> DataFrame:
-    order = [F.col(ts_col).desc()] + [F.col(c).desc() for c in (tiebreak_cols or [])]
-    w = W.partitionBy(*key_cols).orderBy(*order)
-    out = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    if drop_tombstones:
-        out = out.where(F.col(value_col).isNotNull())
-    return out
-
-
 def latest_wins_hash(
     df: DataFrame,
     key_cols: list[str],
@@ -98,12 +84,12 @@ def latest_wins_hash(
 ) -> DataFrame:
     """Hash-aggregation latest-wins: ``max_by(struct(*), order)`` per key.
 
-    Same result as the row_number() form but with NO sort — a hash agg
-    with map-side partial aggregation, so it scales like a groupBy
-    instead of an exchange+sort. The sink's hot path uses this; the
-    window form stays for callers that need rank semantics. NULLs in
-    order columns sort lowest (coalesced to epoch) so a tombstone never
-    beats a real row with equal keys.
+    The row ``row_number() over (partition by key order by order_cols
+    desc) = 1`` picks, with NO sort — a hash agg with map-side partial
+    aggregation, so it scales like a groupBy instead of an
+    exchange+sort. NULL timestamps in order columns sort lowest
+    (coalesced to epoch) so a tombstone never beats a real row with
+    equal keys.
     """
     ordk = F.struct(
         *[F.coalesce(F.col(c).cast("timestamp"), F.timestamp_seconds(F.lit(0))).alias(f"o{i}")

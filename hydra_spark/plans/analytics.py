@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from hydra_spark import lineage as lin
 from hydra_spark.operators import windows as win
+from hydra_spark.operators.state import latest_wins_hash
 from hydra_spark.sources.replay import seek_predicate
 
 # the tables the stateful rows build live under the tree this file is in
@@ -119,12 +120,11 @@ def session_window_dynamic(spark, sf_dir):
 # ------------------------------------------------------ A1/A2/A3/A4 state & lag
 
 def dedup_latest_wins(spark, sf_dir):
+    """Latest event per user by (ts, event_id) through the flagship
+    sink's own operator, so this row's oracle certifies it."""
     ev = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        ev.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("user_id", "event_id", "event_type", _us("ts").alias("ts_us"))
+    return latest_wins_hash(ev, ["user_id"], ["ts", "event_id"]).select(
+        "user_id", "event_id", "event_type", _us("ts").alias("ts_us")
     )
 
 

@@ -53,9 +53,6 @@ ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvi
 LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "hydra-localfs.jar")
 
 ENGINE_CONF = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # audio rows carry ~10-60 KB binary payloads; cap Arrow batch rows
@@ -69,7 +66,6 @@ ENGINE_CONF = {
     # numRowsTotal reads 0, so progress consumers (runner.ProgressListener,
     # perfbench) use numRowsUpdated / numRowsRemoved instead
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows": "false",
-    "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "true",
     "spark.sql.parquet.compression.codec": "zstd",
     # INT64 micros, not legacy INT96: INT96 timestamps carry NO
     # parquet column stats, which blinds manifest-level file

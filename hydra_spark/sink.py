@@ -82,8 +82,7 @@ class ExactlyOnceSink:
             n_quar = sum(g.n_quar or 0 for g in groups)
 
             # within-batch latest-wins on the sink key (caller may have
-            # already deduped; this makes the commit input key-unique).
-            # hash-agg (max_by), not window sort — see latest_wins_hash
+            # already deduped; this makes the commit input key-unique)
             good = batch_df.where(good_row).drop("reject_reason")
             deduped = latest_wins_hash(good, self.key_cols, ORDER_COLS)
             # preclustered: the latest_wins_hash groupBy just shuffled the

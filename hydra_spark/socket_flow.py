@@ -17,7 +17,9 @@ reference.conf:13-21):
   * any other ``-c ...``   -> 400 BAD_REQUEST
   * anything else          -> ingest frame: optional ``-i <corrId>``
     prefix, remainder is the JSON payload; answered with a per-frame
-    ingestion report (the ingest_flow checks: size -> json -> key).
+    ingestion report from ``ingest_flow.ingest_verdict`` (size -> json
+    -> key), the same verdict and status codes as the request-table
+    path ``ingest_requests``.
   * frames beyond the ``max_frames`` limit answer 400 (the WS layer's
     StreamLimitReachedException -> 400 recover, Endpoint.scala:88-95).
 
@@ -26,7 +28,7 @@ frame ``(conn_id, frame_idx, frame)`` — and the per-connection actor
 state (current metadata) is a window function: the effective value for
 frame i is the last VALID ``-c set`` before i on that connection. The
 whole protocol — classification, session-metadata threading, ack
-validation, ingest checks — is one JVM-side projection + one window,
+validation, ingest verdict — is one JVM-side projection + one window,
 oracle-checkable in SQL. The live-socket form plugs the same
 interpreter onto ``spark.readStream.format("socket")`` (frame order =
 arrival order on the single receiver partition).
@@ -39,6 +41,8 @@ into request metadata we don't further interpret.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from hydra_spark.ingest_flow import ingest_verdict
 
 VALID_ACKS = {"replicated": "Replicated", "persisted": "Persisted", "noack": "NoAck"}
 HELP_TEXT = "Set metadata: --set (name)=(value)"
@@ -117,20 +121,7 @@ def interpret_frames(
     corr = F.when(kind == "ingest", F.regexp_extract(f, ing_m, 1))
     payload = F.when(kind == "ingest", F.regexp_extract(f, ing_m, 2))
 
-    n_bytes = F.octet_length(payload)
-    too_large = (n_bytes > max_bytes) if max_bytes is not None else F.lit(False)
-    corrupt = "_corrupt_record"
-    parsed = F.from_json(
-        payload, f"{value_schema or 'k BIGINT'}, {corrupt} STRING",
-        {"columnNameOfCorruptRecord": corrupt},
-    )
-    key = F.get_json_object(payload, key_path) if key_path else F.lit(None).cast("string")
-    ingest_error = (
-        F.when(payload.isNull() | (payload == ""), F.lit("MissingPayload"))
-        .when(too_large, F.concat(F.lit("RecordTooLarge:"), n_bytes.cast("string"), F.lit(f">{max_bytes}")))
-        .when(parsed.getField(corrupt).isNotNull(), F.lit("JsonConversionError:malformed payload"))
-        .when(F.lit(key_path is not None) & key.isNull(), F.lit(f"MissingKey:{key_path}"))
-    )
+    verdict = ingest_verdict(payload, value_schema or "k BIGINT", key_path, max_bytes)
 
     over_limit = ~within_limit
 
@@ -140,12 +131,7 @@ def interpret_frames(
         .when(kind == "set_dump", 200)
         .when(kind == "set", F.when(is_ack_set & ~valid_ack, 400).otherwise(200))
         .when(kind == "bad_cmd", 400)
-        # ingest report codes (IngestionEndpoint.scala:89-96 mapping)
-        .otherwise(
-            F.when(ingest_error.isNull(), 200)
-            .when(ingest_error.startswith("RecordTooLarge"), 413)
-            .otherwise(400)
-        )
+        .otherwise(verdict.status)
     )
     message = (
         F.when(over_limit, "Stream limit reached.")
@@ -166,7 +152,7 @@ def interpret_frames(
             ),
         )
         .when(kind == "bad_cmd", BAD_CMD)
-        .otherwise(F.coalesce(ingest_error, F.lit("OK")))
+        .otherwise(F.coalesce(verdict.error, F.lit("OK")))
     )
 
     return frames.select(
@@ -177,8 +163,8 @@ def interpret_frames(
         message.alias("message"),
         corr.alias("corr_id"),
         F.when((kind == "ingest") & ~over_limit, eff_ack).alias("ack"),
-        F.when((kind == "ingest") & ~over_limit & ingest_error.isNull(), key).alias("key"),
-        F.when(kind == "ingest", ingest_error).alias("error"),
+        F.when((kind == "ingest") & ~over_limit & verdict.error.isNull(), verdict.key).alias("key"),
+        F.when(kind == "ingest", verdict.error).alias("error"),
     )
 
 

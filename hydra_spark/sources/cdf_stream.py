@@ -13,7 +13,10 @@ Spark-first shape (pyspark 4 Python DataSource API):
 
   * **Offset = manifest version** (one integer). ``latestOffset`` reads
     the table's CURRENT pointer; a (start, end] batch is the change set
-    between those snapshots. Offsets are deterministic and replayable —
+    between those snapshots. The pointer, the manifests and the
+    changed-bucket diff are read through ``tables.current_version``,
+    ``tables.manifest_at`` and ``tables.changed_buckets``, the functions
+    ``read_changes`` uses. Offsets are deterministic and replayable —
     re-planning the same range yields identical rows, which is what
     exactly-once sinks need from a source.
   * **One input partition per changed bucket.** The table is
@@ -26,7 +29,8 @@ Spark-first shape (pyspark 4 Python DataSource API):
     per-bucket diff is bounded by bucket size (choose n_buckets for
     that, as for any bucketed layout).
   * Executor-side reads are plain pyarrow on the bucket's parquet
-    files; the schema is pinned at stream start from the table's
+    files, and the per-bucket diff is a pandas merge (no Spark session
+    runs there); the schema is pinned at stream start from the table's
     registered schema (else file footers) plus ``_change_type``.
 
 Retention contract: ``expire_snapshots`` must keep the stream's cursor
@@ -37,14 +41,13 @@ silently skipping changes.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
+
+from hydra_spark.tables import changed_buckets, current_version, manifest_at
 
 FORMAT_NAME = "hydra_cdf"
 
@@ -73,24 +76,6 @@ def _pa_type_to_ddl(t) -> str:
     if pa.types.is_decimal(t):
         return f"decimal({t.precision}, {t.scale})"
     return _PA_TO_DDL.get(str(t), str(t))
-
-
-def _manifest_at(path: str, version: int) -> dict:
-    mp = os.path.join(path, "manifests", f"v{version}.json")
-    if not os.path.exists(mp):
-        from hydra_spark.tables import SnapshotExpiredError
-
-        raise SnapshotExpiredError(
-            f"snapshot v{version} of {path} is expired or missing; the CDF "
-            f"stream cursor needs its version retained (raise keep_last)"
-        )
-    with open(mp) as f:
-        return json.load(f)
-
-
-def _current_version(path: str) -> int:
-    with open(os.path.join(path, "CURRENT")) as f:
-        return int(f.read().strip())
 
 
 def _table_fields(path: str, m: dict) -> list[dict]:
@@ -129,9 +114,9 @@ class CdfStreamReader(DataSourceStreamReader):
         start = options.get("startingversion", options.get("startingVersion"))
         # default: changes AFTER the version current at stream start
         self.start_version = (
-            int(start) if start is not None else _current_version(self.path)
+            int(start) if start is not None else current_version(self.path)
         )
-        m = _manifest_at(self.path, _current_version(self.path))
+        m = manifest_at(self.path, current_version(self.path))
         self.key_cols = m.get("key_cols") or []
         self.fields = _table_fields(self.path, m)
 
@@ -139,20 +124,13 @@ class CdfStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        return {"version": _current_version(self.path)}
+        return {"version": current_version(self.path)}
 
     def partitions(self, start: dict, end: dict):
-        m_from = _manifest_at(self.path, start["version"])
-        m_to = _manifest_at(self.path, end["version"])
-        f_from = {k: sorted(v) for k, v in m_from["files"].items()}
-        f_to = {k: sorted(v) for k, v in m_to["files"].items()}
-        out = [
-            CdfPartition(
-                f_from.get(b, []), f_to.get(b, []), self.key_cols, self.fields
-            )
-            for b in sorted(set(f_from) | set(f_to))
-            if f_from.get(b, []) != f_to.get(b, [])
-        ]
+        changed = changed_buckets(
+            manifest_at(self.path, start["version"]), manifest_at(self.path, end["version"])
+        )
+        out = [CdfPartition(old, new, self.key_cols, self.fields) for old, new in changed]
         # a version bump with no file changes (property/schema commit):
         # plan one empty partition so the batch still advances the cursor
         return out or [CdfPartition([], [], self.key_cols, self.fields)]
@@ -237,7 +215,7 @@ class CdfDataSource(DataSource):
 
     def schema(self) -> str:
         path = self.options["path"]
-        m = _manifest_at(path, _current_version(path))
+        m = manifest_at(path, current_version(path))
         fields = _table_fields(path, m)
         cols = ", ".join(f"{f['name']} {f['type']}" for f in fields)
         return f"{cols}, _change_type string"

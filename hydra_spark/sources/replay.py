@@ -13,15 +13,16 @@ file stream over the synthesized clips table:
     a per-partition start-offset predicate compiled into ONE disjunction
     of (partition = p AND offset >= o) — pushed down to the parquet scan.
   * S7 bounded tail (TopicsEndpoint.scala:33-84: takeWhile index <= n
-    and offset < latest) -> batch read + offset upper bound + per-
-    partition limit.
+    and offset < latest) is a batch read, not a source: an offset upper
+    bound plus a per-partition row_number limit
+    (``plans/analytics.bounded_tail``).
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hydra_spark.synth import CLIPS_SCHEMA
 
@@ -54,16 +55,3 @@ def seek_predicate(start_offsets: dict[int, int]):
     ]
     known = F.col("ingest_partition").isin(list(start_offsets.keys()))
     return reduce(lambda a, b: a | b, clauses) | (~known)
-
-
-def bounded_tail(
-    spark: SparkSession, path: str, n: int, max_offset: int | None = None
-) -> DataFrame:
-    """S7: bounded read — newest n rows per partition below max_offset."""
-    df = spark.read.parquet(path)
-    if max_offset is not None:
-        df = df.where(F.col("ingest_offset") < max_offset)
-    w = W.partitionBy("ingest_partition").orderBy(F.col("ingest_offset").desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") <= n).drop("_rn")
-    )

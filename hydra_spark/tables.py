@@ -22,7 +22,10 @@ Every data-writing operation (append_dedup, merge_upsert, compact,
 rebucket, delete_where, update_where) publishes through one method,
 ``TransactionalTable._commit``: an Iceberg-shaped snapshot of (files
 added, files removed, batch id), data files first, the CURRENT swap
-last.
+last; the two predicate DML operations share one rewrite,
+``_rewrite_where``. ``current_version``, ``manifest_at`` and
+``changed_buckets`` read the snapshot chain for ``TransactionalTable``
+and for the Spark-free change-data-feed source (``sources/cdf_stream``).
 
 On a real cluster, swap TransactionalTable for
 ``spark.sql("MERGE INTO ...")`` against an Iceberg catalog — the sink
@@ -340,6 +343,42 @@ def _project_to_schema(df: DataFrame, fields: list[dict]) -> DataFrame:
     return df.select(*cols)
 
 
+def current_version(path: str) -> int | None:
+    """The version the table's CURRENT pointer names (None: no table)."""
+    try:
+        with open(os.path.join(path, "CURRENT")) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return None
+
+
+def manifest_at(path: str, version: int) -> dict:
+    """Load one snapshot's manifest. Raises SnapshotExpiredError if that
+    version was removed by expire_snapshots (or never existed)."""
+    try:
+        with open(os.path.join(path, "manifests", f"v{version}.json")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        raise SnapshotExpiredError(
+            f"snapshot v{version} of table {path} is expired or missing; a "
+            "reader's version must be retained (expire_snapshots keep_last)"
+        ) from None
+
+
+def changed_buckets(m_from: dict, m_to: dict) -> list[tuple[list[str], list[str]]]:
+    """(old files, new files) of every bucket whose file list differs
+    between two manifests, in bucket-id order. A key lives in one
+    bucket, so only these buckets can hold a change between the
+    snapshots; the rest are pruned from the manifests alone."""
+    f_from = {b: sorted(fl) for b, fl in m_from["files"].items()}
+    f_to = {b: sorted(fl) for b, fl in m_to["files"].items()}
+    return [
+        (f_from.get(b, []), f_to.get(b, []))
+        for b in sorted(set(f_from) | set(f_to))
+        if f_from.get(b, []) != f_to.get(b, [])
+    ]
+
+
 class TransactionalTable:
     def __init__(self, path: str, key_cols: list[str], n_buckets: int = 32):
         self.path = path
@@ -347,7 +386,7 @@ class TransactionalTable:
         self.n_buckets = n_buckets
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         os.makedirs(os.path.join(path, "manifests"), exist_ok=True)
-        if self._current_version() is None:
+        if current_version(self.path) is None:
             self._write_manifest(
                 {
                     "version": 0,
@@ -379,30 +418,11 @@ class TransactionalTable:
             # (it is stamped into the next commit's manifest below)
 
     # ---------------------------------------------------------- manifest
-    def _current_path(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
-    def _current_version(self) -> int | None:
-        try:
-            with open(self._current_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
-
     def manifest(self) -> dict:
-        return self.manifest_at(self._current_version())
+        return manifest_at(self.path, current_version(self.path))
 
     def manifest_at(self, version: int) -> dict:
-        """Load a specific snapshot's manifest. Raises SnapshotExpiredError
-        if that version was removed by expire_snapshots (or never existed)."""
-        p = os.path.join(self.path, "manifests", f"v{version}.json")
-        try:
-            with open(p) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            raise SnapshotExpiredError(
-                f"snapshot v{version} is expired or does not exist (table {self.path})"
-            ) from None
+        return manifest_at(self.path, version)
 
     def _write_manifest(self, m: dict) -> None:
         # scan-planning stats ride every snapshot (Iceberg manifest
@@ -426,12 +446,12 @@ class TransactionalTable:
             f.flush()
             os.fsync(f.fileno())
         os.rename(tmp, mp)
-        ptmp = self._current_path() + ".tmp"
-        with open(ptmp, "w") as f:
+        cp = os.path.join(self.path, "CURRENT")
+        with open(cp + ".tmp", "w") as f:
             f.write(str(v))
             f.flush()
             os.fsync(f.fileno())
-        os.rename(ptmp, self._current_path())  # atomic snapshot swap
+        os.rename(cp + ".tmp", cp)  # atomic snapshot swap
 
     def committed_batches(self) -> set:
         return set(self.manifest()["committed_batches"])
@@ -947,10 +967,9 @@ class TransactionalTable:
         }
 
     def _range_match(self, predicates: dict):
-        """NULL-rejecting range-conjunct Column — THE predicate language
-        shared by the DML rewrites (same semantics as plan_files /
-        read_where: a range never matches NULL). One definition so
-        DELETE and UPDATE can never diverge on what 'matches' means."""
+        """NULL-rejecting range-conjunct Column — the predicate language
+        of the DML rewrites (``_rewrite_where``), with the semantics of
+        plan_files / read_where: a range never matches NULL."""
         match = F.lit(True)
         for c, (lo, hi) in predicates.items():
             if lo is not None:
@@ -959,11 +978,45 @@ class TransactionalTable:
                 match = match & (F.col(c) <= F.lit(hi))
         return F.coalesce(match, F.lit(False))
 
-    def _admitted_by_bucket(self, m: dict, admitted_set: set) -> dict:
-        return {
-            b: [p for p in fl if p in admitted_set]
+    def _rewrite_where(
+        self, spark: SparkSession, predicates: dict, rewrite, count_key: str
+    ) -> dict:
+        """The one predicate-DML body (delete_where, update_where): a
+        file-pruned copy-on-write rewrite. ``plan_files`` admits files
+        from manifest stats alone; only those are read (through schema
+        resolution), ``rewrite(df, match)`` gives the rows that replace
+        them (it may raise, before anything is written), matches are
+        counted, and the rows are re-bucketed and committed with the
+        admitted files removed. Nothing is written when no row matches.
+        Returns {count_key, "files_rewritten", "files_untouched",
+        "buckets_touched"}."""
+        m = self.manifest()
+        admitted, total = self.plan_files(predicates)
+        keep = set(admitted)
+        cands = {
+            b: [p for p in fl if p in keep]
             for b, fl in m["files"].items()
-            if any(p in admitted_set for p in fl)
+            if keep.intersection(fl)
+        }
+        files = [p for fl in cands.values() for p in fl]
+        n = 0
+        if files:
+            df = self._read_files(spark, files, m)
+            match = self._range_match(predicates)
+            out = rewrite(df, match)
+            n = df.where(match).count()
+        if n == 0:  # no admitted file, or the residual hit nothing
+            return {
+                count_key: 0, "files_rewritten": 0,
+                "files_untouched": total, "buckets_touched": 0,
+            }
+        out = out.withColumn("_bucket", self._bucket_col())
+        self._commit(m, out.repartition(len(cands), "_bucket"), removed=files)
+        return {
+            count_key: int(n),
+            "files_rewritten": len(files),
+            "files_untouched": total - len(files),
+            "buckets_touched": len(cands),
         }
 
     def delete_where(self, spark: SparkSession, predicates: dict) -> dict:
@@ -988,32 +1041,9 @@ class TransactionalTable:
         Returns {"rows_deleted", "files_rewritten", "files_untouched",
         "buckets_touched"}.
         """
-        m = self.manifest()
-        admitted, total = self.plan_files(predicates)
-        admitted_set = set(admitted)
-        cands = self._admitted_by_bucket(m, admitted_set)
-        if not cands:
-            return {
-                "rows_deleted": 0, "files_rewritten": 0,
-                "files_untouched": total, "buckets_touched": 0,
-            }
-        files = [p for fl in cands.values() for p in fl]
-        df = self._read_files(spark, files, m)
-        match = self._range_match(predicates)
-        n_del = df.where(match).count()
-        if n_del == 0:  # stats admitted files but the residual hit nothing
-            return {
-                "rows_deleted": 0, "files_rewritten": 0,
-                "files_untouched": total, "buckets_touched": 0,
-            }
-        survivors = df.where(~match).withColumn("_bucket", self._bucket_col())
-        self._commit(m, survivors.repartition(len(cands), "_bucket"), removed=files)
-        return {
-            "rows_deleted": int(n_del),
-            "files_rewritten": len(files),
-            "files_untouched": total - len(files),
-            "buckets_touched": len(cands),
-        }
+        return self._rewrite_where(
+            spark, predicates, lambda df, match: df.where(~match), "rows_deleted"
+        )
 
     def update_where(
         self, spark: SparkSession, predicates: dict, set_exprs: dict
@@ -1065,72 +1095,51 @@ class TransactionalTable:
         # one exists — a typo'd column must raise even when the
         # predicate matches nothing (a no-op return would mask it until
         # production data enters the range); schema-less tables are
-        # re-checked against the data columns after the read below
+        # checked against the data columns by set_rows, after the read
         latest = self.schema_version()
         if latest is not None:
             known = {f["name"] for f in latest["fields"]}
             missing = sorted(set(set_exprs) - known)
             if missing:
                 raise ValueError(f"SET column(s) {missing} not in table schema")
-        m = self.manifest()
-        admitted, total = self.plan_files(predicates)
-        admitted_set = set(admitted)
-        cands = self._admitted_by_bucket(m, admitted_set)
-        if not cands:
-            return {
-                "rows_updated": 0, "files_rewritten": 0,
-                "files_untouched": total, "buckets_touched": 0,
+
+        def set_rows(df: DataFrame, match: Column) -> DataFrame:
+            missing = sorted(set(set_exprs) - set(df.columns))
+            if missing:
+                raise ValueError(f"SET column(s) {missing} not in table schema")
+            sets = {
+                c: (e if isinstance(e, Column) else F.lit(e))
+                for c, e in set_exprs.items()
             }
-        files = [p for fl in cands.values() for p in fl]
-        df = self._read_files(spark, files, m)
-        missing = sorted(set(set_exprs) - set(df.columns))
-        if missing:
-            raise ValueError(f"SET column(s) {missing} not in table schema")
-        match = self._range_match(predicates)
-        sets = {
-            c: (e if isinstance(e, Column) else F.lit(e))
-            for c, e in set_exprs.items()
-        }
-        # one select, every SET expr resolved against the PRE-update row
-        # simultaneously: SET a = b, b = a swaps (SQL UPDATE semantics),
-        # never sequential assignment
-        out = df.select(
-            *[
-                F.when(match, sets[c]).otherwise(F.col(c)).alias(c)
-                if c in sets
-                else F.col(c)
-                for c in df.columns
-            ]
-        )
-        # a SET expr must not change a column's TYPE: when/otherwise
-        # would silently coerce (long -> string, ...) and the rewritten
-        # files would read back NULL through the registered schema's
-        # cast — the same silent corruption every explicit evolution
-        # path guards with SchemaCompatError
-        changed = [
-            (a.name, str(a.dataType), str(b.dataType))
-            for a, b in zip(df.schema.fields, out.schema.fields)
-            if a.dataType != b.dataType
-        ]
-        if changed:
-            raise SchemaCompatError(
-                f"SET expression changes column type(s) {changed}; "
-                "register a schema evolution instead"
+            # one select, every SET expr resolved against the PRE-update
+            # row simultaneously: SET a = b, b = a swaps (SQL UPDATE
+            # semantics), never sequential assignment
+            out = df.select(
+                *[
+                    F.when(match, sets[c]).otherwise(F.col(c)).alias(c)
+                    if c in sets
+                    else F.col(c)
+                    for c in df.columns
+                ]
             )
-        n_upd = df.where(match).count()
-        if n_upd == 0:  # stats admitted files but the residual hit nothing
-            return {
-                "rows_updated": 0, "files_rewritten": 0,
-                "files_untouched": total, "buckets_touched": 0,
-            }
-        out = out.withColumn("_bucket", self._bucket_col())
-        self._commit(m, out.repartition(len(cands), "_bucket"), removed=files)
-        return {
-            "rows_updated": int(n_upd),
-            "files_rewritten": len(files),
-            "files_untouched": total - len(files),
-            "buckets_touched": len(cands),
-        }
+            # a SET expr must not change a column's TYPE: when/otherwise
+            # would silently coerce (long -> string, ...) and the
+            # rewritten files would read back NULL through the registered
+            # schema's cast — the same silent corruption every explicit
+            # evolution path guards with SchemaCompatError
+            changed = [
+                (a.name, str(a.dataType), str(b.dataType))
+                for a, b in zip(df.schema.fields, out.schema.fields)
+                if a.dataType != b.dataType
+            ]
+            if changed:
+                raise SchemaCompatError(
+                    f"SET expression changes column type(s) {changed}; "
+                    "register a schema evolution instead"
+                )
+            return out
+
+        return self._rewrite_where(spark, predicates, set_rows, "rows_updated")
 
     def read_changes(
         self, spark: SparkSession, from_version: int, to_version: int | None = None
@@ -1149,13 +1158,9 @@ class TransactionalTable:
         full-outer join on the key with a null-safe struct compare."""
         m_from = self.manifest_at(from_version)
         m_to = self.manifest() if to_version is None else self.manifest_at(to_version)
-        f_from = {k: sorted(v) for k, v in m_from["files"].items()}
-        f_to = {k: sorted(v) for k, v in m_to["files"].items()}
-        changed = [
-            b for b in set(f_from) | set(f_to) if f_from.get(b, []) != f_to.get(b, [])
-        ]
-        files_a = [p for b in changed for p in f_from.get(b, [])]
-        files_b = [p for b in changed for p in f_to.get(b, [])]
+        changed = changed_buckets(m_from, m_to)
+        files_a = [p for old, _ in changed for p in old]
+        files_b = [p for _, new in changed for p in new]
 
         def _side(files, m):
             return self._read_files(spark, files, m) if files else None
@@ -1236,7 +1241,7 @@ class TransactionalTable:
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         snaps = self.snapshots()
-        cur = self._current_version()
+        cur = current_version(self.path)
         keep = {s["version"] for s in snaps[-keep_last:]} | {cur}
         expired = [s["version"] for s in snaps if s["version"] not in keep]
         live: set[str] = set()

@@ -21,7 +21,10 @@ Reference semantics re-expressed as DataFrame predicates:
   * Publish-error taxonomy (KafkaClientAlgebra.scala:182-202 —
     Timeout / RecordTooLarge / TopicNotFoundInMetadata / Other, mapped
     to HTTP codes at IngestionEndpoint.scala:89-96): ``error_code``
-    maps reject reasons to stable numeric codes. TopicNotFoundInMetadata
+    maps reject reasons to stable numeric codes; it is also the ingest
+    flow's status map (``ingest_flow.ingest_verdict``), whose request
+    rejects (MissingPayload, JsonConversionError, MissingKey) are 400
+    and RecordTooLarge 413. TopicNotFoundInMetadata
     has no analog: the flagship bootstraps its tables before the query
     starts, so a batch never publishes to a missing table.
 
@@ -56,8 +59,8 @@ class InvalidLogicalTypeError(PublishError):
 
 
 def error_code(reason: Column) -> Column:
-    """reject_reason -> stable numeric code (the sink's quarantine rows
-    carry both, so downstream alerting keys on codes, not strings)."""
+    """reject_reason -> stable numeric code (a report row carries both,
+    so downstream alerting keys on codes, not strings)."""
     return (
         F.when(reason.isNull(), F.lit(None).cast("int"))
         .when(reason.startswith("RecordTooLarge"), RecordTooLargeError.code)
@@ -65,6 +68,9 @@ def error_code(reason: Column) -> Column:
         .when(reason.startswith("InvalidUuid"), InvalidLogicalTypeError.code)
         .when(reason.startswith("ExtraFields"), InvalidLogicalTypeError.code)
         .when(reason.startswith("DecodeError"), 400)
+        .when(reason.startswith("MissingPayload"), 400)
+        .when(reason.startswith("JsonConversionError"), 400)
+        .when(reason.startswith("MissingKey"), 400)
         .when(reason.startswith("Timeout"), PublishTimeout.code)
         .otherwise(PublishError.code)
     )

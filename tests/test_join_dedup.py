@@ -6,7 +6,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from hydra_spark.operators.join import clip_transcript_join, dedup_within_watermark
-from hydra_spark.operators.state import latest_wins_batch
+from hydra_spark.operators.state import latest_wins_hash
 
 
 def test_batch_interval_join_vs_oracle(spark, streams, truth):
@@ -41,7 +41,7 @@ def test_latest_wins_batch_tombstones(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    out = latest_wins_batch(df, ["k"], ts_col="event_time", value_col="v").toPandas()
+    out = latest_wins_hash(df, ["k"], ["event_time"]).where(F.col("v").isNotNull()).toPandas()
     got = dict(zip(out.k, out.v))
     # a -> latest a2; b -> latest is tombstone (dropped); c -> c1
     assert got == {"a": "a2", "c": "c1"}

@@ -7,7 +7,9 @@ import threading
 import time
 
 import pandas as pd
+import pytest
 
+from hydra_spark.ingest_flow import ingest_requests
 from hydra_spark.socket_flow import interpret_frames, socket_frames_stream
 
 
@@ -81,6 +83,32 @@ def test_ingest_reports_and_frame_limit(spark):
     assert (out[1].status_code, out[1].error) == (400, "JsonConversionError:malformed payload")
     assert (out[2].status_code, out[2].error) == (400, "MissingKey:$.k")
     assert (out[3].status_code, out[3].kind) == (400, "limit")
+
+
+@pytest.mark.parametrize("key_path", [None, "$.k"])
+def test_ingest_frames_match_ingest_requests(spark, key_path):
+    """An ingest frame and a request-table row with the same payload get
+    the same status and error: both run ingest_flow's one verdict."""
+    payloads = ["", "   ", "\t", "null", "[1,2]", '{"k":1}', '{"k":2,"pad":"' + "x" * 64 + '"}']
+    frames = interpret_frames(
+        _frames(spark, [(0, i, p) for i, p in enumerate(payloads)]),
+        "k BIGINT, pad STRING",
+        key_path=key_path,
+        max_bytes=32,
+    ).collect()
+    requests = ingest_requests(
+        spark.createDataFrame(
+            pd.DataFrame({"correlation_id": range(len(payloads)), "payload": payloads})
+        ),
+        "k BIGINT, pad STRING",
+        key_path=key_path,
+        max_bytes=32,
+    ).collect()
+    got = {r.frame_idx: (r.status_code, r.error) for r in frames}
+    want = {r.correlation_id: (r.status_code, r.error) for r in requests}
+    assert got == want
+    assert [want[i][0] for i in range(len(payloads))] == [400, 400, 400, 400, 400, 200, 413]
+    assert want[1] == (400, "MissingPayload")
 
 
 def test_live_socket_source(spark, tmp_path):

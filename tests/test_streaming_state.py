@@ -12,7 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from hydra_spark.operators.state import latest_wins_batch, latest_wins_stream
+from hydra_spark.operators.state import latest_wins_hash, latest_wins_stream
 
 
 @pytest.fixture()
@@ -69,10 +69,11 @@ def test_latest_wins_stream_emits_latest_and_tombstones(spark, kv_stream_dir, tm
 
 
 def test_latest_wins_stream_matches_batch_form(spark, kv_stream_dir):
-    """Streaming state reduction must agree with the batch row_number form."""
+    """Streaming state reduction must agree with the batch max_by form."""
     df = spark.read.parquet(kv_stream_dir)
-    batch = latest_wins_batch(df, ["clip_id"], ts_col="event_time",
-                              value_col="transcript", drop_tombstones=True)
+    batch = latest_wins_hash(df, ["clip_id"], ["event_time"]).where(
+        F.col("transcript").isNotNull()
+    )
     got = {r["clip_id"]: r["transcript"] for r in batch.collect()}
     assert got == {"k1": "v1b", "k3": "v3a"}
 

@@ -142,12 +142,16 @@ def test_error_codes(spark):
                     "Timeout:t",
                     "SomethingElse",
                     None,
+                    # the ingest flow's request rejects
+                    "MissingPayload",
+                    "JsonConversionError:malformed payload",
+                    "MissingKey:$.k",
                 ]
             }
         )
     )
     got = [r[0] for r in df.select(V.error_code(F.col("r"))).collect()]
-    assert got == [413, 422, 422, 400, 408, 500, None]
+    assert got == [413, 422, 422, 400, 408, 500, None, 400, 400, 400]
 
 
 def test_nested_relaxed_preserves_null_struct(spark):
