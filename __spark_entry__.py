@@ -1553,10 +1553,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # md5-hash family + 16 chunks: pigeonhole recall 1 for
         # hamming<=8, output equals the oracle's all-pairs filter
         "simhash_dup": docs(lambda d: D.simhash_pairs_md5(d, max_hamming=8)),
-        # (the xxhash64 fast-path variant simhash_pairs stays available
-        # and recall-tested in tests/test_ops.py; not registered — the
-        # registry row would be rows-only noise next to the
-        # oracle-checked md5 form above)
         # training-data: similarity
         "embedding_cosine_topk": emb(lambda e: S.cosine_topk(e, list(range(25)), k=3)),
         "embedding_cosine_dup": emb(lambda e: S.cosine_pairs(e, threshold=0.4)),

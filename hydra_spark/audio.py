@@ -340,6 +340,9 @@ _LUFS_OFFSET = -0.691  # mono channel weight 1.0
 # the bilinear redesign goes unstable once f0 exceeds sr/2. Rates below
 # this floor are ERROR rows (skip-and-count), not silent garbage.
 LUFS_MIN_SR = 4000
+LUFS_FLOOR_ERROR = (
+    "sr_hz {} below K-weighting floor %d (shelf corner would exceed Nyquist)" % LUFS_MIN_SR
+)
 
 
 def _k_weighting_coeffs(sr_hz: int):
@@ -420,10 +423,7 @@ def lufs_integrated(x: np.ndarray, sr_hz: int):
     (functions/loudness.py) AND the fixture writer, so engine/fixture
     values are bit-identical."""
     if sr_hz < LUFS_MIN_SR:
-        raise ValueError(
-            f"sr_hz {sr_hz} below K-weighting floor {LUFS_MIN_SR} "
-            "(shelf corner would exceed Nyquist)"
-        )
+        raise ValueError(LUFS_FLOOR_ERROR.format(sr_hz))
     block = int(round(LUFS_BLOCK_S * sr_hz))
     hop = int(round(LUFS_HOP_S * sr_hz))
     if len(x) < block:

@@ -16,12 +16,12 @@ enter and leave the engine without a JVM spark-avro package:
   the reference's converter does at the wire layer.
 - ``encode_records`` / ``decode_records`` run per record inside Arrow
   batches (``mapInPandas``). Varints are variable-length, so this is a
-  deliberate wire-BOUNDARY stage like ``decode.decode_pcm`` — not a hot
-  analytics path; at cluster scale the Confluent deserializer sits in
-  the source connector and this module is the dependency-free fallback
-  plus the executable spec. Decode is bounds-checked: a truncated or
-  corrupt body becomes a ``decode_error`` row (skip-and-count, never a
-  job kill).
+  deliberate per-record wire-BOUNDARY stage — not a hot analytics path
+  (the audio stages decode whole Arrow batches at once); at cluster
+  scale the Confluent deserializer sits in the source connector and
+  this module is the dependency-free fallback plus the executable spec.
+  Decode is bounds-checked: a truncated or corrupt body becomes a
+  ``decode_error`` row (skip-and-count, never a job kill).
 - ``confluent_id``: when given, encode prepends the 5-byte framing and
   decode strictly verifies magic + id before the body (the reference's
   registry contract — a mismatched id is a quarantine row, not a

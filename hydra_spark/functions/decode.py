@@ -8,7 +8,8 @@ RecordFactory.scala:25-30) with per-format dispatch in one place
 KafkaRecordFactories.scala:21-47) and bad-record skip-and-count
 (KafkaClientAlgebra.scala:380-395). Here every audio stage (decode,
 gain, resample, transcode, trim, vad, segment, time mask, mel,
-spectral) is a ``mapInArrow`` kernel run by ONE harness in this module:
+spectral, loudness) is a ``mapInArrow`` kernel run by ONE harness in
+this module:
 
   * ``arrow_stage`` wraps a kernel as a DataFrame stage; ``map_clips``
     is the same harness for one RecordBatch — a plain function, so a
@@ -29,14 +30,12 @@ A kernel is a function of a ``Clips`` batch that yields ``(rows,
 arrays)``: the output columns, and which input rows they belong to
 (``None`` = all, a slice, or a take index).
 
-Two paths here:
-  * decode_features — the HOT path. Emits per-clip scalar features
-    (n_samples, rms_db, peak) and drops the raw bytes so the shuffle that
-    follows (window/join) moves ~100 B/row, not ~30 KB/row. At 10^12-clip
-    scale, not shuffling audio payloads is the single biggest win.
-  * decode_pcm — parity/test path (``mapInPandas``, per-row
-    ``audio.decode``). Emits the full float32 PCM array for SNR
-    comparison against the oracle.
+``decode_features`` is the decode stage — the HOT path. It emits
+per-clip scalar features (n_samples, rms_db, peak) and drops the raw
+bytes so the shuffle that follows (window/join) moves ~100 B/row, not
+~30 KB/row. At 10^12-clip scale, not shuffling audio payloads is the
+single biggest win. Tests that need the samples themselves run
+``_decoded`` over a collected batch: the decoder the engine runs.
 """
 
 from __future__ import annotations
@@ -45,10 +44,9 @@ from collections.abc import Iterator
 from functools import partial
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from hydra_spark import audio
 
@@ -85,13 +83,6 @@ _CHUNK = 1 << 18
 # range is an error row (no non-large Arrow binary column holds it).
 _MAX_SLICE = 1 << 30
 _MAX_ROW = (1 << 31) - 1
-
-
-def _decode_one(buf, codec: str):
-    try:
-        return audio.decode(buf, codec), None
-    except Exception as e:  # skip + count, never fail the stream
-        return None, f"{type(e).__name__}: {e}"
 
 
 # 256-entry decode lookup tables: G.711-style byte -> float32 sample.
@@ -499,37 +490,3 @@ def decode_features(df: DataFrame, extended: bool = False) -> DataFrame:
         else FEATURE_FIELDS
     )
     return arrow_stage(df, fields, partial(features, extended=extended))
-
-
-def decode_pcm(df: DataFrame, keep_cols: list[str] | None = None) -> DataFrame:
-    """Parity path: emit full float32 PCM (array<float>) + decode_error."""
-    keep_cols = keep_cols or ["clip_id", "sr_hz", "dur_ms", "codec"]
-    out_schema = T.StructType(
-        [df.schema[c] for c in keep_cols]
-        + [
-            T.StructField("pcm", T.ArrayType(T.FloatType()), True),
-            T.StructField("decode_error", T.StringType(), True),
-        ]
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pcms, errs = [], []
-            for buf, codec in zip(pdf["bytes"], pdf["codec"]):
-                x, e = _decode_one(buf, codec)
-                pcms.append(None if x is None else x)
-                errs.append(e)
-            out = pdf[keep_cols].copy()
-            out["pcm"] = pcms
-            out["decode_error"] = pd.Series(errs, dtype=object)
-            yield out
-
-    return df.mapInPandas(fn, schema=out_schema)
-
-
-def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, quarantined) after decode — Hydra skip-and-count semantics."""
-    return (
-        df.where(F.col("decode_error").isNull()),
-        df.where(F.col("decode_error").isNotNull()),
-    )

@@ -6,30 +6,33 @@ gain needed to hit a target LUFS). Unlike the head-only spectral/mel
 stages, integrated loudness is a WHOLE-CLIP statistic — the stage
 necessarily reads full payloads, like the decode rollup does.
 
-Execution shape: Arrow-batched ``mapInPandas`` with a per-clip numpy
+Execution shape: one ``mapInArrow`` stage on the shared audio-kernel
+harness (``decode.arrow_stage``): the batch is decoded by the one
+vectorized codec decoder ``decode._decoded``, then the per-clip numpy
 kernel (``audio.lufs_integrated``: one cached-FIR FFT convolution +
-cumsum block gating). Per-row Python overhead is microseconds against
-milliseconds of FFT per clip, so the Python tax is amortized — the hot
-work is vectorized C. No shuffle: the stage is a pure map, partition
+cumsum block gating) runs on each decoded row. Per-row Python overhead
+is microseconds against milliseconds of FFT per clip, so the hot work
+is vectorized C. No shuffle: the stage is a pure map, partition
 boundaries preserved, so at 100 TB it rides the scan partitioning.
 
 The per-row kernel is the single shared definition used by the fixture
 writer too (engine/fixture bit-identical; the loudness MATH is pinned
 independently in tests/test_loudness.py: 48 kHz coefficients vs the
 spec's table, FIR path vs direct per-sample IIR, 997 Hz sine at
--3.01 LKFS). Bad rows carry ``decode_error`` (skip-and-count, reference
+-3.01 LKFS). Bad rows (null bytes, unknown codec, odd pcm16 length,
+non-positive sr_hz, a rate below the K-weighting floor) carry
+``decode_error`` (skip-and-count, reference
 KafkaClientAlgebra.scala:380-395), never exceptions.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
 from hydra_spark import audio
+from hydra_spark.functions.decode import _decoded, _starts, arrow_stage
 
 OUT_FIELDS = [
     T.StructField("n_samples", T.IntegerType(), True),
@@ -40,48 +43,34 @@ OUT_FIELDS = [
 ]
 
 
+def _loudness(b):
+    low = b.sr < audio.LUFS_MIN_SR
+    for sr in set(b.sr[low & b.ok].tolist()):
+        b.fail(low & (b.sr == sr), audio.LUFS_FLOOR_ERROR.format(sr))
+    lufs = np.full(b.n, np.nan)
+    blocks = np.zeros((b.n, 2), dtype=np.int64)
+    for rows, sl, x in _decoded(b, b.ok):
+        bnd = _starts(sl)
+        for j, r in enumerate(rows):
+            seg = x[bnd[j] : bnd[j] + sl[j]]
+            l, blocks[r, 0], blocks[r, 1] = audio.lufs_integrated(seg, int(b.sr[r]))
+            if l is not None:
+                lufs[r] = l
+    yield None, [
+        b.masked(b.n_samp),
+        pa.array(lufs, type=pa.float64(), from_pandas=True),
+        b.masked(blocks[:, 0]),
+        b.masked(blocks[:, 1]),
+        b.errors(),
+    ]
+
+
 def loudness_clips(df: DataFrame) -> DataFrame:
     """bytes+codec+sr_hz -> (n_samples, lufs, n_blocks, n_gated).
 
-    lufs is NULL for error rows, non-positive sr_hz, clips shorter than
-    one 400 ms gating block, and all-gated (silent) clips; n_blocks /
-    n_gated are 0-valued rather than NULL for the short/silent cases so
-    the two NULL reasons stay distinguishable.
+    lufs is NULL for error rows, clips shorter than one 400 ms gating
+    block, and all-gated (silent) clips; n_blocks / n_gated are
+    0-valued rather than NULL for the short/silent cases so the two
+    NULL reasons stay distinguishable.
     """
-    keep = [f for f in df.schema.fields if f.name != "bytes"]
-    out_schema = T.StructType(keep + OUT_FIELDS)
-    keep_names = [f.name for f in keep]
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_samples, lufs, n_blocks, n_gated, errs = [], [], [], [], []
-            for buf, codec, sr in zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"]):
-                try:
-                    sr_i = 0 if pd.isna(sr) else int(sr)
-                    if sr_i <= 0:
-                        raise ValueError("non-positive sr_hz")
-                    x = audio.decode(None if buf is None else bytes(buf), str(codec))
-                    # inside the try: sub-LUFS_MIN_SR rates raise and
-                    # must become error rows, not task failures
-                    l, nb, ng = audio.lufs_integrated(x, sr_i)
-                except Exception as e:
-                    n_samples.append(None)
-                    lufs.append(None)
-                    n_blocks.append(None)
-                    n_gated.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-                    continue
-                n_samples.append(len(x))
-                lufs.append(l)
-                n_blocks.append(nb)
-                n_gated.append(ng)
-                errs.append(None)
-            out = pdf[keep_names].copy()
-            out["n_samples"] = pd.array(n_samples, dtype="Int32")
-            out["lufs"] = pd.array(lufs, dtype="float64")
-            out["n_blocks"] = pd.array(n_blocks, dtype="Int32")
-            out["n_gated"] = pd.array(n_gated, dtype="Int32")
-            out["decode_error"] = pd.array(errs, dtype="string")
-            yield out
-
-    return df.mapInPandas(fn, schema=out_schema)
+    return arrow_stage(df, OUT_FIELDS, _loudness, sr="check")

@@ -6,9 +6,8 @@ lossless downstream math) before writing the curated table. One
 ``mapInArrow`` pass sharing the decode stage's zero-copy gather/LUT
 machinery; decode AND encode are the single shared ``hydra_spark.audio``
 definitions (same elementwise IEEE ops vectorized over the batch), so
-the engine output equals the per-row oracle
-``audio.encode(audio.decode(buf, codec), to_codec)`` byte-for-byte
-(tests/test_transcode.py). Same-codec rows pass through unchanged
+the engine output equals the per-row oracle ``audio.transcode_clip``
+(decode, then encode) byte-for-byte (tests/test_transcode.py). Same-codec rows pass through unchanged
 (re-compressing an already-companded clip would add quantization error
 for zero benefit).
 

@@ -62,10 +62,10 @@ def ingest_verdict(
     parsed = F.from_json(
         payload, f"{value_schema}, {corrupt} STRING", {"columnNameOfCorruptRecord": corrupt}
     )
-    # from_json yields a whole-NULL struct (NOT a corrupt record) for
-    # whitespace-only and literal-"null" payloads; both must be 400 to
-    # stay in lockstep with the synchronous HTTP handler's raw_decode
-    # verdict (http_flow._sync_verdict)
+    # from_json yields a whole-NULL struct (NOT a corrupt record) for a
+    # literal-"null" payload (and a blank one, caught before); it must be
+    # 400 to stay in lockstep with the synchronous HTTP handler's
+    # raw_decode verdict (http_flow._sync_verdict)
     malformed = parsed.getField(corrupt).isNotNull() | parsed.isNull()
     key = F.get_json_object(payload, key_path) if key_path else F.lit(None).cast("string")
 
@@ -74,12 +74,16 @@ def ingest_verdict(
     # not slip under the limit
     n_bytes = F.octet_length(payload)
     too_large = (n_bytes > max_bytes) if max_bytes is not None else F.lit(False)
+    # blank = nothing but whitespace of any kind ((?U): Unicode \s, as
+    # Python's str.strip in the HTTP handler); F.trim strips spaces only
+    blank = payload.rlike(r"(?U)\A\s*\z")
     error = (
-        F.when(payload.isNull() | (F.trim(payload) == ""), F.lit("MissingPayload"))
+        F.when(payload.isNull(), F.lit("MissingPayload"))
         .when(
             too_large,
             F.concat(F.lit("RecordTooLarge:"), n_bytes.cast("string"), F.lit(f">{max_bytes}")),
         )
+        .when(blank, F.lit("MissingPayload"))
         .when(malformed, F.lit("JsonConversionError:malformed payload"))
         .when(
             F.lit(key_path is not None) & key.isNull(),

@@ -16,8 +16,9 @@ table. Scale posture per operator:
                    bucketing → bucket join on (band, band_hash) →
                    exact-Jaccard verification of candidates only.
                    O(docs × bands) shuffle rows instead of O(pairs).
-  * simhash      — 64-bit SimHash + chunk-pigeonhole candidate
-                   generation, hamming-distance verification.
+  * simhash      — 64-bit SimHash over md5 token-hash halves +
+                   chunk-pigeonhole candidate generation (recall 1),
+                   hamming-distance verification.
 
 Shingling/hashing uses Spark's JVM-side xxhash64 so the expensive
 text → token-hash step never leaves whole-stage codegen; only the
@@ -32,19 +33,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
+from hydra_spark.ops import spread
+
 _MERSENNE = (1 << 61) - 1
-
-
-def _spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Decouple compute parallelism from the upstream file layout.
-
-    Shingling/hashing explodes orders of magnitude more work than input
-    bytes, so a narrow scan (e.g. a single-file table = one split) must
-    not be inherited into the expansion stage — an MB-scale shuffle up
-    to the session's parallelism first is the right shape at any scale.
-    """
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism, *(cols or ("doc_id",)))
 
 
 # ---------------------------------------------------------------- shingles
@@ -150,7 +141,7 @@ def chunk_dedup(
             lambda i: F.concat_ws(" ", F.slice(words, i * width + 1, width)),
         )
     )
-    base = _spread(df, id_col).select(
+    base = spread(df, id_col).select(
         F.col(id_col), F.posexplode(chunks).alias("pos", "chunk")
     )
     hashed = base.withColumn("_digest", F.md5("chunk"))
@@ -205,7 +196,7 @@ def benchmark_contamination(
     data, so that side broadcast-joins in practice and the training
     side never shuffles more than (doc_id, gram) pairs; counts are one
     hash aggregation. No all-pairs term anywhere."""
-    g_docs = word_ngrams(_spread(docs, id_col), n, text_col, id_col)
+    g_docs = word_ngrams(spread(docs, id_col), n, text_col, id_col)
     g_bench = word_ngrams(bench, n, text_col, id_col).select("gram").distinct()
     shared = g_docs.join(g_bench, "gram").groupBy(id_col).agg(
         F.count("*").alias("n_shared_grams")
@@ -254,7 +245,7 @@ def edit_distance_pairs(
     """
     t, k = max_dist, max_dist + 1
     L = F.length(F.col(text_col))
-    base_src = _spread(df, id_col).select(
+    base_src = spread(df, id_col).select(
         F.col(id_col), F.col(text_col), L.alias("_l")
     ).where(F.col("_l") >= k)
 
@@ -560,7 +551,7 @@ def ngram_jaccard_pairs(
     a no-op there and the output stays equal to the exact oracle).
     Output: (d1, d2, jaccard rounded 4).
     """
-    g = word_ngrams(_spread(df, id_col), n, text_col, id_col)
+    g = word_ngrams(spread(df, id_col), n, text_col, id_col)
     counts = g.groupBy(id_col).agg(F.count("*").alias("n_grams"))
     cand_g = g
     if max_df is not None:
@@ -639,7 +630,7 @@ def minhash_signatures(
     shuffle of the exploded grams. ``keep_gram_hashes`` also returns the
     per-doc distinct gram-hash set (the LSH verifier computes exact
     Jaccard from these sets directly — no re-shingling)."""
-    g = word_ngrams(_spread(df, id_col), n, text_col, id_col, distinct=False).select(
+    g = word_ngrams(spread(df, id_col), n, text_col, id_col, distinct=False).select(
         F.col(id_col), F.xxhash64("gram").alias("gh")
     )
     per_doc = g.groupBy(id_col).agg(F.collect_set("gh").alias("gram_hashes"))
@@ -761,35 +752,6 @@ def _sim_slices(lens: np.ndarray, nonempty: np.ndarray, bytes_per_tok: int):
         pos = end
 
 
-def _simhash_udf(seed: int = 0):
-    weights = (np.uint64(1) << np.arange(64, dtype=np.uint64)).astype(np.uint64)
-
-    @F.pandas_udf(T.LongType())
-    def simhash(token_hashes: pd.Series) -> pd.Series:
-        out = np.zeros(len(token_hashes), dtype=np.int64)
-        lens = np.array([0 if hs is None else len(hs) for hs in token_hashes], dtype=np.int64)
-        nonempty = np.nonzero(lens > 0)[0]
-        for rows in _sim_slices(lens, nonempty, bytes_per_tok=4 * 64):
-            h = np.concatenate(
-                [np.asarray(token_hashes.iloc[i], dtype=np.int64) for i in rows]
-            ).astype(np.uint64)
-            v = _sim_bit_votes(h, lens[rows], 64)
-            sigs = ((v > 0).astype(np.uint64) * weights[None, :]).sum(axis=1)
-            out[rows] = sigs.astype(np.int64)
-        return pd.Series(out)
-
-    return simhash
-
-
-def simhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    toks = _spread(df, id_col).select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).select(id_col, F.xxhash64("tok").alias("th"))
-    per_doc = toks.groupBy(id_col).agg(F.collect_list("th").alias("token_hashes"))
-    sh = _simhash_udf()
-    return per_doc.select(F.col(id_col), sh(F.col("token_hashes")).alias("simhash"))
-
-
 def _simhash_halves_udf():
     weights = (np.int64(1) << np.arange(32, dtype=np.int64)).astype(np.int64)
 
@@ -839,10 +801,8 @@ def simhash_pairs_md5(
     so at least one chunk is untouched — the chunk-bucket equi-join has
     RECALL 1 by pigeonhole, making the output exactly equal to the
     all-pairs hamming filter (which is what the DuckDB oracle computes).
-    The xxhash64 variant (simhash_pairs) remains the fast path; this one
-    is the oracle-verifiable form.
     """
-    toks = _spread(df, id_col).select(
+    toks = spread(df, id_col).select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
     )
     h = F.md5("tok")
@@ -892,41 +852,6 @@ def simhash_pairs_md5(
     ham = F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))) + F.bit_count(
         F.col("l1").bitwiseXOR(F.col("l2"))
     )
-    return cand.withColumn("hamming", ham).where(F.col("hamming") <= max_hamming).select(
-        "d1", "d2", "hamming"
-    )
-
-
-def simhash_pairs(
-    df: DataFrame, max_hamming: int = 8, chunks: int = 4,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """Candidate pairs sharing >=1 of `chunks` 16-bit simhash chunks,
-    verified hamming(sig1, sig2) <= max_hamming."""
-    sigs = simhash_signatures(df, text_col, id_col)
-    width = 64 // chunks
-    chunk_structs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("chunk"),
-                    F.shiftrightunsigned(F.col("simhash"), c * width)
-                    .bitwiseAND(F.lit((1 << width) - 1))
-                    .alias("cv"),
-                )
-                for c in range(chunks)
-            ]
-        )
-    ).alias("cc")
-    buckets = sigs.select(F.col(id_col), F.col("simhash"), chunk_structs).select(
-        id_col, "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.cv").alias("cv")
-    )
-    a = buckets.select(F.col(id_col).alias("d1"), F.col("simhash").alias("s1"), "chunk", "cv")
-    b = buckets.select(F.col(id_col).alias("d2"), F.col("simhash").alias("s2"), "chunk", "cv")
-    cand = (
-        a.join(b, ["chunk", "cv"]).where(F.col("d1") < F.col("d2")).select("d1", "d2", "s1", "s2").distinct()
-    )
-    ham = F.bit_count(F.col("s1").bitwiseXOR(F.col("s2")))
     return cand.withColumn("hamming", ham).where(F.col("hamming") <= max_hamming).select(
         "d1", "d2", "hamming"
     )

@@ -24,13 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Decouple score/compute parallelism from the upstream file layout
-    (a single-file corpus = one scan split; the per-vector dot-product
-    work is orders of magnitude larger than the bytes scanned)."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism, id_col)
+from hydra_spark.ops import spread
 
 
 def _norm_col(vec: str):
@@ -56,7 +50,7 @@ def cosine_topk(
 
     Output: (query_id, neighbor_id, cosine, rank).
     """
-    base = _spread(emb, id_col).select(F.col(id_col), F.col(vec_col), _norm_col(vec_col).alias("_n"))
+    base = spread(emb, id_col).select(F.col(id_col), F.col(vec_col), _norm_col(vec_col).alias("_n"))
     q = base.where(F.col(id_col).isin(query_ids)).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"), F.col("_n").alias("_qn")
     )
@@ -76,7 +70,7 @@ def cosine_pairs(
     emb: DataFrame, threshold: float = 0.4, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """All (v1 < v2) pairs with cosine >= threshold (near-dup audit)."""
-    base = _spread(emb, id_col).select(F.col(id_col), F.col(vec_col), _norm_col(vec_col).alias("_n"))
+    base = spread(emb, id_col).select(F.col(id_col), F.col(vec_col), _norm_col(vec_col).alias("_n"))
     a = base.select(F.col(id_col).alias("v1"), F.col(vec_col).alias("_av"), F.col("_n").alias("_an"))
     b = base.select(F.col(id_col).alias("v2"), F.col(vec_col).alias("_bv"), F.col("_n").alias("_bn"))
     j = a.crossJoin(b).where(F.col("v1") < F.col("v2"))
@@ -183,7 +177,7 @@ def ivf_train(
 
     Returns the codebook; pass it to ivf_topk(centroids=...).
     """
-    base = _spread(emb, id_col).select(F.col(vec_col).alias("_v"))
+    base = spread(emb, id_col).select(F.col(vec_col).alias("_v"))
     if sample_fraction is not None:
         base = base.sample(fraction=sample_fraction, seed=seed)
     base = base.persist()
@@ -258,7 +252,7 @@ def ivf_topk(
     corpus_assign = _assign_udf(centroids, 1)
     query_assign = _assign_udf(centroids, n_probe)
 
-    base = _spread(emb, id_col).select(F.col(id_col), F.col(vec_col), _norm_col(vec_col).alias("_n"))
+    base = spread(emb, id_col).select(F.col(id_col), F.col(vec_col), _norm_col(vec_col).alias("_n"))
     c = base.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
@@ -337,7 +331,7 @@ def ivf_index_write(
     if centroids is None:
         centroids = _ivf_centroids(dim, n_lists, seed)
     assign = _assign_udf(centroids, 1)
-    rows = _spread(emb, id_col).select(
+    rows = spread(emb, id_col).select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
         _norm_col(vec_col).alias("_cn"),
@@ -613,7 +607,7 @@ def _corpus_buckets(
     PARTITIONED BY (band, bv) at scale."""
     sigbv = _band_bucket_udf(dim, n_bits, bands, seed)
     return (
-        _spread(emb, id_col)
+        spread(emb, id_col)
         .select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("_cv"),

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from hydra_spark.ops import spread
+
 # tiny deterministic stopword banks per language (n-gram-heuristic
 # stand-in; a real lang-id model would be a broadcast lookup table)
 LANG_STOPWORDS = {
@@ -24,13 +26,6 @@ def _count_words(col, words: list[str]):
     counts — the form the SQL oracle uses)."""
     alt = "|".join(words)
     return F.size(F.regexp_extract_all(col, F.lit(rf"\b({alt})\b"), 0)).cast("long")
-
-
-def _spread(df: DataFrame, id_col: str) -> DataFrame:
-    """Regex scoring is compute-dense relative to bytes scanned — never
-    inherit a narrow scan layout (single-file table = one split)."""
-    sc = df.sparkSession.sparkContext
-    return df.repartition(sc.defaultParallelism, id_col)
 
 
 def _lang_exprs(text_col: str) -> dict:
@@ -53,7 +48,7 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     """Stopword-vote language guess: argmax over per-language hit counts,
     'und' (undetermined) when all zero. Ties break by language order
     en > de > fr (deterministic)."""
-    df = _spread(df, id_col)
+    df = spread(df, id_col)
     e = _lang_exprs(text_col)
     return df.select(
         F.col(id_col), e["lang_guess"].alias("lang_guess"), e["en_hits"].alias("en_hits")
@@ -84,7 +79,7 @@ def _quality_exprs(text_col: str) -> dict:
 
 def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + score."""
-    df = _spread(df, id_col)
+    df = spread(df, id_col)
     e = _quality_exprs(text_col)
     return df.select(
         F.col(id_col),
@@ -164,7 +159,7 @@ def winnow_fingerprints(
         f"j -> array_min(transform(sequence(j, j + {window} - 1),"
         f"i -> md5(substr({text_col}, i, {k})))))))"
     )
-    return _spread(df, id_col).select(
+    return spread(df, id_col).select(
         F.col(id_col), F.explode(F.expr(expr)).alias("fp")
     )
 
@@ -207,7 +202,7 @@ def pii_redact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     r1 = F.regexp_replace(c, PII_EMAIL_RE, "<EMAIL>")
     r2 = F.regexp_replace(r1, PII_PHONE_RE, "<PHONE>")
     r3 = F.regexp_replace(r2, PII_IP_RE, "<IP>")
-    return _spread(df, id_col).select(
+    return spread(df, id_col).select(
         "*",
         F.size(F.regexp_extract_all(c, F.lit(PII_EMAIL_RE), 0)).cast("long").alias("n_emails"),
         F.size(F.regexp_extract_all(r1, F.lit(PII_PHONE_RE), 0)).cast("long").alias("n_phones"),
@@ -231,7 +226,7 @@ def repetition_stats(
     inside whole-stage codegen, no shuffle, no UDF, O(len) per doc. At
     100 TB this runs at scan speed and its output feeds the quality
     gate exactly like ``quality_score``."""
-    df = _spread(df, id_col)
+    df = spread(df, id_col)
     e = _repetition_exprs(text_col)
     return df.select(
         F.col(id_col),
@@ -306,7 +301,7 @@ def corpus_gate(
     not-contaminated."""
     from hydra_spark.ops.dedup import benchmark_contamination
 
-    local = _spread(docs, id_col).select(
+    local = spread(docs, id_col).select(
         F.col(id_col),
         _lang_exprs(text_col)["lang_guess"].alias("lang_guess"),
         _quality_exprs(text_col)["quality"].alias("quality"),

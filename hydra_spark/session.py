@@ -118,7 +118,6 @@ def _set_allocator_env() -> None:
 def get_spark(
     cores: int | None = None,
     app_name: str = "hydra_spark",
-    shuffle_partitions: int | None = None,
     driver_memory: str = "48g",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -143,13 +142,12 @@ def get_spark(
             cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
         b = b.master(f"local[{cores}]").config(
             map={
-                "spark.sql.shuffle.partitions": str(shuffle_partitions or cores),
+                "spark.sql.shuffle.partitions": str(cores),
                 "spark.driver.memory": driver_memory,
             }
         )
     spark = b.config(map={**ENGINE_CONF, **(extra_conf or {})}).getOrCreate()
     if submitted and not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
-        parallelism = shuffle_partitions or spark.sparkContext.defaultParallelism
-        spark.conf.set("spark.sql.shuffle.partitions", str(parallelism))
+        spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -124,7 +124,7 @@ def validate_subject(name: str) -> str:
     (Subject.createValidated, TopicMetadataV2Transport.scala:121-127).
     Returns the name; raises InvalidSubjectError with the reference's
     error text otherwise. Filesystem paths are NOT subjects — callers
-    that expose user-facing topic names (bootstrap_transactional's
+    that expose user-facing topic names (bootstrap's
     ``subject=``) opt in."""
     if not _re.fullmatch(SUBJECT_RE, name or ""):
         raise InvalidSubjectError(f"{name!r}: {SUBJECT_INVALID_MSG}")
@@ -1507,43 +1507,36 @@ class AppendTable:
         return True
 
 
-def bootstrap(root: str, output_keys: list[str], n_buckets: int = 32) -> dict:
-    """Create the engine's table set (Hydra Bootstrap.scala:25-80 analog):
-    output (keyed), _metrics, _lineage, _quarantine."""
-    return {
-        "output": TransactionalTable(os.path.join(root, "output"), output_keys, n_buckets),
-        "metrics": AppendTable(os.path.join(root, "_metrics")),
-        "lineage": AppendTable(os.path.join(root, "_lineage")),
-        "quarantine": AppendTable(os.path.join(root, "_quarantine")),
-    }
+# The engine's table set (Hydra Bootstrap.scala:25-80 analog): handle
+# name -> directory under the root. "output" is the keyed table.
+TABLES = {
+    "output": "output",
+    "metrics": "_metrics",
+    "lineage": "_lineage",
+    "quarantine": "_quarantine",
+}
 
 
-def bootstrap_transactional(
+def bootstrap(
     root: str, output_keys: list[str], n_buckets: int = 32, retries: int = 2,
     subject: str | None = None,
 ) -> dict:
-    """Transactional bootstrap — Hydra's CreateTopicProgram semantics
-    (ingestors/kafka/src/main/scala/hydra/kafka/programs/
-    CreateTopicProgram.scala:39-107): each resource creation is retried,
-    and on terminal failure every resource created so far is deleted —
-    a half-created table set is never left behind.
+    """Create (or open) the engine's table set ``TABLES`` with Hydra's
+    CreateTopicProgram semantics (ingestors/kafka/src/main/scala/hydra/
+    kafka/programs/CreateTopicProgram.scala:39-107): each resource
+    creation is retried, and on terminal failure every resource created
+    so far is deleted — a half-created table set is never left behind.
 
     ``subject``: optional user-facing topic name, validated against the
     Subject grammar BEFORE any resource is created (the reference
     refuses the request at the transport layer — nothing to roll back)."""
     if subject is not None:
         validate_subject(subject)
-    specs = [
-        ("output", os.path.join(root, "output"),
-         lambda p: TransactionalTable(p, output_keys, n_buckets)),
-        ("metrics", os.path.join(root, "_metrics"), AppendTable),
-        ("lineage", os.path.join(root, "_lineage"), AppendTable),
-        ("quarantine", os.path.join(root, "_quarantine"), AppendTable),
-    ]
     created: list[str] = []
     out: dict = {}
     try:
-        for name, path, ctor in specs:
+        for name, table_dir in TABLES.items():
+            path = os.path.join(root, table_dir)
             if not os.path.exists(path):
                 # recorded BEFORE the ctor runs: a ctor that fails midway
                 # (dirs made, manifest write failed) must still roll back
@@ -1551,7 +1544,10 @@ def bootstrap_transactional(
             last: Exception | None = None
             for _attempt in range(retries + 1):
                 try:
-                    out[name] = ctor(path)
+                    if name == "output":
+                        out[name] = TransactionalTable(path, output_keys, n_buckets)
+                    else:
+                        out[name] = AppendTable(path)
                     last = None
                     break
                 except Exception as e:  # retryingOnAllErrors analog
@@ -1560,7 +1556,7 @@ def bootstrap_transactional(
                 raise last
         return out
     except Exception:
-        for p in created:  # rollback: delete-on-failure, newest first
+        for p in reversed(created):  # rollback: delete-on-failure, newest first
             shutil.rmtree(p, ignore_errors=True)
         raise
 
@@ -1575,7 +1571,7 @@ def drop_with_report(root: str, names: list[str] | None = None) -> list[dict]:
     TopicDeletionProgram collects per-topic errors into a failure list,
     ingest/src/main/scala/hydra.ingest/programs/TopicDeletionProgram.scala).
     """
-    names = names or ["output", "_metrics", "_lineage", "_quarantine"]
+    names = names or list(TABLES.values())
     report = []
     for name in names:
         path = os.path.join(root, name)

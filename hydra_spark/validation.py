@@ -228,11 +228,3 @@ def key_value_mismatch_report(
         df.select(*id_cols, F.explode(arr).alias("_m"))
         .select(*id_cols, "_m.field", "_m.key_value", "_m.value_value")
     )
-
-
-def split_admitted(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(admitted, quarantine) on reject_reason."""
-    return (
-        df.where(F.col("reject_reason").isNull()).drop("reject_reason"),
-        df.where(F.col("reject_reason").isNotNull()),
-    )

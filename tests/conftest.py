@@ -30,7 +30,7 @@ STREAM_SEED = 1
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=8, shuffle_partitions=8, app_name="hydra_tests", driver_memory="16g")
+    s = get_spark(cores=8, app_name="hydra_tests", driver_memory="16g")
     yield s
 
 

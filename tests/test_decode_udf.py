@@ -4,19 +4,26 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from hydra_spark import audio
-from hydra_spark.functions.decode import decode_features, decode_pcm, split_quarantine
+from hydra_spark.functions.decode import Clips, _decoded, _starts, decode_features
 
 
 def test_decode_pcm_snr_vs_oracle(spark, clips):
-    sample = clips.limit(200)
-    pdf = decode_pcm(sample).toPandas()
-    assert len(pdf) == 200
-    for _, r in pdf.iterrows():
-        assert r.decode_error is None
-        i = int(r.clip_id.split("-")[1])
-        ref = audio.waveform(i, int(r.sr_hz), int(r.dur_ms))
-        snr = audio.snr_db(ref, np.asarray(r.pcm))
-        assert snr >= 30.0, f"{r.clip_id} ({r.codec}): SNR {snr:.1f}"
+    """The samples the engine's codec decoder (``_decoded``) yields for
+    each clip, against the clip's pre-encode reference waveform."""
+    rb = clips.limit(200).toArrow().combine_chunks().to_batches()[0]
+    b = Clips(rb)
+    assert b.n == 200 and b.ok.all()
+    meta = rb.select(["clip_id", "codec", "sr_hz", "dur_ms"]).to_pylist()
+    seen = 0
+    for rows, sl, x in _decoded(b, b.ok):
+        for r, s, n in zip(rows.tolist(), _starts(sl).tolist(), sl.tolist()):
+            m = meta[r]
+            i = int(m["clip_id"].split("-")[1])
+            ref = audio.waveform(i, m["sr_hz"], m["dur_ms"])
+            snr = audio.snr_db(ref, x[s : s + n])
+            assert snr >= 30.0, f"{m['clip_id']} ({m['codec']}): SNR {snr:.1f}"
+            seen += 1
+    assert seen == 200
 
 
 def test_decode_features_sample_counts(spark, clips):
@@ -37,7 +44,8 @@ def test_bad_records_quarantined_not_fatal(spark, tmp_path):
     synth.write_clips(spark, path, 500, truncate_pct=0.02, files=4)
     df = spark.read.parquet(path)
     decoded = decode_features(df)
-    good, quar = split_quarantine(decoded)
+    good = decoded.where(F.col("decode_error").isNull())
+    quar = decoded.where(F.col("decode_error").isNotNull())
     n_bad = quar.count()
     # i % 1000 < 20 -> 20 corrupt rows in 500 (i in 0..499 -> i%1000=i -> i<20)
     assert n_bad == 20

@@ -73,6 +73,9 @@ def test_handler_engine_parity(spark, server):
         '{"k": "c", "v": 2}  #garbage',
         "",        # empty body: MissingPayload on both sides
         "   \t ",  # whitespace-only: from_json NULL-struct, raw_decode error
+        "\t",     # whitespace of any kind is MissingPayload, not malformed
+        "\n",
+        " " * 70,  # all-space over the 64-byte limit: size first, 413
         "null",    # literal null: whole-NULL parse must be 400, not 200
     ]
     for i, b in enumerate(bodies):

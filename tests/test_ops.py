@@ -30,9 +30,9 @@ def test_minhash_lsh_recall_vs_exact(spark, docs):
 
 
 def test_simhash_near_dups_have_low_hamming(spark, docs):
-    from hydra_spark.ops.dedup import simhash_pairs, ngram_jaccard_pairs
+    from hydra_spark.ops.dedup import simhash_pairs_md5, ngram_jaccard_pairs
 
-    sim = simhash_pairs(docs, max_hamming=8)
+    sim = simhash_pairs_md5(docs, max_hamming=8)
     pairs = sim.collect()
     assert all(r.hamming <= 8 for r in pairs)
     # the strong near-dups (jaccard >= 0.8) should be found by simhash

@@ -108,7 +108,7 @@ def test_ingest_frames_match_ingest_requests(spark, key_path):
     want = {r.correlation_id: (r.status_code, r.error) for r in requests}
     assert got == want
     assert [want[i][0] for i in range(len(payloads))] == [400, 400, 400, 400, 400, 200, 413]
-    assert want[1] == (400, "MissingPayload")
+    assert want[1] == want[2] == (400, "MissingPayload")
 
 
 def test_live_socket_source(spark, tmp_path):

@@ -99,7 +99,7 @@ def test_bootstrap_rollback_on_failure(tmp_path, monkeypatch):
 
     monkeypatch.setattr(tbl.AppendTable, "__init__", flaky)
     with pytest.raises(OSError):
-        tbl.bootstrap_transactional(root, ["k"], retries=2)
+        tbl.bootstrap(root, ["k"], retries=2)
     # every creation was retried (3 attempts for the first AppendTable)
     assert calls["n"] == 3
     # rollback: the already-created output table was deleted — nothing
@@ -108,7 +108,7 @@ def test_bootstrap_rollback_on_failure(tmp_path, monkeypatch):
     assert not os.path.exists(os.path.join(root, "_metrics"))
 
     monkeypatch.setattr(tbl.AppendTable, "__init__", orig)
-    out = tbl.bootstrap_transactional(root, ["k"])
+    out = tbl.bootstrap(root, ["k"])
     assert set(out) == {"output", "metrics", "lineage", "quarantine"}
     assert os.path.exists(os.path.join(root, "output", "CURRENT"))
 
@@ -124,7 +124,7 @@ def test_bootstrap_rollback_keeps_preexisting(tmp_path, monkeypatch):
 
     monkeypatch.setattr(tbl.AppendTable, "__init__", boom)
     with pytest.raises(OSError):
-        tbl.bootstrap_transactional(root, ["k"], retries=0)
+        tbl.bootstrap(root, ["k"], retries=0)
     assert os.path.exists(os.path.join(root, "output", "CURRENT"))
 
 
@@ -487,13 +487,13 @@ def test_subject_validation_grammar(tmp_path):
         with pytest.raises(InvalidSubjectError, match="Invalid Topic Name"):
             validate_subject(bad)
     # bootstrap refuses BEFORE creating anything — nothing to roll back
-    from hydra_spark.tables import bootstrap_transactional
+    from hydra_spark.tables import bootstrap
 
     root = str(tmp_path / "badsubj")
     with pytest.raises(InvalidSubjectError):
-        bootstrap_transactional(root, ["k"], subject="acme.clips")
+        bootstrap(root, ["k"], subject="acme.clips")
     assert not os.path.exists(root)
-    ts = bootstrap_transactional(root, ["k"], subject="tech.clips-raw")
+    ts = bootstrap(root, ["k"], subject="tech.clips-raw")
     assert set(ts) == {"output", "metrics", "lineage", "quarantine"}
 
 

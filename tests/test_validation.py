@@ -33,7 +33,7 @@ def test_bad_timestamp_quarantined(spark, clips):
         ),
     )
     checked = validation.admission_checks(bad)
-    admitted, quar = validation.split_admitted(checked)
+    quar = checked.where(F.col("reject_reason").isNotNull())
     assert quar.count() == bad.where("event_time <= timestamp_seconds(0)").count() > 0
     reasons = [r[0] for r in quar.select("reject_reason").distinct().collect()]
     assert reasons == ["InvalidLogicalType:timestamp-millis<=0"]
@@ -41,7 +41,8 @@ def test_bad_timestamp_quarantined(spark, clips):
 
 def test_oversize_quarantined(spark, clips):
     checked = validation.admission_checks(clips, max_bytes=20000)
-    admitted, quar = validation.split_admitted(checked)
+    admitted = checked.where(F.col("reject_reason").isNull())
+    quar = checked.where(F.col("reject_reason").isNotNull())
     n_over = clips.where(F.length("bytes") > 20000).count()
     assert quar.count() == n_over > 0
     assert admitted.count() + quar.count() == clips.count()

@@ -69,7 +69,7 @@ def main():
     from hydra_spark.ops import similarity as S
 
     sizes = [int(a) for a in sys.argv[1:]] or [2_000, 50_000, 500_000]
-    spark = get_spark(cores=8, shuffle_partitions=8)
+    spark = get_spark(cores=8)
     qids = list(range(25))
     for n in sizes:
         emb = synth_embeddings(spark, n)
