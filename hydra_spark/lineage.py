@@ -8,7 +8,8 @@ Reference semantics:
     lag %% — KafkaAdminAlgebra.scala:90,207-218 and
     ConsumerGroupsAlgebra.getLagOnDvsInternalCGTopic (:155-184)
   * group/topic inversions (consumers-for-topic etc.) —
-    ConsumerGroupsAlgebra.scala:285-303
+    ConsumerGroupsAlgebra.scala:285-303; a plain groupBy, written inline
+    by the ``groups_inversion`` row of plans/analytics.py
   * offset-checkpoint write: per batch, (partition, start, end, rows)
     rows appended atomically with the data commit —
     ConsumerGroupsOffsetConsumer.processRecord (:103-145)
@@ -48,10 +49,3 @@ def total_lag(lag_df: DataFrame) -> DataFrame:
         (F.sum("lag") / F.sum(F.col("latest_offset") + 1) * 100.0).alias("lag_pct"),
     )
 
-
-def groups_inversion(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
-    """items-per-group (A4: consumers-for-topic / topics-for-consumer)."""
-    return df.groupBy(group_col).agg(
-        F.array_sort(F.collect_set(item_col)).alias("items"),
-        F.countDistinct(item_col).alias("n_items"),
-    )

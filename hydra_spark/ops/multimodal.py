@@ -1,5 +1,5 @@
 """Multimodal columns — opaque binary payloads + typed metadata, with a
-REAL pure-numpy pixel path.
+pure-numpy pixel path.
 
 Image/video payloads are opaque `binary` columns; decode / feature-extract
 / resize / frame-sample run as Arrow-batched ``mapInPandas`` stages. The
@@ -14,12 +14,10 @@ environment can decode for real:
   w*h*3 RGB frames. The fixed-width header lets frame-sampling parse it
   JVM-side (substring+decode+split — no Python in that plan).
 
-With ``fake=True`` the legacy deterministic sha256 stub runs instead for
-arbitrary payloads (documented fallback for containers this sandbox has
-no codec for — JPEG/MP4 would slot in exactly where decode_ppm is
-called). Unknown containers under the real path become a
-``decode_error`` row, not an exception — at 10^12 rows a bad record is
-quarantined, never a job kill (same convention as functions/decode.py).
+A container with no codec here (JPEG/MP4) would slot in exactly where
+decode_ppm is called. Unknown containers become a ``decode_error`` row,
+not an exception — at 10^12 rows a bad record is quarantined, never a
+job kill (same convention as functions/decode.py).
 
 Reference parity: the reference pipelines treat payloads as opaque
 Avro ``bytes`` + metadata through ingest/transform/transport
@@ -29,7 +27,6 @@ the decode-to-features stage is the driver brief's 2.8b mandate.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -55,9 +52,9 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
         T.StructField("features", T.ArrayType(T.FloatType()), True),
-        # exact int64 per-channel pixel sums (real path only) — the
-        # SQL-oracle-checkable projection of the decode: float features
-        # lose bits to float32, channel sums of uint8 pixels don't
+        # exact int64 per-channel pixel sums — the SQL-oracle-checkable
+        # projection of the decode: float features lose bits to
+        # float32, channel sums of uint8 pixels don't
         T.StructField("r_sum", T.LongType(), True),
         T.StructField("g_sum", T.LongType(), True),
         T.StructField("b_sum", T.LongType(), True),
@@ -130,16 +127,6 @@ def decode_video(payload: bytes) -> np.ndarray:
     return body.reshape(nf, h, w, 3)
 
 
-def _fake_decode(payload: bytes, mime: str):
-    """Deterministic sha256 stand-in for containers with no in-sandbox
-    codec (legacy stub path, kept for fake=True)."""
-    h = hashlib.sha256(payload).digest()
-    width = 64 + h[0] % 192
-    height = 64 + h[1] % 192
-    feats = (np.frombuffer(h[: _FEAT_DIM * 2], dtype=np.uint16).astype(np.float32) / 65535.0)
-    return width, height, feats
-
-
 def _pixel_features(arr: np.ndarray) -> np.ndarray:
     """Real 16-dim feature vector from (h, w, 3) uint8 — all float64
     math on exact-integer pixel values, cast to float32 at the end:
@@ -164,13 +151,12 @@ def _pixel_features(arr: np.ndarray) -> np.ndarray:
 
 # ------------------------------------------------------- feature stage
 
-def extract_features(df: DataFrame, fake: bool = False) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """payload binary -> (dims, feature vector) over Arrow batches.
 
-    Default is the REAL path: PPM payloads are decoded with numpy and
-    produce true dims + pixel statistics; unknown containers become
-    decode_error rows (quarantine, not job kill). ``fake=True`` keeps
-    the deterministic sha256 stub for arbitrary payloads."""
+    PPM payloads are decoded with numpy and produce true dims + pixel
+    statistics; unknown containers become decode_error rows
+    (quarantine, not job kill)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -180,8 +166,8 @@ def extract_features(df: DataFrame, fake: bool = False) -> DataFrame:
             width, height = [None] * n, [None] * n
             feats, errs = [None] * n, [None] * n
             sums = [[None] * n, [None] * n, [None] * n]
-            # one column-wise pass; the per-payload codec call (numpy
-            # PPM decode, or the sha256 stub) is the only per-row work
+            # one column-wise pass; the per-payload numpy PPM decode is
+            # the only per-row work
             for i, p in enumerate(pdf["payload"]):
                 if p is None:
                     errs[i] = "null payload"
@@ -189,14 +175,11 @@ def extract_features(df: DataFrame, fake: bool = False) -> DataFrame:
                 b = bytes(p)
                 n_bytes[i] = len(b)
                 try:
-                    if fake:
-                        width[i], height[i], feats[i] = _fake_decode(b, mimes[i])
-                    else:
-                        arr = decode_ppm(b)
-                        height[i], width[i] = arr.shape[0], arr.shape[1]
-                        feats[i] = _pixel_features(arr)
-                        for c in range(3):
-                            sums[c][i] = int(arr[:, :, c].sum(dtype=np.int64))
+                    arr = decode_ppm(b)
+                    height[i], width[i] = arr.shape[0], arr.shape[1]
+                    feats[i] = _pixel_features(arr)
+                    for c in range(3):
+                        sums[c][i] = int(arr[:, :, c].sum(dtype=np.int64))
                 except ValueError as e:
                     errs[i] = str(e)
             yield pd.DataFrame(
@@ -238,18 +221,15 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_media(
-    df: DataFrame, dst_w: int = 64, dst_h: int = 64, fake: bool = False
-) -> DataFrame:
+def resize_media(df: DataFrame, dst_w: int = 64, dst_h: int = 64) -> DataFrame:
     """payload -> downscaled payload at (dst_w, dst_h), Arrow-batched.
 
-    Real path (default): PPM in, nearest-neighbor index gather
+    PPM in, nearest-neighbor index gather
     ``out[y, x] = src[y*src_h//dst_h, x*src_w//dst_w]`` (pure numpy
     fancy indexing — the standard INTER_NEAREST mapping), PPM out.
     ``pixel_sum`` (exact int sum of the output pixel bytes) +
     ``n_bytes_out`` make the stage end-to-end SQL-checkable; output
-    bytes themselves are pytest-pinned. fake=True keeps the stride
-    stub (every k-th byte) for arbitrary payloads."""
+    bytes themselves are pytest-pinned."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -259,12 +239,6 @@ def resize_media(
                     rows.append((mid, None, None, dst_w, dst_h, None, None, None, None, "null payload"))
                     continue
                 b = bytes(p)
-                if fake:
-                    w, h, _ = _fake_decode(b, "")
-                    k = max(1, (w * h) // (dst_w * dst_h))
-                    out = b[::k]  # len == ceil(len(b) / k), matching the oracle
-                    rows.append((mid, w, h, dst_w, dst_h, len(b), len(out), None, out, None))
-                    continue
                 try:
                     src = decode_ppm(b)
                 except ValueError as e:
@@ -363,17 +337,6 @@ def extract_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
 
 
 # ---------------------------------------------------------- adapters
-
-def docs_as_media(docs: DataFrame) -> DataFrame:
-    """Adapter: treat documents.text as an opaque payload (legacy stub
-    plumbing; pairs with fake=True)."""
-    return docs.select(
-        F.concat(F.lit("doc-"), F.col("doc_id").cast("string")).alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.create_map(F.lit("source"), F.col("source")).alias("meta"),
-    )
-
 
 def docs_as_ppm(docs: DataFrame) -> DataFrame:
     """Deterministic REAL image corpus: one PPM per doc, derived from

@@ -193,7 +193,10 @@ def seek_from_offsets(spark, sf_dir):
 
 # ------------------------------------------------------ §2.8 interval join
 
-def interval_join(spark, sf_dir):
+def _click_purchase_join(spark, sf_dir, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases in the 30 minutes after
+    the click — the one equi-key + range condition of the three
+    interval-join rows, which differ only in ``how``."""
     ev = load(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), F.col("user_id"), F.col("ts").alias("click_ts")
@@ -206,7 +209,11 @@ def interval_join(spark, sf_dir):
         & (buys["p_ts"] >= clicks["click_ts"])
         & (buys["p_ts"] <= clicks["click_ts"] + F.expr("interval 30 minutes"))
     )
-    return clicks.join(buys, cond, "inner").select("click_id", "purchase_id", "user_id")
+    return clicks.join(buys, cond, how)
+
+
+def interval_join(spark, sf_dir):
+    return _click_purchase_join(spark, sf_dir, "inner").select("click_id", "purchase_id", "user_id")
 
 
 def interval_join_outer(spark, sf_dir):
@@ -221,28 +228,11 @@ def interval_join_outer(spark, sf_dir):
     with no purchase by the same user within 30 minutes carry NULL
     purchase_id. Same equi-key + range shape as the inner row — state
     pruning semantics identical, only NULL-extension differs."""
-    ev = load(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"), F.col("user_id"), F.col("ts").alias("click_ts")
-    )
-    buys = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    cond = (
-        (clicks["user_id"] == buys["p_user"])
-        & (buys["p_ts"] >= clicks["click_ts"])
-        & (buys["p_ts"] <= clicks["click_ts"] + F.expr("interval 30 minutes"))
-    )
-    return (
-        clicks.join(buys, cond, "left_outer")
-        .select(
-            "click_id",
-            "purchase_id",
-            "user_id",
-            F.col("purchase_id").isNotNull().alias("matched"),
-        )
+    return _click_purchase_join(spark, sf_dir, "left_outer").select(
+        "click_id",
+        "purchase_id",
+        "user_id",
+        F.col("purchase_id").isNotNull().alias("matched"),
     )
 
 
@@ -258,23 +248,7 @@ def interval_join_full(spark, sf_dir):
     AND purchases preceded by no click carry NULL click_id. Same
     equi-key + range condition and state-pruning shape as the
     inner/left rows."""
-    ev = load(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    buys = ev.where(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    cond = (
-        (clicks["user_id"] == buys["p_user"])
-        & (buys["p_ts"] >= clicks["click_ts"])
-        & (buys["p_ts"] <= clicks["click_ts"] + F.expr("interval 30 minutes"))
-    )
-    return clicks.join(buys, cond, "full_outer").select(
+    return _click_purchase_join(spark, sf_dir, "full_outer").select(
         "click_id",
         "purchase_id",
         F.coalesce("user_id", "p_user").alias("user_id"),

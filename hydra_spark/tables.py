@@ -25,7 +25,8 @@ added, files removed, batch id), data files first, the CURRENT swap
 last; the two predicate DML operations share one rewrite,
 ``_rewrite_where``. ``current_version``, ``manifest_at`` and
 ``changed_buckets`` read the snapshot chain for ``TransactionalTable``
-and for the Spark-free change-data-feed source (``sources/cdf_stream``).
+and for the change-data-feed source (``sources/cdf_stream``), whose one
+per-bucket Arrow diff serves both ``read_changes`` and the change stream.
 
 On a real cluster, swap TransactionalTable for
 ``spark.sql("MERGE INTO ...")`` against an Iceberg catalog — the sink
@@ -1145,65 +1146,32 @@ class TransactionalTable:
         self, spark: SparkSession, from_version: int, to_version: int | None = None
     ) -> DataFrame:
         """Incremental scan between two snapshots — the Delta CDF /
-        Iceberg incremental-read analog. Returns the latest-schema
-        columns plus ``_change_type`` ('insert' | 'update' | 'delete');
-        unchanged keys produce no row. Delete rows carry the OLD values
+        Iceberg incremental-read analog. Returns the feed columns of the
+        ``to_version`` snapshot (``cdf_stream.feed_schema``) plus
+        ``_change_type`` ('insert' | 'update' | 'delete'); unchanged
+        keys produce no row. Delete rows carry the OLD values
         (pre-image), insert/update rows the new ones.
 
-        Scale posture: the diff is BUCKET-PRUNED from the manifests
-        alone — a bucket whose file list is identical in both snapshots
-        cannot contain a change and is never read, so an incremental
-        consumer of a 10^12-row table pays for the touched buckets, not
-        a full-table join. Within touched buckets the diff is one
-        full-outer join on the key with a null-safe struct compare."""
-        m_from = self.manifest_at(from_version)
+        This is the batch read of the ``hydra_cdf`` source, so it is
+        the same per-bucket Arrow diff the change stream runs: BUCKET-
+        PRUNED from the manifests alone (a bucket whose file list is
+        identical in both snapshots cannot contain a change and is never
+        read), one input partition per touched bucket, no shuffle. Both
+        manifests and the columns are resolved here, before Spark plans
+        the read, so SnapshotExpiredError and ValueError reach the
+        caller unwrapped."""
+        from hydra_spark.sources.cdf_stream import FORMAT_NAME, CdfDataSource, feed_schema
+
+        self.manifest_at(from_version)
         m_to = self.manifest() if to_version is None else self.manifest_at(to_version)
-        changed = changed_buckets(m_from, m_to)
-        files_a = [p for old, _ in changed for p in old]
-        files_b = [p for _, new in changed for p in new]
-
-        def _side(files, m):
-            return self._read_files(spark, files, m) if files else None
-
-        a = _side(files_a, m_from)
-        b = _side(files_b, m_to)
-        if a is None and b is None:  # nothing changed at all
-            empty = self._empty_like(spark, m_to)
-            return empty.withColumn("_change_type", F.lit(None).cast("string"))
-        if a is None:
-            a = b.limit(0)
-        if b is None:
-            b = a.limit(0)
-        # align the old side onto the new side's schema (evolution between
-        # the snapshots): missing fields read as their declared default —
-        # the same resolution a rewrite would materialize
-        versions = m_to.get("schema_versions", [])
-        if versions:
-            a = _project_to_schema(a, versions[-1]["fields"])
-        else:
-            for c in b.columns:
-                if c not in a.columns:
-                    a = a.withColumn(c, F.lit(None).cast(b.schema[c].dataType))
-            a = a.select(*b.columns)
-        cols = b.columns
-        val_cols = [c for c in cols if c not in self.key_cols]
-        left = a.select(*self.key_cols, F.struct(*val_cols).alias("_old"))
-        right = b.select(*self.key_cols, F.struct(*val_cols).alias("_new"))
-        j = left.join(right, on=self.key_cols, how="full_outer")
-        change = (
-            F.when(F.col("_old").isNull(), F.lit("insert"))
-            .when(F.col("_new").isNull(), F.lit("delete"))
-            .when(~F.col("_old").eqNullSafe(F.col("_new")), F.lit("update"))
-        )
-        picked = F.when(F.col("_new").isNull(), F.col("_old")).otherwise(F.col("_new"))
+        spark.dataSource.register(CdfDataSource)
         return (
-            j.withColumn("_change_type", change)
-            .where(F.col("_change_type").isNotNull())
-            .select(
-                *self.key_cols,
-                *[picked.getField(c).alias(c) for c in val_cols],
-                "_change_type",
-            )
+            spark.read.format(FORMAT_NAME)
+            .schema(feed_schema(self.path, m_to))
+            .option("path", self.path)
+            .option("startingVersion", str(from_version))
+            .option("endingVersion", str(m_to["version"]))
+            .load()
         )
 
     def rollback(self, version: int) -> int:
@@ -1348,8 +1316,8 @@ class TransactionalTable:
         missing = expected - set(changes.columns)
         if missing:
             raise ValueError(f"change feed missing target columns: {sorted(missing)}")
-        # persist: the feed is typically a read_changes plan (two snapshot
-        # scans + full-outer join) and is consumed by BOTH the validation
+        # persist: the feed is typically a read_changes plan (a per-bucket
+        # diff of two snapshots) and is consumed by BOTH the validation
         # action and the merge — never re-run the upstream plan twice
         changes = changes.persist()
         try:

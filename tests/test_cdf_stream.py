@@ -6,7 +6,6 @@ import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from hydra_spark.sources.cdf_stream import stream_changes
 from hydra_spark.tables import TransactionalTable
@@ -37,24 +36,80 @@ def _collect_stream(spark, path, starting_version, out):
     return got
 
 
-def test_stream_matches_batch_read_changes(spark, tmp_path):
-    t = TransactionalTable(str(tmp_path / "t"), ["k"], n_buckets=4)
-    t.merge_upsert(spark, _kv(spark, [("a", 1), ("b", 2), ("c", 3)]), 0)
-    v1 = t.manifest()["version"]
-    t.merge_upsert(spark, _kv(spark, [("b", 20), ("d", 4)]), 1)
-    t.merge_upsert(
-        spark,
-        _kv(spark, [("c", 3)]).withColumn("_delete", F.lit(True)),
-        2,
+BIG = 2**60  # int64 values a float64 cannot hold exactly
+NAN = float("nan")
+
+# (writes, columns, change rows): each write is (method, ddl, rows) on a
+# one-bucket table; the feed is read from the version after the first
+# write
+FEED_CASES = {
+    "bigint_with_null": (
+        [
+            ("merge_upsert", "k string, v bigint", [("a", BIG + 1), ("b", None)]),
+            ("merge_upsert", "k string, v bigint", [("a", BIG + 3), ("c", BIG + 5)]),
+        ],
+        ["k", "v", "_change_type"],
+        {("a", BIG + 3, "update"), ("c", BIG + 5, "insert")},
+    ),
+    "nan_to_null": (
+        [
+            ("merge_upsert", "k string, v double", [("a", NAN)]),
+            ("merge_upsert", "k string, v double", [("a", None)]),
+        ],
+        ["k", "v", "_change_type"],
+        {("a", None, "update")},
+    ),
+    "nan_to_nan": (
+        [
+            ("merge_upsert", "k string, v double", [("a", NAN)]),
+            ("merge_upsert", "k string, v double", [("a", NAN)]),
+        ],
+        ["k", "v", "_change_type"],
+        set(),
+    ),
+    "schemaless_added_column": (
+        [
+            ("append_dedup", "k string, v bigint", [("a", 1)]),
+            ("append_dedup", "k string, v bigint, w double", [("b", 2, 3.0)]),
+        ],
+        ["k", "v", "w", "_change_type"],
+        {("b", 2, 3.0, "insert")},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(FEED_CASES))
+def test_change_feed_exact_rows(spark, tmp_path, case):
+    """The batch read and the stream give the same exact rows and
+    columns: int64 stays exact next to a NULL, NULL equals only NULL
+    while NaN equals NaN, and a schema-less table's feed carries the
+    union of its files' columns."""
+    writes, cols, want = FEED_CASES[case]
+    t = TransactionalTable(str(tmp_path / "t"), ["k"], n_buckets=1)
+    for i, (method, ddl, rows) in enumerate(writes):
+        getattr(t, method)(spark, spark.createDataFrame(rows, ddl), i)
+        if i == 0:
+            v1 = t.manifest()["version"]
+    batch = t.read_changes(spark, v1)
+    assert batch.columns == cols
+    assert set(map(tuple, batch.collect())) == want
+
+    seen_cols, got = [], []
+
+    def sink(batch_df, batch_id):
+        seen_cols.append(batch_df.columns)
+        got.extend(map(tuple, batch_df.collect()))
+
+    q = (
+        stream_changes(spark, t.path, starting_version=v1)
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .start()
     )
-    got = _collect_stream(spark, str(tmp_path / "t"), v1, str(tmp_path / "cp"))
-    want = {
-        (r.k, r.v, r._change_type)
-        for r in t.read_changes(spark, v1).collect()
-    }
+    q.processAllAvailable()
+    q.stop()
+    assert seen_cols and all(c == cols for c in seen_cols)
     assert set(got) == want
-    assert ("b", 20, "update") in want and ("d", 4, "insert") in want
-    assert ("c", 3, "delete") in want  # pre-image on delete
 
 
 def test_stream_resumes_from_checkpoint_cursor(spark, tmp_path):
@@ -87,6 +142,17 @@ def test_metadata_only_commit_yields_empty_batch(spark, tmp_path):
     t.set_properties({"owner": "me"})  # version bump, zero file changes
     got = _collect_stream(spark, str(tmp_path / "t"), v1, str(tmp_path / "cp"))
     assert got == []
+
+
+def test_stream_across_rebucket_is_empty(spark, tmp_path):
+    """A rebucket moves keys between buckets without changing a row: the
+    changed buckets diff as one partition, so no key reads as a delete
+    in its old bucket plus an insert in its new one."""
+    t = TransactionalTable(str(tmp_path / "t"), ["k"], n_buckets=2)
+    t.merge_upsert(spark, _kv(spark, [(f"k{i}", i) for i in range(20)]), 0)
+    v1 = t.manifest()["version"]
+    t.rebucket(spark, 8)
+    assert _collect_stream(spark, t.path, v1, str(tmp_path / "cp")) == []
 
 
 def test_bucket_pruned_partitions(spark, tmp_path):
@@ -142,6 +208,34 @@ def test_array_typed_value_columns(spark, tmp_path):
         ("a", (1.0, 9.0), "update"),
         ("d", None, "insert"),
     }
+
+
+def test_diff_compares_nested_values_null_safely():
+    """The Arrow diff's equality inside lists and structs: NaN equals
+    NaN, NULL equals only NULL, -0.0 equals 0.0, lengths must match."""
+    import pyarrow as pa
+
+    from hydra_spark.sources.cdf_stream import diff
+
+    vt = pa.struct([("x", pa.int64()), ("y", pa.list_(pa.float64()))])
+    old = [[NAN], [1.0, None], None, [], [1.0], [0.0], None]
+    new = [[NAN], [1.0, None], None, [], [1.0, 2.0], [-0.0], []]
+    keys = [f"k{i}" for i in range(len(old))]
+
+    def table(lists, s):
+        return pa.table(
+            {"k": keys, "v": pa.array(lists, pa.list_(pa.float64())), "s": pa.array(s, vt)}
+        )
+
+    same_s = [{"x": 1, "y": [NAN]}] * len(keys)
+    got = diff(table(old, same_s), table(new, same_s), ["k"])
+    assert sorted(zip(got["k"].to_pylist(), got["_change_type"].to_pylist())) == [
+        ("k4", "update"), ("k6", "update"),
+    ]
+    s_old = [{"x": None, "y": None}, None, {"x": 2, "y": [1.0]}] + same_s[3:]
+    s_new = [{"x": None, "y": None}, {"x": None, "y": None}, {"x": 2, "y": [2.0]}] + same_s[3:]
+    got = diff(table(old, s_old), table(old, s_new), ["k"])
+    assert sorted(got["k"].to_pylist()) == ["k1", "k2"]
 
 
 def test_expired_cursor_raises(spark, tmp_path):

@@ -96,22 +96,6 @@ def test_bpe_token_counts_matches_python_regex(spark, docs):
     assert n == sum(len(pat.findall(s)) for s in tricky)
 
 
-def test_resize_media_byte_plumbing(spark, docs):
-    """fake=True legacy stub: payload_out really is the strided byte
-    subsample the projection advertises."""
-    from hydra_spark.ops.multimodal import _fake_decode, docs_as_media, resize_media
-
-    media = docs_as_media(docs.limit(20))
-    src = {r.media_id: bytes(r.payload) for r in media.collect()}
-    for r in resize_media(media, 64, 64, fake=True).collect():
-        b = src[r.media_id]
-        w, h, _ = _fake_decode(b, "")
-        k = max(1, (w * h) // 4096)
-        assert (r.src_w, r.src_h, r.dst_w, r.dst_h) == (w, h, 64, 64)
-        assert bytes(r.payload_out) == b[::k]
-        assert r.n_bytes_out == len(b[::k]) and r.n_bytes == len(b)
-
-
 def test_resize_media_real_pixels(spark, docs):
     """Real path: output PPM bytes equal an independent per-pixel
     nearest-neighbor loop over the decoded source (the oracle checks
@@ -254,22 +238,6 @@ def test_dedup_exact_groups(spark, docs):
     assert out.where(F.col("n_copies") == 2).count() == 10
 
 
-def test_multimodal_plumbing(spark, docs):
-    """fake=True legacy stub path over arbitrary payloads."""
-    from hydra_spark.ops.multimodal import docs_as_media, extract_features, frame_sample_plan
-
-    media = docs_as_media(docs.limit(100))
-    feats = extract_features(media, fake=True).toPandas()
-    assert len(feats) == 100
-    assert feats.decode_error.isna().all()
-    assert (feats.width >= 64).all() and (feats.features.map(len) == 16).all()
-    # deterministic: same payload -> same features
-    feats2 = extract_features(media, fake=True).toPandas()
-    assert (feats.sort_values("media_id").width.values == feats2.sort_values("media_id").width.values).all()
-    frames = frame_sample_plan(media.limit(5))
-    assert frames.count() >= 5
-
-
 def test_multimodal_real_decode(spark, docs):
     """Real path: PPM round-trip, pixel features computed from actual
     decoded pixels, unknown containers quarantined as decode_error rows
@@ -279,12 +247,12 @@ def test_multimodal_real_decode(spark, docs):
     from hydra_spark.ops.multimodal import (
         decode_ppm,
         decode_video,
-        docs_as_media,
         docs_as_ppm,
         docs_as_video,
         encode_ppm,
         extract_features,
         extract_frames,
+        frame_sample_plan,
     )
 
     # codec round-trip, off the cluster
@@ -302,10 +270,17 @@ def test_multimodal_real_decode(spark, docs):
         assert np.allclose(f[:3], arr.astype(np.float64).mean(axis=(0, 1)), atol=1e-3)
         assert r.r_sum == int(arr[:, :, 0].sum(dtype=np.int64))
 
-    # non-PPM payloads under the real path -> decode_error, no exception
-    junk = extract_features(docs_as_media(docs.limit(5))).toPandas()
+    # non-PPM payloads -> decode_error, no exception
+    junk_media = docs.limit(5).select(
+        F.col("doc_id").cast("string").alias("media_id"),
+        F.col("text").cast("binary").alias("payload"),
+        F.lit("application/octet-stream").alias("mime"),
+    )
+    junk = extract_features(junk_media).toPandas()
     assert (junk.decode_error == "unsupported container").all()
     assert junk.width.isna().all()
+    # a non-RV01 payload still samples at least frame 0
+    assert frame_sample_plan(junk_media).count() >= 5
 
     # video: per-frame stats equal a direct slice of the decoded cube
     vids = docs_as_video(docs.limit(10))

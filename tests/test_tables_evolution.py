@@ -303,23 +303,28 @@ def test_read_changes_types_and_preimage(spark, tmp_path):
 
 def test_read_changes_bucket_pruned(spark, tmp_path):
     """Buckets whose manifest file lists are identical in both snapshots
-    must not be READ at all — assert via the scan's input files."""
+    must not be READ at all — assert via the planned input partitions."""
+    from hydra_spark.sources.cdf_stream import CdfBatchReader
+
     t = TransactionalTable(str(tmp_path / "t"), ["k"], n_buckets=8)
     keys = [(f"k{i}", i) for i in range(32)]
     t.merge_upsert(spark, _kv_df(spark, keys), 0)
     v1 = t.manifest()["version"]
     m1 = t.manifest()
     t.merge_upsert(spark, _kv_df(spark, [("k0", 100)]), 1)
+    m2 = t.manifest()
     ch = t.read_changes(spark, v1)
     assert {(r.k, r.v, r._change_type) for r in ch.collect()} == {("k0", 100, "update")}
-    # only k0's bucket may be scanned, from both snapshots
-    import pyspark.sql.functions as F
-
+    # one input partition: k0's bucket, from both snapshots
     bucket = t._bucket_col()
-    b0 = _kv_df(spark, [("k0", 0)]).select(bucket.alias("b")).collect()[0].b
-    allowed = set(m1["files"][str(b0)]) | set(t.manifest()["files"][str(b0)])
-    scanned = {f.replace("file://", "") for f in ch.inputFiles()}
-    assert scanned and scanned <= allowed
+    b0 = str(_kv_df(spark, [("k0", 0)]).select(bucket.alias("b")).collect()[0].b)
+    assert ch.rdd.getNumPartitions() == 1
+    parts = CdfBatchReader(
+        {"path": t.path, "startingVersion": str(v1), "endingVersion": str(m2["version"])}
+    ).partitions()
+    assert [(p.files_old, p.files_new) for p in parts] == [
+        (sorted(m1["files"][b0]), sorted(m2["files"][b0]))
+    ]
 
 
 def test_read_changes_across_schema_evolution(spark, tmp_path):
